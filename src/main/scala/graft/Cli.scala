@@ -174,11 +174,13 @@ object Cli {
     * case ALIGNED TO THIS TARGET's physical column case — the analogue of the
     * reference discovering columns per connection
     * (/root/reference/verify.go:146-198). Tables with no PK drop out (P8).
+    * This is the run's one read of the table: the work carries the frame.
     */
   private def buildWork(spark: SparkSession, target: Target, fullName: String,
                         cfg: CliConfig): Option[VerifyRun.TableWork] = {
     val (schema, table) = VerifyRun.splitName(fullName)
-    val fields = target.read(spark, fullName).schema.fieldNames
+    val df = target.read(spark, fullName)
+    val fields = df.schema.fieldNames
     val catalogPks: Seq[String] = target match {
       case j: JdbcTarget =>
         j.discoverColumns(spark, schema, table).filter(_.isPrimaryKey).map(_.name).sorted
@@ -198,8 +200,31 @@ object Cli {
     if (pks.isEmpty) None
     else Some(VerifyRun.TableWork(schema, table, fullName,
       TableSpec(table, pks, cfg.includeColumns, cfg.excludeColumns,
-        jsonColumns = jsonCols)))
+        jsonColumns = jsonCols), df))
   }
+
+  /** Discovery for every target (S6 fail-fast: all of it precedes any
+    * fingerprint work), then the tables' reads and PK binding
+    * ([[buildWork]]) concurrently — each read resolves a schema, and a
+    * file target's resolution is a Spark job of its own.
+    */
+  private def planTargets(spark: SparkSession, cfg: CliConfig,
+                          targets: Seq[Target]): Seq[(Target, Seq[VerifyRun.TableWork])] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val schemas = SchemaFilter(cfg.includeSchemas, cfg.excludeSchemas)
+    val names = targets.map(t => t -> VerifyRun.discoverTables(spark, t, schemas).filter(tableWanted(cfg, _)))
+    val works = Future.traverse(names) { case (t, ns) =>
+      Future.traverse(ns)(n => Future(buildWork(spark, t, n, cfg))).map(ws => t -> ws.flatten)
+    }
+    Await.result(works, scala.concurrent.duration.Duration.Inf)
+  }
+
+  /** A `pg:` target stages each table it reads on local disk; the run that
+    * read them deletes the staging once it has finished with the frames.
+    */
+  private def dropStaging(targets: Seq[Target]): Unit =
+    targets.foreach { case p: PsqlTarget => p.dropStaging(); case _ => }
 
   /** Full CLI run: discover PER TARGET (tables, PKs, column casing — each
     * target binds its own catalog), fan out, render the ASCII report, and
@@ -211,21 +236,21 @@ object Cli {
   def run(spark: SparkSession, cfg: CliConfig, out: Writer): Int = {
     if (cfg.merkleSnapshots.nonEmpty) return runIncremental(spark, cfg, out)
     val targets = buildTargets(cfg)
-    val schemas = SchemaFilter(cfg.includeSchemas, cfg.excludeSchemas)
     val vcfg = cfg.verifyConfig
-    // all discovery happens before any fingerprint work (S6 fail-fast)
-    val plans = targets.map { t =>
-      t -> VerifyRun.discoverTables(spark, t, schemas)
-        .filter(tableWanted(cfg, _))
-        .flatMap(buildWork(spark, t, _, cfg))
-    }
-    val results = VerifyRun.runPerTarget(spark, plans, vcfg)
-    VerifyRun.renderAsciiTable(VerifyRun.pivotReport(results, vcfg.modes), vcfg.modes, out)
-    val bad = VerifyRun.inconsistencies(results, targets.size)
-    if (cfg.drillDown) drillDown(spark, cfg, plans, results, bad, out)
-    if (cfg.profile) profileTables(spark, cfg, plans, bad, out)
-    if (bad.isEmpty) 0 else 1
+    try {
+      val plans = planTargets(spark, cfg, targets)
+      val results = VerifyRun.runPerTarget(spark, plans, vcfg)
+      VerifyRun.renderAsciiTable(VerifyRun.pivotReport(results, vcfg.modes), vcfg.modes, out)
+      val bad = VerifyRun.inconsistencies(results, targets.size)
+      if (cfg.drillDown) drillDown(spark, cfg, plans, results, bad, out)
+      if (cfg.profile) profileTables(spark, cfg, plans, bad, out)
+      if (bad.isEmpty) 0 else 1
+    } finally dropStaging(targets)
   }
+
+  /** Inconsistent (schema, table) keys, lowercased by A3. */
+  private def badTables(bad: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+    bad.select("schema", "table").collect().map(r => (r.getString(0), r.getString(1))).toSet
 
   /** `--drill-down`: for each inconsistent table, report which rows differ
     * ([[RowDiff.diff]]) and which columns within the rows present on both
@@ -238,14 +263,14 @@ object Cli {
     * lexicographically smallest target name so the choice is deterministic —
     * and each dissenting target diffs against it: the way a fleet mismatch
     * is actually triaged (find the odd ones out relative to the quorum), and
-    * N-1 diffs instead of the N² of all-pairs.
+    * N-1 diffs instead of the N² of all-pairs. Each diff reuses the frames
+    * the fingerprint run read, and the tables' diffs run concurrently.
     */
   private def drillDown(spark: SparkSession, cfg: CliConfig,
                         plans: Seq[(Target, Seq[VerifyRun.TableWork])],
                         results: org.apache.spark.sql.DataFrame,
                         bad: org.apache.spark.sql.DataFrame, out: Writer): Unit = {
-    val badTables = bad.select("schema", "table").distinct().collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet // lowercased by A3
+    val badTables = this.badTables(bad)
     if (badTables.isEmpty) return
     if (plans.length < 2) {
       out.write(s"drill-down: skipped (${plans.length} targets; needs at least 2)\n")
@@ -259,10 +284,9 @@ object Cli {
     // cannot be built (e.g. PK column absent on one side) notes the reason
     // instead of aborting the run after the report already printed
     def diffPair(ta: Target, wa: VerifyRun.TableWork, tb: Target,
-                 wb: VerifyRun.TableWork, labels: String): Unit =
+                 wb: VerifyRun.TableWork, labels: String)(out: Writer): Unit =
       scala.util.Try {
-        val a = ta.read(spark, wa.readName)
-        val b = tb.read(spark, wb.readName)
+        val (a, b) = (wa.df, wb.df)
         val rows = RowDiff.diff(a, b, wa.spec, cfg.verifyConfig).limit(20)
         out.write(s"\ndrill-down rows: ${wa.schema}.${wa.table} ($labels, first 20)\n")
         VerifyRun.renderTable(rows, rows.columns.toSeq, out)
@@ -273,13 +297,14 @@ object Cli {
         out.write(s"\ndrill-down: ${wa.schema}.${wa.table} failed: ${e.getMessage}\n")
       }
 
-    if (plans.length == 2) {
+    // one section per inconsistent table, in table order
+    val sections: Seq[Writer => Unit] = if (plans.length == 2) {
       val Seq((ta, worksA), planB @ (tb, _)) = plans
       for {
         wa <- worksA.sortBy(_.table)
         if badTables.contains((wa.schema.toLowerCase, wa.table.toLowerCase))
         wb <- workOf(planB, wa.schema, wa.table)
-      } diffPair(ta, wa, tb, wb, s"a=${ta.name}, b=${tb.name}")
+      } yield diffPair(ta, wa, tb, wb, s"a=${ta.name}, b=${tb.name}") _
     } else {
       // per (table, target) mode-output vector, driver-side: the report is
       // rows × modes × targets — always tiny (A5's own collect shape)
@@ -294,7 +319,7 @@ object Cli {
         }
       val byName = plans.map(p => p._1.name -> p).toMap
       for (key @ (schema, table) <- badTables.toSeq.sorted;
-           perTarget <- vectors.get(key).toSeq) {
+           perTarget <- vectors.get(key).toSeq) yield { (out: Writer) =>
         val quorum = perTarget.groupBy(_._2).values
           .maxBy(g => (g.size, g.keys.min))(
             Ordering.Tuple2(Ordering.Int, Ordering.String.reverse))
@@ -308,9 +333,16 @@ object Cli {
           d <- dissenters
           (dt, dPlan) <- byName.get(d).map(p => (p._1, p)).toSeq
           dw <- workOf(dPlan, schema, table)
-        } diffPair(refTarget, refWork, dt, dw, s"ref=${refTarget.name}, dissenter=${dt.name}")
+        } diffPair(refTarget, refWork, dt, dw, s"ref=${refTarget.name}, dissenter=${dt.name}")(out)
       }
     }
+    // the sections' diffs run concurrently, each rendering into its own
+    // buffer; the buffers print in order
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    sections.map { section =>
+      Future { val buf = new java.io.StringWriter; section(buf); buf.toString }
+    }.foreach(f => out.write(Await.result(f, scala.concurrent.duration.Duration.Inf)))
     out.flush()
   }
 
@@ -326,15 +358,14 @@ object Cli {
   private def profileTables(spark: SparkSession, cfg: CliConfig,
                             plans: Seq[(Target, Seq[VerifyRun.TableWork])],
                             bad: org.apache.spark.sql.DataFrame, out: Writer): Unit = {
-    val badTables = bad.select("schema", "table").distinct().collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
+    val badTables = this.badTables(bad)
     if (badTables.isEmpty) return
     for {
       (target, works) <- plans
       w <- works.sortBy(_.table)
       if badTables.contains((w.schema.toLowerCase, w.table.toLowerCase))
     } scala.util.Try {
-      val df = target.read(spark, w.readName)
+      val df = w.df
       val cols = df.schema.fieldNames.filter(w.spec.validColumn).toSeq
       val prof = graft.core.Profile.profile(df, df.schema, cols,
         cfg.verifyConfig.tsPrecision).orderBy("col_name")
@@ -363,7 +394,6 @@ object Cli {
     require(targets.map(_.name).distinct.length == targets.length,
       s"targets must have distinct names for --merkle-snapshots " +
         s"(got ${targets.map(_.name).mkString(", ")}); disambiguate with --aliases")
-    val schemas = SchemaFilter(cfg.includeSchemas, cfg.excludeSchemas)
     val vcfg = cfg.verifyConfig
     // snapshots may live on any Hadoop-visible filesystem (hdfs://, s3a://)
     // — java.io.File would report them absent and re-baseline forever
@@ -374,37 +404,35 @@ object Cli {
     // discovery precedes all fingerprint work (S6 fail-fast), then the
     // shared per-target fan-out with per-table (err) containment — a failed
     // table reports instead of aborting siblings mid-snapshot-refresh
-    val plans = targets.map { t =>
-      t -> VerifyRun.discoverTables(spark, t, schemas)
-        .filter(tableWanted(cfg, _))
-        .flatMap(buildWork(spark, t, _, cfg))
-    }
-    val rows = VerifyRun.fanOutPerTarget(plans) { (t, w) =>
-      val snapDir = s"${cfg.merkleSnapshots}/${t.name}/${w.schema}.${w.table}"
-      val curr = Fingerprints.merkleBucketDigests(
-        t.read(spark, w.readName), w.spec, vcfg, cfg.merkleBuckets).persist()
-      val (status, changed) =
-        if (!snapshotExists(snapDir)) ("baselined", 0L)
-        else {
-          val n = Fingerprints.merkleChangedBuckets(
-            Fingerprints.readMerkleSnapshot(spark, snapDir,
-              expectBuckets = Some(cfg.merkleBuckets)), curr).count()
-          (if (n == 0L) "verified" else "drifted", n)
-        }
-      // the diff count above is eager, so refreshing the snapshot the
-      // diff just read from is safe; a table that failed above never
-      // reaches this write, so its baseline cannot advance past
-      // unreported drift
-      Fingerprints.writeMerkleSnapshotVector(curr, cfg.merkleBuckets, snapDir)
-      curr.unpersist(blocking = false)
-      (t.name, w.schema, w.table, changed, status)
-    } { (t, w) => (t.name, w.schema, w.table, 0L, Fingerprints.Err) }
-    import spark.implicits._
-    val report = rows.toDF("target", "schema", "table", "buckets_changed", "status")
-      .orderBy("schema", "table", "target")
-    VerifyRun.renderTable(report,
-      Seq("schema", "table", "buckets_changed", "status", "target"), out)
-    if (rows.forall(r => r._5 == "baselined" || r._5 == "verified")) 0 else 1
+    try {
+      val plans = planTargets(spark, cfg, targets)
+      val rows = VerifyRun.fanOutPerTarget(plans) { (t, w) =>
+        val snapDir = s"${cfg.merkleSnapshots}/${t.name}/${w.schema}.${w.table}"
+        val curr = Fingerprints.merkleBucketDigests(
+          w.df, w.spec, vcfg, cfg.merkleBuckets).persist()
+        val (status, changed) =
+          if (!snapshotExists(snapDir)) ("baselined", 0L)
+          else {
+            val n = Fingerprints.merkleChangedBuckets(
+              Fingerprints.readMerkleSnapshot(spark, snapDir,
+                expectBuckets = Some(cfg.merkleBuckets)), curr).count()
+            (if (n == 0L) "verified" else "drifted", n)
+          }
+        // the diff count above is eager, so refreshing the snapshot the
+        // diff just read from is safe; a table that failed above never
+        // reaches this write, so its baseline cannot advance past
+        // unreported drift
+        Fingerprints.writeMerkleSnapshotVector(curr, cfg.merkleBuckets, snapDir)
+        curr.unpersist(blocking = false)
+        (t.name, w.schema, w.table, changed, status)
+      } { (t, w) => (t.name, w.schema, w.table, 0L, Fingerprints.Err) }
+      import spark.implicits._
+      val report = rows.toDF("target", "schema", "table", "buckets_changed", "status")
+        .orderBy("schema", "table", "target")
+      VerifyRun.renderTable(report,
+        Seq("schema", "table", "buckets_changed", "status", "target"), out)
+      if (rows.forall(r => r._5 == "baselined" || r._5 == "verified")) 0 else 1
+    } finally dropStaging(targets)
   }
 }
 

@@ -24,5 +24,15 @@ object QueryRegistry {
     queries.PrivacyQueries.entries
   )
 
-  lazy val all: Map[String, QueryEntry] = modules.reduce(_ ++ _)
+  lazy val all: Map[String, QueryEntry] = merge(modules)
+
+  /** One map of every module's queries. A name registered twice fails,
+    * naming it, instead of one entry silently replacing the other.
+    */
+  private[graft] def merge(modules: Seq[Map[String, QueryEntry]]): Map[String, QueryEntry] = {
+    val names = modules.flatMap(_.keys)
+    val dups = names.diff(names.distinct).distinct.sorted
+    require(dups.isEmpty, s"query names registered more than once: ${dups.mkString(", ")}")
+    modules.reduce(_ ++ _)
+  }
 }

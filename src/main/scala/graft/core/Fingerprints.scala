@@ -1,8 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.util.Try
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, StringType, StructType}
+import org.apache.spark.sql.types._
 
 import graft.canon.Canon
 import graft.core.Readers
@@ -222,6 +224,13 @@ object Fingerprints {
       .select(col("h")).collect().map(_.getString(0))
     val end = kh.orderBy(col("k").desc, col("h").desc).limit(cfg.bookendLimit)
       .select(col("h")).collect().map(_.getString(0))
+    bookendCombine(start, end)
+  }
+
+  /** The reference's bookend combine over the first rows in (k, h) order and
+    * the last rows in (k, h) DESCENDING order.
+    */
+  private def bookendCombine(start: Iterable[String], end: Iterable[String]): String = {
     val startHash = if (start.isEmpty) "" else Digests.md5OfConcat(start.iterator)
     val endHash = if (end.isEmpty) "" else Digests.md5OfConcat(end.iterator)
     Digests.md5OfConcat(Iterator("(", startHash, ")(", endHash, ")"))
@@ -278,9 +287,10 @@ object Fingerprints {
   }
 
   /** The stats fingerprint as a single aggregate Column over `schema`'s
-    * compared columns — the batch mode above and the streaming continuous
-    * variant ([[graft.streaming.EventStreams.runningStats]]) share it, so the
-    * two can never drift. Every piece (count, min, max) is a commutative
+    * compared columns — the batch mode above, the aggregate [[runModes]]
+    * observes on its projection pass, and the streaming continuous variant
+    * ([[graft.streaming.EventStreams.runningStats]]) share it, so they can
+    * never drift. Every piece (count, min, max) is a commutative
     * monotone aggregate under APPEND-ONLY input, which is what makes the
     * streaming twin exact: the running digest equals the batch digest of
     * everything ingested so far. Deletes/updates break min/max monotonicity —
@@ -418,59 +428,93 @@ object Fingerprints {
     case other => throw new IllegalArgumentException(s"unknown test mode $other")
   }
 
-  /** All requested modes over one table with the canonicalize+hash projection
-    * computed ONCE: the (k, h, sparse-key) frame persists across modes
-    * instead of re-canonicalizing per mode (a multi-mode run is the common
-    * case — /root/reference/verify.go:205-232 loops modes per table the same
-    * way but pays the scan each time server-side). Per-mode failures degrade
-    * to the `(err)` sentinel like the reference (X3).
+  /** All requested modes over one table, each piece of work done once — the
+    * reference runs one server-side query per mode
+    * (verify.go:205-232); here one table costs one read, one
+    * projection and, in the common case, one sorted pass:
+    *
+    *  - the canonicalize+hash projection `(k, h)` — plus the sparse key `sk`
+    *    and the PK columns when sparse is requested — is built once,
+    *    persisted and counted. That count `n` IS rowcount mode, and stats
+    *    is an aggregate observed on the rows the same job materializes.
+    *    Only when the projection cannot be built (e.g. a PK column is
+    *    missing, which sends every hash mode to `(err)`) do rowcount and
+    *    stats scan `df` themselves.
+    *  - When full is requested and exact (`n ≤ fullModeRowLimit`), ONE
+    *    (k, h)-sorted stream comes to the driver — collect() up to
+    *    `streamingCollectRowLimit` rows, toLocalIterator past it — and full,
+    *    bookend and sparse are all folded from it ([[sortedPass]]). A failed
+    *    pass reports `(err)` for every mode it serves.
+    *  - Otherwise (full not requested, or degraded to Merkle) each hash mode
+    *    runs its own plan over the persisted projection, as does
+    *    composite-PK sparse when the pass streams.
+    *
+    * Per-mode failures degrade to the `(err)` sentinel like the reference (X3).
     */
   def runModes(modes: Seq[String], df: DataFrame, spec: TableSpec, cfg: VerifyConfig): Map[String, String] = {
-    import scala.util.Try
     val needsHash = modes.exists(m => m != TestModes.RowCount && m != TestModes.Stats)
-    // (k, h, sparse-key) computed once and persisted across modes; building
-    // the plan throws for tables whose PK columns are missing — each hash
-    // mode then degrades to the (err) sentinel below
-    // pk columns ride along (aliased positionally so they can't collide with
-    // k/h/sk) for the composite-PK sparse semantics, which semi-join per column
-    val khOpt: Option[(DataFrame, Long)] = if (!needsHash) None else Try {
+    val sparse = modes.contains(TestModes.Sparse)
+    val composite = spec.pks.lengthCompare(1) > 0
+    val khOpt: Option[(DataFrame, Long, Option[String])] = if (!needsHash) None else Try {
       // same pre-projection spread as [[hashedRows]] (r13): the one-off
       // canonicalize+hash pass must not pipeline into a single scan task
       // when the input is unsplittable (missing PK columns still throw
       // inside this Try — the per-mode (err) degrade is unchanged)
-      val src = if (spec.pks.nonEmpty) Readers.spreadBySize(df, col(spec.pks.head)) else df
+      val spread = if (spec.pks.nonEmpty) Readers.spreadBySize(df, col(spec.pks.head)) else df
+      val src =
+        if (!modes.contains(TestModes.Stats)) spread
+        else spread.observe("stats", statsDigestCol(df.schema, spec, cfg).as("fp"))
+      // pk columns ride along (aliased positionally so they can't collide
+      // with k/h/sk) for the composite-PK sparse per-column semantics
+      val sparseCols =
+        if (!sparse) Nil
+        else GraftFunctions.md5Signed64(
+          Canon.pkSortKey(df.schema, spec.pks, hashPrimaryKeys = false, cfg.tsPrecision)).as("sk") +:
+          (if (composite) spec.pks.zipWithIndex.map { case (p, i) => col(p).as(s"__pk$i") } else Nil)
       val kh = src.select(
         Canon.pkSortKey(df.schema, spec.pks, cfg.hashPrimaryKeys, cfg.tsPrecision).as("k") +:
           Canon.rowHash(df.schema, hashableColumns(df, spec), cfg.tsPrecision, spec.jsonColumns).as("h") +:
-          GraftFunctions.md5Signed64(
-            Canon.pkSortKey(df.schema, spec.pks, hashPrimaryKeys = false, cfg.tsPrecision)).as("sk") +:
-          spec.pks.zipWithIndex.map { case (p, i) => col(p).as(s"__pk$i") }: _*)
+          sparseCols: _*)
         .persist()
-      val n = kh.count() // materialize once so every mode reads the cache
-      (kh, n)
+      // materialize once so every mode reads the cache; this job builds the
+      // cache, so the stats aggregate observed inside it is final here
+      val counted = kh.groupBy().count()
+      val n = counted.collect().head.getLong(0)
+      (kh, n, counted.queryExecution.observedMetrics.get("stats").map(_.getString(0)))
     }.toOption
+    val fromPass: Map[String, String] = khOpt match {
+      case Some((kh, n, _)) if modes.contains(TestModes.Full) && n <= cfg.fullModeRowLimit =>
+        val streaming = n > cfg.streamingCollectRowLimit
+        // composite-PK sparse needs the whole sampled set before it can
+        // select a row, so only a collected pass serves it, and only over
+        // PK types whose join equality the driver reproduces
+        val servesSparse = sparse && (!composite || (!streaming &&
+          spec.pks.indices.forall(i => driverJoinable(kh.schema(s"__pk$i").dataType))))
+        val served = Set(TestModes.Full) ++
+          Some(TestModes.Bookend).filter(modes.contains) ++
+          Some(TestModes.Sparse).filter(_ => servesSparse)
+        Try(sortedPass(kh, n, served, composite, cfg))
+          .getOrElse(served.iterator.map(_ -> Err).toMap)
+      case _ => Map.empty
+    }
     val out = modes.map { mode =>
-      mode -> Try {
+      mode -> fromPass.getOrElse(mode, Try {
         mode match {
-          case TestModes.RowCount => rowCountDigest(df)
-          // aggregates over df directly (not the kh projection): stats has no
-          // per-row hash and no PK need, so it stays computable for tables
-          // every hash mode (err)s on
-          case TestModes.Stats => statsDigest(df, spec, cfg)
-          case TestModes.Full =>
-            val (kh, n) = khOpt.get
-            // scale guard: past the row limit the exact digest's driver-side
-            // collect is the 100TB killer — degrade to the Merkle digest
-            // (same sensitivity, parallel combine, different literal value)
-            if (n > cfg.fullModeRowLimit) degradeToMerkle(kh, cfg)
-            else digestOrdered(kh.select(col("k"), col("h")), Some(n),
-              cfg.streamingCollectRowLimit).getOrElse(NoRows)
+          case TestModes.RowCount => khOpt.fold(rowCountDigest(df))(_._2.toString)
+          // stats has no per-row hash and no PK need, so it stays computable
+          // over df for tables every hash mode (err)s on
+          case TestModes.Stats => khOpt.flatMap(_._3).getOrElse(statsDigest(df, spec, cfg))
+          // full reaches here only past fullModeRowLimit (the exact digest
+          // is the pass): the driver-side collect is the 100TB killer, so
+          // degrade to the Merkle digest (same sensitivity, parallel
+          // combine, different literal value)
+          case TestModes.Full => degradeToMerkle(khOpt.get._1, cfg)
           case TestModes.Sparse =>
             // the sampled set is ~1/sparseMod of the table — still collect-
             // hazardous at scale, so both paths count before digesting
             val kh = khOpt.get._1
             val sampled = kh.filter(col("sk") % cfg.sparseMod === 0)
-            if (spec.pks.lengthCompare(1) <= 0)
+            if (!composite)
               // a filter over the persisted kh: the guarding count and the
               // digest are both cached-frame scans
               digestOrdered(sampled.select(col("k"), col("h")), Some(sampled.count()),
@@ -489,9 +533,83 @@ object Fingerprints {
           case TestModes.Bookend => bookendFromKh(khOpt.get._1.select(col("k"), col("h")), cfg)
           case other => throw new IllegalArgumentException(s"unknown test mode $other")
         }
-      }.getOrElse(Err)
+      }.getOrElse(Err))
     }.toMap
     khOpt.foreach(_._1.unpersist(blocking = false))
     out
+  }
+
+  /** The one (k, h)-sorted pass of [[runModes]]: the exact full digest's
+    * sorted hash stream, folded on the driver into every `served` mode at
+    * once — full chains every hash; bookend keeps the first and the last
+    * `bookendLimit` hashes (the descending end side is the ascending tail
+    * reversed: ascending sorts put nulls first and descending ones last, so
+    * the two orders are exact mirrors); sparse chains the sampled rows,
+    * which in global (k, h) order are exactly the order the per-mode sparse
+    * digest sorts them into.
+    *
+    * Composite-PK sparse keeps the semi-join's per-column membership: a row
+    * is selected when each of its PK values equals that column's value on
+    * some sampled row, under Spark's join-key equality ([[joinKey]]).
+    */
+  private def sortedPass(kh: DataFrame, n: Long, served: Set[String], composite: Boolean,
+                         cfg: VerifyConfig): Map[String, String] = {
+    import scala.jdk.CollectionConverters.IteratorHasAsScala
+    val sparse = served(TestModes.Sparse)
+    val nPks = if (sparse && composite) kh.columns.count(_.startsWith("__pk")) else 0
+    val sorted = kh.orderBy(col("k"), col("h")).select(
+      col("h") +: (if (sparse) col("sk") +: (0 until nPks).map(i => col(s"__pk$i")) else Nil): _*)
+    // field 1 is sk; a null key fails the SQL filter `sk % mod = 0`
+    val sampled: Row => Boolean = r => !r.isNullAt(1) && r.getLong(1) % cfg.sparseMod == 0
+    val limit = if (served(TestModes.Bookend)) cfg.bookendLimit max 0 else 0
+    val full, sparseChain = new Digests.Md5Chain
+    val head = scala.collection.mutable.ArrayBuffer.empty[String]
+    val tail = scala.collection.mutable.Queue.empty[String]
+    def fold(rows: Iterator[Row], selected: Row => Boolean): Unit = rows.foreach { r =>
+      val h = r.getString(0)
+      full.add(h)
+      if (limit > 0) {
+        if (head.length < limit) head += h
+        tail.enqueue(h)
+        if (tail.length > limit) tail.dequeue()
+      }
+      if (sparse && selected(r)) sparseChain.add(h)
+    }
+    if (n > cfg.streamingCollectRowLimit) fold(sorted.toLocalIterator().asScala, sampled)
+    else {
+      val rows = sorted.collect()
+      fold(rows.iterator, if (nPks == 0) sampled else {
+        val sets = Array.fill(nPks)(scala.collection.mutable.HashSet.empty[Any])
+        for (r <- rows if sampled(r); i <- 0 until nPks if !r.isNullAt(2 + i))
+          sets(i) += joinKey(r.get(2 + i))
+        r => (0 until nPks).forall(i => !r.isNullAt(2 + i) && sets(i).contains(joinKey(r.get(2 + i))))
+      })
+    }
+    def chained(c: Digests.Md5Chain): String = if (c.isEmpty) NoRows else c.hex
+    Map(TestModes.Full -> chained(full)) ++
+      (if (served(TestModes.Bookend)) Some(TestModes.Bookend -> bookendCombine(head, tail.reverse))
+       else None) ++
+      (if (sparse) Some(TestModes.Sparse -> chained(sparseChain)) else None)
+  }
+
+  /** PK column types whose Spark join-key equality [[joinKey]] reproduces. */
+  private def driverJoinable(dt: DataType): Boolean = dt match {
+    case BooleanType | ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
+         BinaryType | DateType | TimestampType | TimestampNTZType | _: DecimalType => true
+    case s: StringType => s == StringType // binary collation only
+    case _ => false
+  }
+
+  /** A driver-side value whose `==` is Spark's join-key equality on it:
+    * floating zeros are one key and every NaN matches every NaN (Spark
+    * normalizes both in join keys), binary compares by content, decimals
+    * compare by value.
+    */
+  private def joinKey(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
+    case f: Float => java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
+    case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+    case d: java.math.BigDecimal => d.stripTrailingZeros
+    case other => other
   }
 }

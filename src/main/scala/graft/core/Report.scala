@@ -4,8 +4,9 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** One fingerprint cell, long/tidy form — the flattened analogue of the
   * reference's nested `SingleResult` maps (/root/reference/results.go:41-43).
@@ -31,12 +32,16 @@ object VerifyRun {
   }
 
   /** One unit of per-target work: where the result rows are keyed (schema and
-    * table in THIS target's physical catalog case), the name to read it by,
-    * and the PK/column spec bound against this target's own catalog — the
+    * table in THIS target's physical catalog case), the name it was read by,
+    * the PK/column spec bound against this target's own catalog — the
     * analogue of the reference discovering columns per connection
-    * (/root/reference/verify.go:146-198).
+    * (verify.go:146-198) — and the table's frame, resolved
+    * once at discovery. Fingerprinting, drill-down and profiling all reuse
+    * `df`: one verify run reads (and, for a file target, infers the schema
+    * of) each table exactly once.
     */
-  case class TableWork(schema: String, table: String, readName: String, spec: TableSpec)
+  case class TableWork(schema: String, table: String, readName: String, spec: TableSpec,
+                       df: DataFrame)
 
   /** S6 fail-fast discovery: an unreachable or empty target aborts the whole
     * run before any fingerprint work (/root/reference/verify.go:33-61).
@@ -92,7 +97,7 @@ object VerifyRun {
                    implicit ec: ExecutionContext = ExecutionContext.global): DataFrame = {
     val rows = fanOutPerTarget(plans) { (t, w) =>
       // all modes share one canonicalize+hash pass per table
-      val outputs = Fingerprints.runModes(cfg.modes, t.read(spark, w.readName), w.spec, cfg)
+      val outputs = Fingerprints.runModes(cfg.modes, w.df, w.spec, cfg)
       cfg.modes.map(mode => ResultRow(t.name, w.schema, w.table, mode, outputs(mode)))
     } { (t, w) =>
       cfg.modes.map(mode => ResultRow(t.name, w.schema, w.table, mode, Fingerprints.Err))
@@ -121,38 +126,73 @@ object VerifyRun {
         }
         .map { case (tb, bare) =>
           val (schema, table) = splitName(tb)
-          TableWork(schema, table, tb, specsLc(bare))
+          TableWork(schema, table, tb, specsLc(bare), t.read(spark, tb))
         }
     }
     runPerTarget(spark, plans, cfg)
   }
 
+  /** The report functions below (A3-A5) run on the driver: their input is
+    * targets × tables × modes cells — the fan-out already collected them
+    * into a local frame — so each is a few Scala collection operations, not
+    * a Spark plan to optimize, compile and schedule. They still return
+    * DataFrames, built on local data.
+    */
+  private def cells(results: DataFrame): Seq[ResultRow] =
+    results.select("target", "schema", "table", "mode", "output").collect().toSeq
+      .map(r => ResultRow(r.getString(0), r.getString(1), r.getString(2), r.getString(3),
+        r.getString(4)))
+
+  /** Ascending, column by column. */
+  private val rowOrder: Ordering[Seq[String]] = Ordering.Implicits.seqOrdering
+
+  private def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  private case class Merged(schema: String, table: String, mode: String, output: String,
+                            targets: Seq[String])
+
+  private def mergedCells(results: DataFrame): Seq[Merged] =
+    cells(results)
+      .groupBy(c => Seq(c.schema.toLowerCase, c.table.toLowerCase, c.mode, c.output))
+      .toSeq.sortBy(_._1)(rowOrder)
+      .map { case (k, cs) => Merged(k(0), k(1), k(2), k(3), cs.map(_.target).sorted) }
+
   /** A3: group cells by (schema, table, mode, output), collecting which
     * targets produced each output — the reference's mutex-guarded nested-map
-    * insert (/root/reference/results.go:46-69) becomes one tiny shuffle.
-    * Schema/table keys are lowercased: heterogeneous targets fold identifier
-    * case differently (Derby `APP.VERIFYME` vs a quoted-lowercase
-    * `APP.verifyme`), and the comparison must line those up as the same
-    * logical table rather than report a spurious missing-table mismatch.
+    * insert (results.go:46-69). Schema/table keys are
+    * lowercased: heterogeneous targets fold identifier case differently
+    * (Derby `APP.VERIFYME` vs a quoted-lowercase `APP.verifyme`), and the
+    * comparison must line those up as the same logical table rather than
+    * report a spurious missing-table mismatch.
     */
   def merged(results: DataFrame): DataFrame =
-    results.groupBy(lower(col("schema")).as("schema"), lower(col("table")).as("table"),
-        col("mode"), col("output"))
-      .agg(sort_array(collect_list(col("target"))).as("targets"))
+    local(results.sparkSession,
+      mergedCells(results).map(m => Row(m.schema, m.table, m.mode, m.output, m.targets)),
+      StructType(Seq("schema", "table", "mode", "output").map(StructField(_, StringType)) :+
+        StructField("targets", ArrayType(StringType, containsNull = false), nullable = false)))
 
   /** A4: the consistency diff (/root/reference/results.go:72-98). A cell fails
     * if targets disagree on the output, if some target is missing, or if any
     * output is the `(err)` sentinel.
     */
-  def inconsistencies(results: DataFrame, nTargets: Int): DataFrame =
-    merged(results)
-      .groupBy("schema", "table", "mode")
-      .agg(
-        countDistinct(col("output")).as("n_outputs"),
-        sum(size(col("targets"))).cast("int").as("n_reports"),
-        max((col("output") === Fingerprints.Err).cast("int")).cast("boolean").as("has_err"))
-      .filter(col("n_outputs") > 1 || col("n_reports") =!= nTargets || col("has_err"))
-      .orderBy(col("schema"), col("table"), col("mode"))
+  def inconsistencies(results: DataFrame, nTargets: Int): DataFrame = {
+    val rows = mergedCells(results)
+      .groupBy(m => Seq(m.schema, m.table, m.mode)).toSeq.sortBy(_._1)(rowOrder)
+      .flatMap { case (k, ms) =>
+        val nOutputs = ms.size.toLong // one merged cell per distinct output
+        val nReports = ms.map(_.targets.size).sum
+        val hasErr = ms.exists(_.output == Fingerprints.Err)
+        if (nOutputs > 1 || nReports != nTargets || hasErr)
+          Some(Row(k(0), k(1), k(2), nOutputs, nReports, hasErr))
+        else None
+      }
+    local(results.sparkSession, rows, StructType(
+      Seq("schema", "table", "mode").map(StructField(_, StringType)) ++ Seq(
+        StructField("n_outputs", LongType, nullable = false),
+        StructField("n_reports", IntegerType),
+        StructField("has_err", BooleanType))))
+  }
 
   /** A5 + O4/O5: one row per (schema, table, target), one column per mode
     * (alphabetical), `(err)` filling gaps, lexicographic row order
@@ -160,12 +200,14 @@ object VerifyRun {
     */
   def pivotReport(results: DataFrame, modes: Seq[String]): DataFrame = {
     val sortedModes = modes.sorted
-    val pivoted = results
-      .groupBy("schema", "table", "target")
-      .pivot("mode", sortedModes)
-      .agg(first(col("output")))
-      .na.fill(Fingerprints.Err, sortedModes)
-    pivoted.orderBy(pivoted.columns.map(col).toSeq: _*)
+    val rows = cells(results).groupBy(c => (c.schema, c.table, c.target)).toSeq
+      .map { case ((schema, table, target), cs) =>
+        Seq(schema, table, target) ++ sortedModes.map(m =>
+          cs.find(_.mode == m).fold(Fingerprints.Err)(_.output))
+      }
+      .sorted(rowOrder)
+    local(results.sparkSession, rows.map(Row.fromSeq),
+      StructType((Seq("schema", "table", "target") ++ sortedModes).map(StructField(_, StringType))))
   }
 
   /** S5 report sink: render the pivot as an ASCII box table to `out` — the

@@ -162,7 +162,12 @@ object FileTarget {
   * TIMESTAMP, keeping oracle parity.
   */
 object Readers {
+  import scala.util.control.NonFatal
   import org.apache.spark.sql.Column
+  import org.apache.spark.sql.execution.{FileSourceScanExec, InputRDDCodegen, SparkPlan, UnionExec}
+  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+  import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+  import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
   /** Spread rows across all cores before a CPU-heavy per-row stage. An
@@ -191,7 +196,8 @@ object Readers {
     * when the planned scan's actual partition count is well below the
     * target (one row group, gzip, a single hot file); a scan already at
     * half the target parallelism or better keeps its native split shape
-    * and pays NO exchange.
+    * and pays NO exchange. The split count comes from the planned scan
+    * ([[plannedPartitions]]), so the gate itself starts no job.
     */
   def spreadBySize(df: DataFrame, key: Column,
                    bytesPerTask: Long = 256 * 1024): DataFrame = {
@@ -200,12 +206,29 @@ object Readers {
     val target = ((bytes / bytesPerTask) min cap) max BigInt(1)
     if (target <= 1) df
     else {
-      // physical-planning only (no job): the scan's real split count
       val scanParts =
-        try df.rdd.getNumPartitions catch { case _: Throwable => 1 }
+        try plannedPartitions(df.queryExecution.sparkPlan) catch { case NonFatal(_) => 1 }
       if (2 * scanParts >= target.toInt) df
       else df.repartition(target.toInt, key)
     }
+  }
+
+  /** The partition count a plan's input arrives in, read off the planned
+    * (not executed) physical plan: a file scan's split count, a JDBC or
+    * local scan's RDD, an explicit exchange's partition count. Building
+    * these RDDs lists splits only — no job starts and no code is compiled,
+    * where `df.rdd` would compile the whole plan and, under adaptive
+    * execution, run its shuffle stages to learn the same number.
+    */
+  private[graft] def plannedPartitions(plan: SparkPlan): Int = plan match {
+    case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+    case s: InputRDDCodegen => s.inputRDD.getNumPartitions
+    case e: ShuffleExchangeLike => e.numPartitions
+    case a: AdaptiveSparkPlanExec => plannedPartitions(a.inputPlan)
+    case m: InMemoryTableScanExec => plannedPartitions(m.relation.cachedPlan)
+    case u: UnionExec => u.children.map(plannedPartitions).sum
+    case leaf if leaf.children.isEmpty => leaf.outputPartitioning.numPartitions max 1
+    case p => p.children.map(plannedPartitions).max
   }
 
   /** Columns stored as TIMESTAMP(NANOS) in the fixture parquet (TESTDATA.md). */
@@ -533,6 +556,20 @@ case class PsqlTarget(name: String, conn: String,
   import scala.sys.process._
   import org.apache.spark.sql.types._
 
+  /** `\copy` staging directories created by [[read]], awaiting [[dropStaging]]. */
+  private val staged = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** Delete every staging directory this target's reads have created. Frames
+    * read before the call cannot be evaluated after it, so the run that read
+    * them calls this once it has finished with them.
+    */
+  def dropStaging(): Unit =
+    Iterator.continually(staged.poll()).takeWhile(_ != null).foreach { dir =>
+      val files = Files.walk(dir)
+      try files.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.deleteIfExists(p))
+      finally files.close()
+    }
+
   private def psqlLines(sql: String): Seq[String] = {
     val f = Files.createTempFile("graft-psql-t", ".sql")
     Files.write(f, sql.getBytes("UTF-8"))
@@ -618,6 +655,7 @@ case class PsqlTarget(name: String, conn: String,
       case (m, _) if m.isPrimaryKey && intTypes.contains(m.dataType) => m.name
     }
     val stageDir = Files.createTempDirectory(s"graft-psql-$bare")
+    staged.add(stageDir)
     def copyTo(file: String, where: String): Unit =
       psqlLines(s"""\\copy (SELECT ${selects.mkString(", ")} FROM "$schema"."$bare"$where) """ +
         s"to '$stageDir/$file' with (format csv, header, null '\\N')")

@@ -14,9 +14,23 @@ import org.apache.spark.sql.expressions.Aggregator
   */
 object Digests {
   def md5OfConcat(it: Iterator[String]): String = {
-    val md = MessageDigest.getInstance("MD5")
-    it.foreach(s => md.update(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    toHex(md.digest())
+    val chain = new Md5Chain
+    it.foreach(chain.add)
+    chain.hex
+  }
+
+  /** [[md5OfConcat]] fed one string at a time, so one pass over a stream
+    * can build several digests side by side.
+    */
+  final class Md5Chain {
+    private val md = MessageDigest.getInstance("MD5")
+    private var n = 0L
+    def add(s: String): Unit = {
+      md.update(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      n += 1
+    }
+    def isEmpty: Boolean = n == 0
+    def hex: String = toHex(md.digest())
   }
 
   def toHex(bytes: Array[Byte]): String = {

@@ -315,11 +315,19 @@ object MinHashLSH {
                                 idCol: String, textCol: String,
                                 paraTokens: Int, shingleN: Int, numPerm: Int,
                                 numBands: Int, minMatching: Int,
-                                dropRatioMicro: Long): DataFrame =
-    paragraphDedupFromIndex(newDocs,
-      paragraphSigs(corpusDocs, idCol, textCol, paraTokens, shingleN, numPerm),
-      idCol, textCol, paraTokens, shingleN, numPerm, numBands, minMatching,
-      dropRatioMicro)
+                                dropRatioMicro: Long): DataFrame = {
+    // paragraphSigs' two cached stages, held so they can be released: the
+    // result is materialized before paragraphDedupFromIndex returns
+    val corpusShingled = shingled(paragraphs(corpusDocs, idCol, textCol, paraTokens),
+      "pid", "ptext", shingleN)
+    val corpusSigs = signaturesFromShingles(corpusShingled, numPerm)
+    try paragraphDedupFromIndex(newDocs, corpusSigs, idCol, textCol, paraTokens,
+      shingleN, numPerm, numBands, minMatching, dropRatioMicro)
+    finally {
+      corpusSigs.unpersist(blocking = false)
+      corpusShingled.unpersist(blocking = false)
+    }
+  }
 
   /** The probe form of the incremental paragraph gate: `indexSigs` is the
     * persisted paragraph signature index ([[paragraphSigs]] rows via
@@ -333,8 +341,8 @@ object MinHashLSH {
                               numBands: Int, minMatching: Int,
                               dropRatioMicro: Long): DataFrame = {
     val parasNew = paragraphs(newDocs, idCol, textCol, paraTokens).persist()
-    val sigsNew = signaturesFromShingles(
-      shingled(parasNew, "pid", "ptext", shingleN), numPerm)
+    val shingledNew = shingled(parasNew, "pid", "ptext", shingleN)
+    val sigsNew = signaturesFromShingles(shingledNew, numPerm)
     val cand = incrementalCandidates(sigsNew, indexSigs, numPerm, numBands)
     val dupNew = cand.filter(col("n_matching") >= minMatching &&
         expr(s"doc_a div $ParaStride") =!= expr(s"doc_b div $ParaStride"))
@@ -351,13 +359,12 @@ object MinHashLSH {
         coalesce(col("n_dup"), lit(0L)).as("n_dup_paras"),
         ratio.as("dup_ratio_micro"),
         (ratio >= dropRatioMicro).as("drop_doc"))
-    // materialize-then-release: the delta paragraph cache (and the candidate
-    // frame incrementalCandidates left cached for this call's joins) must
-    // not outlive the ingest
+    // materialize-then-release: the delta paragraph caches (paragraphs,
+    // shingles, signatures, and the candidate frame incrementalCandidates
+    // left cached for this call's joins) must not outlive the ingest
     val out = result.persist()
     out.count()
-    parasNew.unpersist(blocking = false)
-    cand.unpersist(blocking = false)
+    Seq(parasNew, shingledNew, sigsNew, cand).foreach(_.unpersist(blocking = false))
     out
   }
 

@@ -121,6 +121,43 @@ class CliSpec extends SparkSpec {
     assert(o.contains("only_a") && o.contains("differs"), o)
   }
 
+  test("a repeated two-target all-modes --drill-down run: one read per table, pinned jobs, no recompiles") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions.{col, when}
+    // b: nation identical, orders missing a key band, lineitem (composite
+    // PK) with a few values changed
+    val tmp = java.nio.file.Files.createTempDirectory("graft-warm").toString
+    val read = graft.core.Readers.fixture(spark, sfDir, _: String)
+    read("nation").write.parquet(s"$tmp/nation.parquet")
+    read("orders").filter(col("o_orderkey") % 50 =!= 7).write.parquet(s"$tmp/orders.parquet")
+    read("lineitem").withColumn("l_quantity", when(col("l_orderkey") % 500 === 3 &&
+      col("l_linenumber") === 1, col("l_quantity") + 1).otherwise(col("l_quantity")))
+      .write.parquet(s"$tmp/lineitem.parquet")
+    val cfg = Cli.parse(Seq("--tests", TestModes.All.mkString(","), "--drill-down",
+      "--include-tables", "nation,orders,lineitem", "--aliases", "a,b", sfDir, tmp)).toOption.get
+    def run(): String = {
+      val sw = new StringWriter()
+      assert(Cli.run(spark, cfg, sw) == 1, sw.toString)
+      sw.toString
+    }
+    val first = run()
+    assert(first.contains("drill-down rows: main.orders") &&
+      first.contains("drill-down rows: main.lineitem") && !first.contains("main.nation ("), first)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val (second, jobs) = jobsOf(run())
+    val recompiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    assert(second == first)
+    // one schema resolution (a `spark.read.parquet` job) per (target, table)
+    assert(jobs.count(_.startsWith("parquet at")) == 6, jobs)
+    // measured: 52 jobs (143 when every mode, report step and drill-down
+    // ran its own plan over its own read)
+    assert(jobs.size == 52, s"${jobs.size} jobs: $jobs")
+    // the second run finds most of its compiled classes in the code cache:
+    // measured 17-18 recompiles (the count varies with the cache's segment
+    // hashing), against 154 when each mode and report step planned alone
+    assert(recompiled <= 45, recompiled)
+  }
+
   test("incremental re-verification: baseline, verified, drifted across three runs") {
     val snaps = java.nio.file.Files.createTempDirectory("graft-snaps").toString
     def run(dir: String): (Int, String) = {

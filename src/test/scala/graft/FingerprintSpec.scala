@@ -74,6 +74,39 @@ class FingerprintSpec extends SparkSpec {
     assert(viaRunModes(TestModes.Stats) != Fingerprints.Err)
   }
 
+  test("the one sorted pass equals each mode's own digest, single and composite PK") {
+    val c = VerifyConfig(bookendLimit = 3, sparseMod = 3)
+    def perMode(d: org.apache.spark.sql.DataFrame, sp: TableSpec): Map[String, String] = Map(
+      TestModes.Full -> Fingerprints.fullDigest(d, sp, c),
+      TestModes.Sparse -> Fingerprints.sparseDigest(d, sp, c),
+      TestModes.Bookend -> Fingerprints.bookendDigest(d, sp, c),
+      TestModes.RowCount -> d.count().toString,
+      TestModes.Stats -> Fingerprints.statsDigest(d, sp, c))
+    // composite keys whose members exercise Spark's join-key equality in
+    // the per-column membership: -0.0 joins 0.0, NaN joins NaN, a null
+    // never joins, binary compares by content
+    val doubles = Seq(Some(0.0), Some(-0.0), Some(1.5), Some(Double.NaN), None)
+    val composite = (for { (a, i) <- doubles.zipWithIndex; b <- 0 to 5 }
+      yield (a, s"b$b".getBytes("UTF-8"), s"v$i-$b")).toDF("a", "b", "s")
+    val cspec = TableSpec("t", Seq("a", "b"))
+    for ((d, sp) <- Seq(base -> spec, composite -> cspec)) {
+      val expected = perMode(d, sp)
+      assert(expected.values.forall(_ != Fingerprints.Err), expected)
+      assert(Fingerprints.runModes(TestModes.All, d, sp, c) == expected)
+      // the streamed pass (composite sparse keeps the semi-join there) and
+      // the per-mode plans without full mode give the same outputs
+      assert(Fingerprints.runModes(TestModes.All, d, sp,
+        c.copy(streamingCollectRowLimit = 1L)) == expected)
+      val noFull = TestModes.All.filterNot(_ == TestModes.Full)
+      assert(Fingerprints.runModes(noFull, d, sp, c) == expected - TestModes.Full)
+    }
+    // the composite fixture selects a strict superset of the jointly
+    // sampled rows, so the membership rule is what the digest pins
+    val joint = composite.filter(Fingerprints.sparseFilter(composite, cspec, c))
+    assert(Fingerprints.sparseDigest(composite, cspec, c) !=
+      Fingerprints.fullDigest(joint, cspec, c))
+  }
+
   test("streamed exact digest equals collect() digest across the threshold") {
     // the toLocalIterator path must be byte-identical to the collect() path
     // it replaces past streamingCollectRowLimit; force the threshold to both

@@ -1022,6 +1022,19 @@ class OperatorSpec extends SparkSpec {
     assert(inc.exists(_._3 > 0), "fixture's new batch has planted paragraph dups")
   }
 
+  test("incremental paragraph dedup releases every cache it builds") {
+    // parameters no other test uses, so no cached plan is shared with them
+    val isNew = col("doc_id") % 10 === 3
+    val baseline = spark.sparkContext.getPersistentRDDs.size
+    val out = MinHashLSH.paragraphDedupIncremental(
+      docs.filter(isNew), docs.filter(!isNew), "doc_id", "text",
+      paraTokens = 11, shingleN = 3, numPerm = 16, numBands = 4,
+      minMatching = 12, dropRatioMicro = 500000L)
+    assert(out.count() > 0)
+    out.unpersist(blocking = true)
+    assert(spark.sparkContext.getPersistentRDDs.size == baseline)
+  }
+
   test("paragraph gate from a persisted signature index equals the recompute path") {
     // the O(delta + index) claim, executed: persist the corpus's paragraph
     // signatures once, then an ingest that reads ONLY the index (corpus

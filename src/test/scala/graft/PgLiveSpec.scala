@@ -393,13 +393,20 @@ class PgLiveSpec extends SparkSpec {
     val cliCfg = Cli.parse(Seq("--tests", "full,bookend,sparse,rowcount,stats",
       "--include-tables", "region,nation", "--parquet-schema", "public",
       "--aliases", "pg,parquet", s"pg:$conninfo", sfDir)).toOption.get
+    // the run deletes the \copy staging it created once it has ended
+    def staging: Set[String] = Option(new java.io.File(System.getProperty("java.io.tmpdir"))
+      .listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("graft-psql-")).map(_.getName).toSet
+    val stagedBefore = staging
     val sw = new java.io.StringWriter()
     assert(Cli.run(spark, cliCfg, sw) == 0, sw.toString)
+    assert((staging -- stagedBefore).isEmpty, staging -- stagedBefore)
     assert(sw.toString.contains("region") && sw.toString.contains("nation"), sw.toString)
     // and a perturbed PG row makes the live pair FAIL — the check can fire
     psql("UPDATE public.nation SET n_name = n_name || 'X' WHERE n_nationkey = 3;")
     val sw2 = new java.io.StringWriter()
     assert(Cli.run(spark, cliCfg, sw2) == 1, sw2.toString)
+    assert((staging -- stagedBefore).isEmpty, staging -- stagedBefore)
     psql("UPDATE public.nation SET n_name = rtrim(n_name, 'X') WHERE n_nationkey = 3;")
   }
 

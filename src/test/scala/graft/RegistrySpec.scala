@@ -40,4 +40,14 @@ class RegistrySpec extends SparkSpec {
     assert((missing -- knownRowsOnly).isEmpty,
       s"queries missing an oracle: ${(missing -- knownRowsOnly).toSeq.sorted.mkString(", ")}")
   }
+
+  test("query names are unique across modules; a duplicate fails, naming it") {
+    val names = QueryRegistry.modules.flatMap(_.keys)
+    assert(names.distinct.size == names.size)
+    assert(QueryRegistry.all.size == names.size)
+    val e = intercept[IllegalArgumentException] {
+      QueryRegistry.merge(Seq(QueryRegistry.modules.head, QueryRegistry.modules.head.take(1)))
+    }
+    assert(e.getMessage.contains(QueryRegistry.modules.head.keys.head), e.getMessage)
+  }
 }

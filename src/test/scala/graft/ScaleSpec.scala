@@ -131,6 +131,22 @@ class ScaleSpec extends SparkSpec {
     assert(Fingerprints.fullDigest(viaJson, spec, cfg) == parquetDigest)
   }
 
+  test("the spread gate reads the planned scan: split counts without starting a job") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    // a single-file fixture scan: the planned split count is the scan's own
+    val orders = Readers.fixture(spark, sfDir, "orders")
+    assert(Readers.plannedPartitions(orders.queryExecution.sparkPlan) ==
+      orders.rdd.getNumPartitions)
+    // a frame with an exchange: learning its partitioning must not run the
+    // shuffle stages (df.rdd would, under adaptive execution) or any job
+    val shuffled = spark.range(0, 50000, 1, 1).repartition(3)
+      .groupBy((col("id") % 7).as("g")).count()
+    assert(shuffled.queryExecution.sparkPlan.exists(_.isInstanceOf[ShuffleExchangeLike]))
+    val (spreadDf, jobs) = jobsOf(Readers.spreadBySize(shuffled, col("g"), bytesPerTask = 1))
+    assert(jobs.isEmpty, jobs)
+    assert(spreadDf.collect().length == 7)
+  }
+
   test("full mode auto-degrades to the Merkle digest above fullModeRowLimit") {
     import graft.core.{Fingerprints, TableSpec, TestModes, VerifyConfig}
     val spec = TableSpec("orders", Seq("o_orderkey"))
