@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Staging
 import graft.operators.{Corpus, DedupClusters, MinHashLSH, TextAnalysis}
 
 /** `graft-curate` — the training-data product surface: one command running
@@ -253,302 +254,286 @@ object Curate {
     }
   }
 
+  /** A gate's surviving documents and their count. */
+  private final case class Stage(df: DataFrame, n: Long)
+
   /** Runs the pipeline; returns per-stage surviving document counts (a
     * funnel, printed as the run summary and asserted by CurateSpec).
     *
-    * Every stage boundary is localCheckpoint-ed, not merely persisted —
-    * the corpus_waterfall gate-boundary lesson: the later gates (DSIR
-    * rank, the LR training loop, priority sampling, chunk packing) run
-    * many small actions, and each would re-plan the full accumulated
-    * stage lineage; truncation caps plan depth at one stage. The funnel
-    * counts materialize every stage regardless, so the eager checkpoint
-    * adds only the block write.
+    * One action per stage: each enabled gate's output is localCheckpoint-ed
+    * lazily and counted by a single job, which also writes the checkpoint
+    * blocks. The checkpoint is the corpus_waterfall gate-boundary lesson:
+    * the later gates (the LR training loop, priority sampling, chunk
+    * packing) run several actions each, and each would otherwise re-plan
+    * the full accumulated stage lineage; truncation caps plan depth at one
+    * stage. The funnel reuses the recorded counts: a disabled gate passes
+    * on its input frame with that frame's count, so no frame is counted
+    * twice. Only `input` and the `written` read-back (the on-disk truth)
+    * are counted outside the stages. Every checkpoint is released once the
+    * output is written.
     */
   def run(spark: SparkSession, cfg: Config): Seq[(String, Long)] = {
-    val docs = spark.read.parquet(s"${cfg.docsDir}/documents.parquet")
-    val input = docs.count()
+    val staged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def stage(df: DataFrame): Stage = {
+      val c = df.localCheckpoint(eager = false)
+      staged += c
+      Stage(c, c.queryExecution.toRdd.count())
+    }
+    try {
+      val docs = spark.read.parquet(s"${cfg.docsDir}/documents.parquet")
+      val input = Stage(docs, docs.count())
 
-    // exact dedup: keep the smallest id per distinct text
-    val keepIds = docs.groupBy(md5(col("text")).as("h"))
-      .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-    val exact = docs.join(keepIds, Seq("doc_id"), "left_semi").localCheckpoint()
+      // exact dedup: keep the smallest id per distinct text
+      val keepIds = docs.groupBy(md5(col("text")).as("h"))
+        .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
+      val exact = stage(docs.join(keepIds, Seq("doc_id"), "left_semi"))
 
-    // near-dup dedup: LSH candidates → connected components → keep one
-    // representative per cluster: minimum id by default, or the
-    // highest-quality member under --keep-best (the dedup_best_rep rule —
-    // dropping duplicates shouldn't also drop the best-written copy)
-    val pairs = MinHashLSH.candidatePairs(exact, "doc_id", "text", 3, 16, 4)
-      .filter(col("est_jaccard") >= 0.5).select("doc_a", "doc_b")
-    val comp = DedupClusters.components(pairs)
-    val dropNearBase =
-      if (!cfg.keepBest) comp.filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
-      else {
-        import org.apache.spark.sql.expressions.Window
-        comp.join(exact.select(col("doc_id"),
-            TextAnalysis.qualityScore(TextAnalysis.tokens(col("text"))).as("q")), "doc_id")
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("cluster_id")).orderBy(col("q").desc, col("doc_id"))))
-          .filter(col("rn") > 1).select("doc_id")
+      // near-dup dedup: LSH candidates → connected components → keep one
+      // representative per cluster: minimum id by default, or the
+      // highest-quality member under --keep-best (the dedup_best_rep rule —
+      // dropping duplicates shouldn't also drop the best-written copy).
+      // The signatures are persisted here (the banding reads them three
+      // times) and released once the stage is counted
+      val sigs = MinHashLSH.signatures(exact.df, "doc_id", "text", 3, 16)
+      val pairs = MinHashLSH.candidatePairsFromSignatures(sigs, 16, 4)
+        .filter(col("est_jaccard") >= 0.5).select("doc_a", "doc_b")
+      val comp = DedupClusters.components(pairs)
+      val dropNearBase =
+        if (!cfg.keepBest) comp.filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
+        else {
+          import org.apache.spark.sql.expressions.Window
+          comp.join(exact.df.select(col("doc_id"),
+              TextAnalysis.qualityScore(TextAnalysis.tokens(col("text"))).as("q")), "doc_id")
+            .withColumn("rn", row_number().over(
+              Window.partitionBy(col("cluster_id")).orderBy(col("q").desc, col("doc_id"))))
+            .filter(col("rn") > 1).select("doc_id")
+        }
+      // --max-cluster-size: a cluster wider than the cap is a template farm —
+      // its REPRESENTATIVE is as synthetic as its members, so the whole
+      // cluster drops (dedup_cluster_sizes is the histogram that picks the
+      // cap). Cluster sizes are a clusters-sized aggregate of the components
+      // frame; the drop set unions with the representative rule
+      val dropNear = cfg.maxClusterSize.fold(dropNearBase) { maxSz =>
+        val farms = comp.join(
+          comp.groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
+            .filter(col("sz") > maxSz).select("cluster_id"),
+          Seq("cluster_id"), "left_semi").select("doc_id")
+        dropNearBase.unionByName(farms).distinct()
       }
-    // --max-cluster-size: a cluster wider than the cap is a template farm —
-    // its REPRESENTATIVE is as synthetic as its members, so the whole
-    // cluster drops (dedup_cluster_sizes is the histogram that picks the
-    // cap). Cluster sizes are a clusters-sized aggregate of the components
-    // frame; the drop set unions with the representative rule
-    val dropNear = cfg.maxClusterSize.fold(dropNearBase) { maxSz =>
-      val farms = comp.join(
-        comp.groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
-          .filter(col("sz") > maxSz).select("cluster_id"),
-        Seq("cluster_id"), "left_semi").select("doc_id")
-      dropNearBase.unionByName(farms).distinct()
-    }
-    val nearDeduped = exact.join(dropNear, Seq("doc_id"), "left_anti").localCheckpoint()
+      val nearDeduped = stage(exact.df.join(dropNear, Seq("doc_id"), "left_anti"))
+      sigs.unpersist(blocking = false)
 
-    // optional eval-set decontamination (broadcast trigram semi-join)
-    val decontaminated = cfg.decontaminateAgainst.fold(nearDeduped) { dir =>
-      val eval = spark.read.parquet(s"$dir/documents.parquet")
-      nearDeduped.join(
-        Corpus.contaminatedIds(nearDeduped, eval, "doc_id", "text", shingleN = 3),
-        Seq("doc_id"), "left_anti").localCheckpoint()
-    }
+      // optional eval-set decontamination (broadcast trigram semi-join)
+      val decontaminated = cfg.decontaminateAgainst.fold(nearDeduped) { dir =>
+        val eval = spark.read.parquet(s"$dir/documents.parquet")
+        stage(nearDeduped.df.join(
+          Corpus.contaminatedIds(nearDeduped.df, eval, "doc_id", "text", shingleN = 3),
+          Seq("doc_id"), "left_anti"))
+      }
 
-    // optional duplicated-substring screen: drop documents mostly covered by
-    // k-token spans that repeat elsewhere in the surviving corpus (license
-    // blocks, boilerplate) — the ExactSubstr operator dedup_substring gates
-    val substrScreened = cfg.maxSubstrCoverage.fold(decontaminated) { maxMicro =>
-      // coverage() returns a persisted frame: materialize the screened set,
-      // then release it — otherwise the per-doc coverage table stays pinned
-      // in executor memory for the rest of the pipeline run
-      val cov = graft.operators.ExactSubstr
-        .coverage(decontaminated, "doc_id", "text", k = 8)
-      val heavy = cov.filter(col("coverage_micro") > maxMicro)
-        .select(col("id").as("doc_id"))
-      val out = decontaminated.join(heavy, Seq("doc_id"), "left_anti").localCheckpoint()
-      out.count()
-      cov.unpersist(blocking = false)
-      out
-    }
-
-    // optional same-source boilerplate screen: drop documents dominated by
-    // windows repeated across their source's other documents — the
-    // dedup_boilerplate operator as a gate (finer-grained than the
-    // corpus-wide substring screen: a phrase common across sources survives)
-    val bpScreened = cfg.maxBoilerplate.fold(substrScreened) { maxMicro =>
-      // same materialize-then-release as the substring screen above
-      val bp = graft.operators.ExactSubstr
-        .boilerplate(substrScreened, "doc_id", "text", "source", k = 4, minDocs = 2)
-      val heavy = bp.filter(col("removed_micro") > maxMicro)
-        .select(col("id").as("doc_id"))
-      val out = substrScreened.join(heavy, Seq("doc_id"), "left_anti").localCheckpoint()
-      out.count()
-      bp.unpersist(blocking = false)
-      out
-    }
-
-    // optional paragraph-granularity screen (the dedup_paragraph operator as
-    // a gate — the standard doc+paragraph two-pass): drop documents whose
-    // share of 10-token paragraphs near-duplicating an EARLIER surviving
-    // document's paragraphs reaches the cap. Runs on the corpus the earlier
-    // whole-doc passes kept, so it catches the partial-copy pages whole-doc
-    // MinHash missed
-    val paraScreened = cfg.maxParaDupMicro.fold(bpScreened) { maxMicro =>
-      val pd = MinHashLSH.paragraphDedup(bpScreened, "doc_id", "text",
-        paraTokens = 10, shingleN = 3, numPerm = 16, numBands = 4,
-        minMatching = 12, dropRatioMicro = maxMicro)
-      val heavy = pd.filter(col("drop_doc")).select("doc_id")
-      val out = bpScreened.join(heavy, Seq("doc_id"), "left_anti").localCheckpoint()
-      out.count()
-      out
-    }
-
-    // quality filter (shared scorer — same expression the oracle checks):
-    // one global threshold, or each source's own bottom-quartile cut (the
-    // corpus_quality_gate operator) under --per-source-quality
-    val quality = (if (cfg.perSourceQuality)
-      paraScreened.join(
-        Corpus.perSourceQualityGate(paraScreened, "doc_id", "source", "text")
-          .select("doc_id"),
-        Seq("doc_id"), "left_semi")
-    else
-      paraScreened
-        .filter(TextAnalysis.qualityScore(TextAnalysis.tokens(col("text"))) >= cfg.minQuality))
-      .localCheckpoint()
-
-    val qualityCount = quality.count()
-
-    // optional perplexity gate (the text_lm_xent quantity as a filter): LM
-    // trains on the SURVIVING corpus, docs above the cross-entropy cap drop
-    // — the CCNet-style fluency screen. Docs too short to score (< 2
-    // tokens) have no xent row and survive the anti-join
-    val xentGated = cfg.maxXentMicro.fold(quality) { cap =>
-      val x = graft.operators.Vocab.lmXent(quality, "doc_id", "text")
-      val heavy = x.filter(col("mean_xent_micro") > cap).select("doc_id")
-      val out = quality.join(heavy, Seq("doc_id"), "left_anti").localCheckpoint()
-      out.count()
-      out
-    }
-
-    // optional PII safety gate (the text_pii_scan detectors per document):
-    // drop documents whose PII-shaped token density exceeds the cap — the
-    // drop-side alternative to redaction, one per-row HOF expression
-    val piiGated = cfg.maxPiiPerMillion.fold(xentGated) { cap =>
-      val out = xentGated.filter(
-        TextAnalysis.piiPerMillion(TextAnalysis.tokens(col("text"))) <= cap).localCheckpoint()
-      out.count()
-      out
-    }
-
-    // optional in-place PII redaction (the text_pii_redact transform): the
-    // keep-the-document alternative to the density drop above — every
-    // detector-positive token becomes the <PII> sentinel; all later gates
-    // (DSIR, the LR filter, chunking) see the redacted text
-    val redacted = if (!cfg.redactPii) piiGated else {
-      val out = piiGated.withColumn("text",
-        TextAnalysis.redactPii(TextAnalysis.tokens(col("text")))).localCheckpoint()
-      out.count()
-      out
-    }
-
-    // optional DSIR selection (the corpus_dsir operators as a gate): score
-    // survivors by hashed-bigram target-vs-raw likelihood with the given
-    // language as the target domain, keep the top N% by exact distributed
-    // rank (range-partitioned + offset, never a single-partition window)
-    val dsirKept = (cfg.dsirTargetLang, cfg.dsirKeepPct) match {
-      case (Some(lang0), Some(pct)) =>
-        val w = graft.operators.Selection.dsirWeights(
-          redacted, "doc_id", "text", col("lang") === lang0, 1024)
-        // distributed exact rank, never a single-partition global window
-        // (Ranks scaladoc) — the curate binary sees full-corpus inputs
-        val ranked = graft.operators.Ranks.globalRank(
-          w, Seq(col("dsir_micro").desc, col("doc_id").asc), "rnk")
-        // ranked is cached + row-preserving: a cache read, not a re-score
-        val n = ranked.count()
-        val keep = ranked.filter(col("rnk") * 100L <= n * pct).select("doc_id")
-        val out = redacted.join(keep, Seq("doc_id"), "left_semi").localCheckpoint()
-        out.count()
+      // optional duplicated-substring screen: drop documents mostly covered by
+      // k-token spans that repeat elsewhere in the surviving corpus (license
+      // blocks, boilerplate) — the ExactSubstr operator dedup_substring gates
+      val substrScreened = cfg.maxSubstrCoverage.fold(decontaminated) { maxMicro =>
+        // coverage() returns a persisted frame: materialize the screened set,
+        // then release it — otherwise the per-doc coverage table stays pinned
+        // in executor memory for the rest of the pipeline run
+        val cov = graft.operators.ExactSubstr
+          .coverage(decontaminated.df, "doc_id", "text", k = 8)
+        val heavy = cov.filter(col("coverage_micro") > maxMicro)
+          .select(col("id").as("doc_id"))
+        val out = stage(decontaminated.df.join(heavy, Seq("doc_id"), "left_anti"))
+        cov.unpersist(blocking = false)
         out
-      case _ => redacted
-    }
+      }
 
-    // optional trained-classifier gate (the text_lr operators as a filter):
-    // train the logistic-regression filter ON the survivors (hashed
-    // presence features, NB init, integer-GD fine-tune — LogReg scaladoc),
-    // then drop documents whose posterior falls below the cap. The
-    // fastText-style "does this look like the target domain" screen,
-    // discriminative where the DSIR gate above is generative
-    val lrGated = (cfg.lrTargetLang, cfg.minLrSigmaMicro) match {
-      case (Some(lang0), Some(minSigma)) =>
-        import graft.operators.LogReg
-        import graft.queries.TextQueries.{LrBuckets, LrSteps, LrNum, LrDen}
-        val nDocs = dsirKept.count()
-        val x = LogReg.features(dsirKept, "doc_id", "text",
-          col("lang") === lang0, LrBuckets).localCheckpoint()
-        val w = LogReg.trainWeights(spark, x, nDocs, LrBuckets, LrSteps,
-          LrNum, LrDen, init = Some(LogReg.nbInit(x, LrBuckets)))
-        val keep = LogReg.score(spark, x, w)
-          .filter(col("sigma") >= minSigma).select("doc_id")
-        val out = dsirKept.join(keep, Seq("doc_id"), "left_semi").localCheckpoint()
-        out.count()
+      // optional same-source boilerplate screen: drop documents dominated by
+      // windows repeated across their source's other documents — the
+      // dedup_boilerplate operator as a gate (finer-grained than the
+      // corpus-wide substring screen: a phrase common across sources survives)
+      val bpScreened = cfg.maxBoilerplate.fold(substrScreened) { maxMicro =>
+        // same materialize-then-release as the substring screen above
+        val bp = graft.operators.ExactSubstr
+          .boilerplate(substrScreened.df, "doc_id", "text", "source", k = 4, minDocs = 2)
+        val heavy = bp.filter(col("removed_micro") > maxMicro)
+          .select(col("id").as("doc_id"))
+        val out = stage(substrScreened.df.join(heavy, Seq("doc_id"), "left_anti"))
+        bp.unpersist(blocking = false)
         out
-      case _ => dsirKept
-    }
+      }
 
-    // optional quality-weighted downsample (Duffield–Lund–Thorup priority
-    // sample — the corpus_sample_weighted operator): keep-probability scales
-    // with the shared quality score, so the budget cut preserves the mix
-    // instead of top-k cherry-picking; deterministic across runs
-    val sampled0 = cfg.sampleWeighted.fold(lrGated) { k =>
-      Corpus.prioritySample(
-          lrGated.withColumn("q",
-            TextAnalysis.qualityScore(TextAnalysis.tokens(col("text")))),
-          "doc_id", expr("CAST(floor(q * 1000000) AS BIGINT) + 1"), k)
-        .drop("q", "w", "priority").localCheckpoint()
-    }
-    // optional temperature-scaled source mix toward a token budget (the
-    // corpus_mix_temperature operator): applied to whatever survived the
-    // earlier gates, so the mix reweights the CURATED corpus
-    val sampled = cfg.mixTemperature.fold(sampled0) { budget =>
-      sampled0.join(
-        Corpus.temperatureMix(sampled0, "doc_id", "source", "text", budget)
-          .select("doc_id"),
-        Seq("doc_id"), "left_semi").localCheckpoint()
-    }
+      // optional paragraph-granularity screen (the dedup_paragraph operator as
+      // a gate — the standard doc+paragraph two-pass): drop documents whose
+      // share of 10-token paragraphs near-duplicating an EARLIER surviving
+      // document's paragraphs reaches the cap. Runs on the corpus the earlier
+      // whole-doc passes kept, so it catches the partial-copy pages whole-doc
+      // MinHash missed
+      val paraScreened = cfg.maxParaDupMicro.fold(bpScreened) { maxMicro =>
+        val pd = MinHashLSH.paragraphDedup(bpScreened.df, "doc_id", "text",
+          paraTokens = 10, shingleN = 3, numPerm = 16, numBands = 4,
+          minMatching = 12, dropRatioMicro = maxMicro)
+        val heavy = pd.filter(col("drop_doc")).select("doc_id")
+        stage(bpScreened.df.join(heavy, Seq("doc_id"), "left_anti"))
+      }
 
-    // deterministic split, assigned by (parent) document BEFORE optional
-    // chunking: overlapping chunks of one document share text, so letting
-    // them straddle train/val/test would leak evaluation data into training
-    val qualityKept =
-      if (cfg.sampleWeighted.isDefined || cfg.mixTemperature.isDefined
-        || cfg.maxXentMicro.isDefined || cfg.dsirKeepPct.isDefined
-        || cfg.minLrSigmaMicro.isDefined) sampled.count()
-      else qualityCount
-    val split = sampled.withColumn("split",
-      Corpus.splitAssign(col("doc_id"), cfg.trainPct, cfg.valPct))
+      // quality filter (shared scorer — same expression the oracle checks):
+      // one global threshold, or each source's own bottom-quartile cut (the
+      // corpus_quality_gate operator) under --per-source-quality
+      val quality = stage(if (cfg.perSourceQuality)
+        paraScreened.df.join(
+          Corpus.perSourceQualityGate(paraScreened.df, "doc_id", "source", "text")
+            .select("doc_id"),
+          Seq("doc_id"), "left_semi")
+      else
+        paraScreened.df
+          .filter(TextAnalysis.qualityScore(TextAnalysis.tokens(col("text"))) >= cfg.minQuality))
 
-    // optional chunking: the written unit becomes the overlapping token
-    // window; chunk ids pack (parent, idx) so they stay unique and traceable
-    val units = cfg.chunkTokens.fold(split) { ct =>
-      val stride = cfg.chunkStride.getOrElse(ct)
-      val chunks = Corpus.chunk(split, "doc_id", "text", ct, stride).persist()
-      // the id packing is only collision-free below 100k chunks per doc —
-      // fail loudly instead of silently fusing two parents' chunks
-      val maxIdx = chunks.agg(max(col("chunk_idx"))).head().getLong(0)
-      require(maxIdx < 100000L,
-        s"chunk id packing overflow: a document produced ${maxIdx + 1} chunks " +
-          "(>= 100000); raise --chunk-stride or --chunk-tokens")
-      val packed = chunks
-        .join(split.select(col("doc_id"), col("lang"), col("split")), "doc_id")
-        .select((col("doc_id") * 100000L + col("chunk_idx")).as("doc_id"),
-          col("chunk_text").as("text"), col("lang"), col("split"))
-        .localCheckpoint()
-      packed.count()
-      chunks.unpersist(blocking = false)
-      packed
-    }
+      // optional perplexity gate (the text_lm_xent quantity as a filter): LM
+      // trains on the SURVIVING corpus, docs above the cross-entropy cap drop
+      // — the CCNet-style fluency screen. Docs too short to score (< 2
+      // tokens) have no xent row and survive the anti-join
+      val xentGated = cfg.maxXentMicro.fold(quality) { cap =>
+        val x = graft.operators.Vocab.lmXent(quality.df, "doc_id", "text")
+        val heavy = x.filter(col("mean_xent_micro") > cap).select("doc_id")
+        stage(quality.df.join(heavy, Seq("doc_id"), "left_anti"))
+      }
 
-    // optional epoch-seeded training order: shard + position columns the
-    // trainer reads in (shuffle_shard, shuffle_pos) order; a new seed
-    // re-permutes. BOTH columns are written — shuffle_pos alone is a
-    // per-shard position and would be ambiguous without its shard
-    val tagged = cfg.shuffleSeed.fold(units) { seed =>
-      units.join(
-        Corpus.shuffle(units, "doc_id", seed, cfg.shards)
-          .select(col("id").as("doc_id"), col("shard").as("shuffle_shard"),
-            col("pos").as("shuffle_pos")),
-        "doc_id")
-    }
-    Corpus.writeSharded(tagged, cfg.outDir, "doc_id", Seq("split", "lang"), cfg.shards)
-    // an all-filtered corpus writes only _SUCCESS — nothing to read back
-    val written = if (qualityKept == 0) 0L else spark.read.parquet(cfg.outDir).count()
+      // optional PII safety gate (the text_pii_scan detectors per document):
+      // drop documents whose PII-shaped token density exceeds the cap — the
+      // drop-side alternative to redaction, one per-row HOF expression
+      val piiGated = cfg.maxPiiPerMillion.fold(xentGated) { cap =>
+        stage(xentGated.df.filter(
+          TextAnalysis.piiPerMillion(TextAnalysis.tokens(col("text"))) <= cap))
+      }
 
-    val funnel = Seq(
-      "input" -> input,
-      "exact_deduped" -> exact.count(),
-      "near_deduped" -> nearDeduped.count(),
-      "decontaminated" -> decontaminated.count(),
-      "substr_screened" -> substrScreened.count(),
-      "boilerplate_screened" -> bpScreened.count(),
-      "para_screened" -> paraScreened.count(),
-      "quality_filtered" -> qualityCount,
-      "xent_gated" -> xentGated.count(),
-      "pii_gated" -> piiGated.count(),
-      "dsir_selected" -> dsirKept.count(),
-      "lr_gated" -> lrGated.count(),
-      "quality_kept" -> qualityKept,
-      "written_units" -> (if (qualityKept == 0) 0L else units.count()),
-      "written" -> written)
-    (Seq(exact, nearDeduped, decontaminated, substrScreened, quality) ++
-      (if (bpScreened ne substrScreened) Seq(bpScreened) else Nil) ++
-      (if (paraScreened ne bpScreened) Seq(paraScreened) else Nil) ++
-      (if (xentGated ne quality) Seq(xentGated) else Nil) ++
-      (if (piiGated ne xentGated) Seq(piiGated) else Nil) ++
-      (if (redacted ne piiGated) Seq(redacted) else Nil) ++
-      (if (dsirKept ne redacted) Seq(dsirKept) else Nil) ++
-      (if (lrGated ne dsirKept) Seq(lrGated) else Nil) ++
-      (if (sampled0 ne lrGated) Seq(sampled0) else Nil) ++
-      (if (sampled ne sampled0) Seq(sampled) else Nil) ++
-      (if (units ne split) Seq(units) else Nil)).foreach(_.unpersist())
-    funnel
+      // optional in-place PII redaction (the text_pii_redact transform): the
+      // keep-the-document alternative to the density drop above — every
+      // detector-positive token becomes the <PII> sentinel; all later gates
+      // (DSIR, the LR filter, chunking) see the redacted text
+      val redacted = if (!cfg.redactPii) piiGated else
+        stage(piiGated.df.withColumn("text",
+          TextAnalysis.redactPii(TextAnalysis.tokens(col("text")))))
+
+      // optional DSIR selection (the corpus_dsir operators as a gate): score
+      // survivors by hashed-bigram target-vs-raw likelihood with the given
+      // language as the target domain, keep the top N% by exact distributed
+      // rank (range-partitioned + offset, never a single-partition window)
+      val dsirKept = (cfg.dsirTargetLang, cfg.dsirKeepPct) match {
+        case (Some(lang0), Some(pct)) =>
+          val w = graft.operators.Selection.dsirWeights(
+            redacted.df, "doc_id", "text", col("lang") === lang0, 1024)
+          // distributed exact rank, never a single-partition global window
+          // (Ranks scaladoc) — the curate binary sees full-corpus inputs
+          val ranked = graft.operators.Ranks.globalRank(
+            w, Seq(col("dsir_micro").desc, col("doc_id").asc), "rnk")
+          // dsirWeights left-joins every document, so the ranked frame has
+          // exactly the redacted stage's rows
+          val keep = ranked.filter(col("rnk") * 100L <= redacted.n * pct).select("doc_id")
+          val out = stage(redacted.df.join(keep, Seq("doc_id"), "left_semi"))
+          ranked.unpersist(blocking = false)
+          Staging.releaseFrame(ranked)
+          out
+        case _ => redacted
+      }
+
+      // optional trained-classifier gate (the text_lr operators as a filter):
+      // train the logistic-regression filter ON the survivors (hashed
+      // presence features, NB init, integer-GD fine-tune — LogReg scaladoc),
+      // then drop documents whose posterior falls below the cap. The
+      // fastText-style "does this look like the target domain" screen,
+      // discriminative where the DSIR gate above is generative. An empty
+      // survivor set has nothing to train on and nothing to keep
+      val lrGated = (cfg.lrTargetLang, cfg.minLrSigmaMicro) match {
+        case (Some(lang0), Some(minSigma)) if dsirKept.n > 0 =>
+          import graft.operators.LogReg
+          import graft.queries.TextQueries.{LrBuckets, LrSteps, LrNum, LrDen}
+          val lr = LogReg.stage(LogReg.features(dsirKept.df, "doc_id", "text",
+            col("lang") === lang0, LrBuckets), LrBuckets)
+          try {
+            val w = lr.trainWeights(dsirKept.n, LrSteps, LrNum, LrDen,
+              init = Some(lr.nbInit()))
+            val keep = lr.score(w).filter(col("sigma") >= minSigma).select("doc_id")
+            stage(dsirKept.df.join(keep, Seq("doc_id"), "left_semi"))
+          } finally lr.close()
+        case _ => dsirKept
+      }
+
+      // optional quality-weighted downsample (Duffield–Lund–Thorup priority
+      // sample — the corpus_sample_weighted operator): keep-probability scales
+      // with the shared quality score, so the budget cut preserves the mix
+      // instead of top-k cherry-picking; deterministic across runs
+      val sampled0 = cfg.sampleWeighted.fold(lrGated) { k =>
+        stage(Corpus.prioritySample(
+            lrGated.df.withColumn("q",
+              TextAnalysis.qualityScore(TextAnalysis.tokens(col("text")))),
+            "doc_id", expr("CAST(floor(q * 1000000) AS BIGINT) + 1"), k)
+          .drop("q", "w", "priority"))
+      }
+      // optional temperature-scaled source mix toward a token budget (the
+      // corpus_mix_temperature operator): applied to whatever survived the
+      // earlier gates, so the mix reweights the CURATED corpus
+      val sampled = cfg.mixTemperature.fold(sampled0) { budget =>
+        stage(sampled0.df.join(
+          Corpus.temperatureMix(sampled0.df, "doc_id", "source", "text", budget)
+            .select("doc_id"),
+          Seq("doc_id"), "left_semi"))
+      }
+
+      // deterministic split, assigned by (parent) document BEFORE optional
+      // chunking: overlapping chunks of one document share text, so letting
+      // them straddle train/val/test would leak evaluation data into training
+      val split = sampled.df.withColumn("split",
+        Corpus.splitAssign(col("doc_id"), cfg.trainPct, cfg.valPct))
+
+      // optional chunking: the written unit becomes the overlapping token
+      // window; chunk ids pack (parent, idx) so they stay unique and traceable.
+      // The packing is only collision-free below 100k chunks per doc — the
+      // packing expression fails the stage loudly instead of silently fusing
+      // two parents' chunks
+      val units = cfg.chunkTokens.fold(Stage(split, sampled.n)) { ct =>
+        val stride = cfg.chunkStride.getOrElse(ct)
+        stage(Corpus.chunk(split, "doc_id", "text", ct, stride)
+          .join(split.select(col("doc_id"), col("lang"), col("split")), "doc_id")
+          .select(
+            when(col("chunk_idx") < 100000L, col("doc_id") * 100000L + col("chunk_idx"))
+              .otherwise(raise_error(lit("chunk id packing overflow: a document " +
+                "produced >= 100000 chunks; raise --chunk-stride or --chunk-tokens")))
+              .as("doc_id"),
+            col("chunk_text").as("text"), col("lang"), col("split")))
+      }
+
+      // optional epoch-seeded training order: shard + position columns the
+      // trainer reads in (shuffle_shard, shuffle_pos) order; a new seed
+      // re-permutes. BOTH columns are written — shuffle_pos alone is a
+      // per-shard position and would be ambiguous without its shard
+      val tagged = cfg.shuffleSeed.fold(units.df) { seed =>
+        units.df.join(
+          Corpus.shuffle(units.df, "doc_id", seed, cfg.shards)
+            .select(col("id").as("doc_id"), col("shard").as("shuffle_shard"),
+              col("pos").as("shuffle_pos")),
+          "doc_id")
+      }
+      Corpus.writeSharded(tagged, cfg.outDir, "doc_id", Seq("split", "lang"), cfg.shards)
+      // an all-filtered corpus writes only _SUCCESS — nothing to read back
+      val written = if (units.n == 0) 0L else spark.read.parquet(cfg.outDir).count()
+
+      Seq(
+        "input" -> input,
+        "exact_deduped" -> exact,
+        "near_deduped" -> nearDeduped,
+        "decontaminated" -> decontaminated,
+        "substr_screened" -> substrScreened,
+        "boilerplate_screened" -> bpScreened,
+        "para_screened" -> paraScreened,
+        "quality_filtered" -> quality,
+        "xent_gated" -> xentGated,
+        "pii_gated" -> piiGated,
+        "dsir_selected" -> dsirKept,
+        "lr_gated" -> lrGated,
+        "quality_kept" -> sampled,
+        "written_units" -> units).map { case (k, st) => k -> st.n } :+
+        ("written" -> written)
+    } finally staged.foreach(Staging.releaseFrame)
   }
 
   def main(args: Array[String]): Unit = {

@@ -76,13 +76,15 @@ final class Staging[V](sessionScoped: Boolean = true)(
 object Staging {
 
   /** Unpersist every checkpoint block reachable from `v`: walks DataFrames,
-    * case classes / tuples, and collections; anything else holds no Spark
-    * state. Unpersist failures (a stopped replaced session) are ignored —
-    * release must never fail the caller.
+    * case classes / tuples, and collections, and closes `AutoCloseable`
+    * staged values (e.g. LogReg's staged feature records); anything else
+    * holds no Spark state. Release failures (a stopped replaced session)
+    * are ignored — release must never fail the caller.
     */
   private[core] def releaseValue(v: Any): Unit = v match {
     case ds: Dataset[_] =>
       checkpointRdds(ds).foreach(r => Try(r.unpersist(blocking = false)))
+    case c: AutoCloseable => Try(c.close())
     case it: Iterable[_] => it.foreach(releaseValue)
     case p: Product => p.productIterator.foreach(releaseValue)
     case _ => ()

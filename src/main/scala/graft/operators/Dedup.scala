@@ -150,7 +150,8 @@ object MinHashLSH {
     * entry point for callers comparing several BANDINGS of one signature
     * set (dedup_bands_curve): signatures cost one corpus pass and are
     * banding-independent, so re-signing per configuration would triple the
-    * expensive stage.
+    * expensive stage. Pass a persisted or checkpointed `sigs`: the banding
+    * reads it three times and caches nothing itself.
     */
   def candidatePairsFromSignatures(sigs: DataFrame, numPerm: Int,
                                    numBands: Int): DataFrame =
@@ -420,9 +421,12 @@ object MinHashLSH {
     require(numPerm % numBands == 0,
       s"numPerm=$numPerm must be divisible by numBands=$numBands or trailing signature positions silently drop from banding")
     val rowsPerBand = numPerm / numBands
+    // no persist here: the input is read three times (the band self-join's
+    // one reused exchange and the two signature joins), so callers pass a
+    // persisted or checkpointed frame and own its release. A cache made
+    // here would be reachable from no handle and never released
     val sigs = sigsIn
       .withColumn("bands", bandHashes(col("sig"), numBands, rowsPerBand))
-      .persist()
     // narrow band relation: only (id, band_idx, band_hash) shuffles
     val bands = sigs.select(col("id"), posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
     val pairs = bands.as("x").join(bands.as("y"),

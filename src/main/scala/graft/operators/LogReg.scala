@@ -11,18 +11,17 @@ import org.apache.spark.sql.functions._
   * buckets, so nothing anywhere is vocabulary-sized:
   *
   *   - one explode scan builds the (doc, bucket, count) feature frame;
-  *   - each GD step is two narrow shuffles over that frame: a per-doc
-  *     margin sum (groupBy doc, map-side combined) and a per-bucket
-  *     gradient sum (groupBy bucket — at most `buckets` groups);
-  *   - the weight vector is `buckets` longs of driver state per step (the
-  *     DSIR bounded-collect convention — same bound as its LLR map), and
-  *     re-enters the plan as a broadcast `buckets`-row join, never a
-  *     vocabulary-sized side.
+  *   - [[stage]] groups that frame into one record per document (one
+  *     shuffle) and persists the records;
+  *   - NB init and each GD step are one aggregate job over the records
+  *     (`treeAggregate`): the weight vector — `buckets + 1` longs, never
+  *     vocabulary-sized — ships to the tasks, each task folds its documents'
+  *     margins, sigmoids and gradient terms into one `buckets + 1` array,
+  *     and the driver applies the integer update.
   *
-  * Shape at 100 TB: steps × (one scan of the persisted feature frame + two
-  * bounded shuffles). The feature frame is localCheckpoint-ed once — the
-  * training loop is many small jobs, exactly the planning-cost regime the
-  * Ranks scaladoc documents.
+  * Shape at 100 TB: one staging shuffle of the feature frame, then one
+  * aggregate job per step (a scan of the persisted records, no shuffle, no
+  * query planning) and one narrow scoring pass over the same records.
   *
   * Cross-engine exactness (the driver's hash gate compares float bits, so
   * float sigmoid is unverifiable): ALL arithmetic is integer micro
@@ -231,87 +230,204 @@ object LogReg {
     w.toSeq.zipWithIndex.map { case (wv, b) => (b.toLong, wv) }.toDF("bkt", "w")
   }
 
-  /** Per-doc margin under weights `w`: (doc_id, y, z). */
-  private def margins(x: DataFrame, wdf: DataFrame): DataFrame =
-    x.join(broadcast(wdf), "bkt")
-      .groupBy(col("doc_id"), col("y"))
-      .agg(sum(col("cnt") * col("w")).as("z"))
-
-  /** Bernoulli-NB log-odds over the presence feature frame — the
-    * generative solution used as GD's starting point (full-batch GD from
-    * zero needs dozens of steps to beat the base rate; from the NB
-    * solution a couple of steps are a discriminative FINE-TUNE). Per
-    * bucket, with add-1 smoothing over the `buckets`-way space:
-    * w0(β) = lnM(df_t(β)+1) − lnM(Σdf_t + B) − lnM(df_r(β)+1) + lnM(Σdf_r + B),
-    * bias = lnM(n_pos+1) − lnM(n_neg+1). All integer micro-ln
-    * ([[Selection.lnMicroLong]], spec-pinned equal to the SQL form), so
-    * the init is bit-identical to the oracle's CTE twin. Driver state:
-    * `buckets` rows (the DSIR bounded-collect convention).
+  /** One label group of a document's feature rows: label `y` (`labeled`
+    * false for a null label) and its (bucket, count) rows.
     */
-  def nbInit(x: DataFrame, buckets: Int): Array[Long] = {
-    import Selection.lnMicroLong
-    val counts = x.filter(col("bkt") < buckets).groupBy(col("bkt")).agg(
-      sum(when(col("y") === 1L, col("cnt")).otherwise(0L)).as("n_t"),
-      sum(when(col("y") === 0L, col("cnt")).otherwise(0L)).as("n_r"))
-      .collect() // bounded: ≤ buckets rows
-    val tt = counts.map(_.getLong(1)).sum + buckets
-    val tr = counts.map(_.getLong(2)).sum + buckets
-    val default = lnMicroLong(tr) - lnMicroLong(tt) // unseen bucket: both df+1 = 1
-    val w = Array.fill(buckets + 1)(default)
-    counts.foreach { r =>
-      w(r.getLong(0).toInt) = lnMicroLong(r.getLong(1) + 1) - lnMicroLong(tt) -
-        (lnMicroLong(r.getLong(2) + 1) - lnMicroLong(tr))
+  private[operators] final case class LabelRows(y: Long, labeled: Boolean, bkts: Array[Int], cnts: Array[Long])
+
+  /** One document's feature rows, grouped by label. A `doc_id` normally
+    * carries one label; a duplicated id may carry several, and a null id
+    * gathers every id-less row (the SQL `GROUP BY doc_id, y` groups).
+    */
+  private[operators] final case class DocRows(id: java.lang.Long, groups: Array[LabelRows])
+
+  /** Margin Σ cnt·w of one label group, overflow-checked like ANSI SQL. */
+  private def margin(g: LabelRows, w: Array[Long]): Long = {
+    var z = 0L
+    var i = 0
+    while (i < g.bkts.length) {
+      z = Math.addExact(z, Math.multiplyExact(g.cnts(i), w(g.bkts(i))))
+      i += 1
     }
-    val pr = x.filter(col("bkt") === buckets).agg(
-      sum(col("y")).as("np"), sum(lit(1L) - col("y")).as("nn")).head()
-    w(buckets) = lnMicroLong(pr.getLong(0) + 1) - lnMicroLong(pr.getLong(1) + 1)
-    w
+    z
   }
 
-  /** `steps` full-batch GD steps from `init` (zeros if absent — see
-    * [[nbInit]] for why callers should init). Update per bucket:
-    * w -= sign(g) · (|g| · lrNum) div (lrDen · nDocs) — integer, exact on
-    * both engines. Buckets with no gradient row keep their init weight.
-    * `x` should be localCheckpoint-ed by the caller (many small jobs).
+  /** Stage a feature frame ((doc_id, y, bkt, cnt), the [[features]]
+    * shape) for training and scoring: one shuffle groups it into one
+    * [[DocRows]] record per document, persisted until `close()`. NB init,
+    * every GD step and scoring all read these records.
     */
-  def trainWeights(spark: SparkSession, x: DataFrame, nDocs: Long,
-                   buckets: Int, steps: Int, lrNum: Long, lrDen: Long,
-                   init: Option[Array[Long]] = None): Array[Long] = {
-    // loud failure over silent divergence: nDocs=0 (an upstream gate dropped
-    // everything, or an empty ingest delta) would ArithmeticException
-    // mid-loop here while the DuckDB twin's `// (lrDen * nd.n)` yields NULL
-    // weights — the engines must fail the same way, at entry
-    require(nDocs > 0,
-      s"trainWeights: nDocs=$nDocs — training over an empty corpus slice " +
-        "has no gradient; guard the caller (the duck twin shares this " +
-        "precondition: its weight CTEs divide by the doc count)")
-    val w = init.map(_.clone()).getOrElse(Array.fill(buckets + 1)(0L))
-    for (_ <- 1 to steps) {
-      val sig = withSigmoid(margins(x, weightsDf(spark, w)), "z", "sigma")
-      // bounded collect: at most `buckets` rows (the DSIR LLR convention)
-      val grads = x.join(sig.select(col("doc_id"), col("sigma")), "doc_id")
-        .groupBy(col("bkt"))
-        .agg(sum((col("sigma") - col("y") * 1000000L) * col("cnt")).as("g"))
-        .collect()
-      grads.foreach { r =>
-        val b = r.getLong(0).toInt
-        val g = r.getLong(1)
-        w(b) -= math.signum(g) * (math.abs(g) * lrNum / (lrDen * nDocs))
+  def stage(x: DataFrame, buckets: Int): Staged = {
+    val idType = x.schema("doc_id").dataType
+    val rows = x.select(col("doc_id").cast("long"), col("y").cast("long"),
+        col("bkt").cast("long"), col("cnt").cast("long"))
+      .queryExecution.toRdd.map { r =>
+        val bkt = r.getLong(2)
+        require(bkt >= 0 && bkt <= buckets, s"feature bucket $bkt outside [0, $buckets]")
+        val id: java.lang.Long = if (r.isNullAt(0)) null else r.getLong(0)
+        val y: java.lang.Long = if (r.isNullAt(1)) null else r.getLong(1)
+        (id, (y, bkt.toInt, r.getLong(3)))
+      }
+    // the default partitioner keeps the input's parallelism: every GD step
+    // runs one task per staged partition
+    val docs = rows.groupByKey()
+      .map { case (id, rs) =>
+        DocRows(id, rs.groupBy(_._1).iterator.map { case (y, g) =>
+          LabelRows(if (y == null) 0L else y.longValue, y != null,
+            g.iterator.map(_._2).toArray, g.iterator.map(_._3).toArray)
+        }.toArray)
+      }
+      .setName("LogReg staged features")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    new Staged(x.sparkSession, docs, idType, buckets)
+  }
+
+  /** A feature frame staged by [[stage]]: the records NB init, the GD
+    * steps and scoring share. NB init and each GD step are one aggregate
+    * job over them; `close()` releases them.
+    */
+  final class Staged private[LogReg] (spark: SparkSession,
+      docs: org.apache.spark.rdd.RDD[DocRows],
+      idType: org.apache.spark.sql.types.DataType, buckets: Int)
+    extends AutoCloseable {
+
+    /** Bernoulli-NB log-odds over the presence features — the generative
+      * solution used as GD's starting point (full-batch GD from zero needs
+      * dozens of steps to beat the base rate; from the NB solution a
+      * couple of steps are a discriminative FINE-TUNE). Per bucket, with
+      * add-1 smoothing over the `buckets`-way space:
+      * w0(β) = lnM(df_t(β)+1) − lnM(Σdf_t + B) − lnM(df_r(β)+1) + lnM(Σdf_r + B),
+      * bias = lnM(n_pos+1) − lnM(n_neg+1). All integer micro-ln
+      * ([[Selection.lnMicroLong]], spec-pinned equal to the SQL form), so
+      * the init is bit-identical to the oracle's CTE twin. One aggregate
+      * job; driver state is `2·buckets + 2` longs.
+      */
+    def nbInit(): Array[Long] = {
+      import Selection.lnMicroLong
+      val b = buckets
+      // [0, b): df_t per bucket, [b, 2b): df_r, 2b: n_pos, 2b+1: n_neg
+      val acc = docs.treeAggregate(new Array[Long](2 * b + 2))({ (a, d) =>
+        d.groups.foreach { g =>
+          if (g.labeled) {
+            var i = 0
+            while (i < g.bkts.length) {
+              val k = g.bkts(i)
+              if (k < b) {
+                if (g.y == 1L) a(k) = Math.addExact(a(k), g.cnts(i))
+                else if (g.y == 0L) a(b + k) = Math.addExact(a(b + k), g.cnts(i))
+              } else {
+                a(2 * b) = Math.addExact(a(2 * b), g.y)
+                a(2 * b + 1) = Math.addExact(a(2 * b + 1), Math.subtractExact(1L, g.y))
+              }
+              i += 1
+            }
+          }
+        }
+        a
+      }, addInto)
+      val tt = acc.iterator.take(b).sum + b
+      val tr = acc.iterator.slice(b, 2 * b).sum + b
+      Array.tabulate(b + 1) { k =>
+        if (k < b) lnMicroLong(acc(k) + 1) - lnMicroLong(tt) -
+          (lnMicroLong(acc(b + k) + 1) - lnMicroLong(tr))
+        else lnMicroLong(acc(2 * b) + 1) - lnMicroLong(acc(2 * b + 1) + 1)
       }
     }
-    w
+
+    /** `steps` full-batch GD steps from `init` (zeros if absent — see
+      * [[nbInit]] for why callers should init). Each step is one aggregate
+      * job with `w` shipped to the tasks: per document, the sigmoid of
+      * each label group's margin, and every labeled feature row adds
+      * (sigma − y·10⁶)·cnt to its bucket's gradient for each of the
+      * document's sigmas. Update per bucket:
+      * w -= sign(g) · (|g| · lrNum) div (lrDen · nDocs) — integer, exact on
+      * both engines; a bucket with no gradient keeps its weight.
+      */
+    def trainWeights(nDocs: Long, steps: Int, lrNum: Long, lrDen: Long,
+                     init: Option[Array[Long]] = None): Array[Long] = {
+      // loud failure over silent divergence: nDocs=0 (an upstream gate
+      // dropped everything, or an empty ingest delta) would divide by zero
+      // mid-loop here while the DuckDB twin's `// (lrDen * nd.n)` yields
+      // NULL weights — the engines must fail the same way, at entry
+      require(nDocs > 0,
+        s"trainWeights: nDocs=$nDocs — training over an empty corpus slice " +
+          "has no gradient; guard the caller (the duck twin shares this " +
+          "precondition: its weight CTEs divide by the doc count)")
+      val w = init.map(_.clone()).getOrElse(Array.fill(buckets + 1)(0L))
+      require(w.length == buckets + 1, s"weights ${w.length} != buckets+1")
+      for (_ <- 1 to steps) {
+        val wStep = w.clone()
+        val g = docs.treeAggregate(new Array[Long](buckets + 1))(
+          (a, d) => addGradient(a, d, wStep), addInto)
+        var b = 0
+        while (b <= buckets) {
+          w(b) -= math.signum(g(b)) * (math.abs(g(b)) * lrNum / (lrDen * nDocs))
+          b += 1
+        }
+      }
+      w
+    }
+
+    /** Score the staged documents under `w`: (doc_id, y, z, sigma, pred),
+      * one row per (doc_id, y) group, pred = 1 iff sigma ≥ 500000 (the
+      * integer 0.5 threshold). The frame reads the staged records; after
+      * `close()` it recomputes them from the staging shuffle.
+      */
+    def score(w: Array[Long]): DataFrame = {
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      require(w.length == buckets + 1, s"weights ${w.length} != buckets+1")
+      val rows = docs.flatMap { d =>
+        d.groups.iterator.map { g =>
+          val z = margin(g, w)
+          val s = sigmoidMicroLong(z)
+          Row(d.id, if (g.labeled) g.y else null, z, s, if (s >= 500000L) 1L else 0L)
+        }
+      }
+      val schema = StructType(Seq("doc_id", "y", "z", "sigma", "pred")
+        .map(StructField(_, LongType)))
+      val out = spark.createDataFrame(rows, schema)
+      if (idType == LongType) out else out.withColumn("doc_id", col("doc_id").cast(idType))
+    }
+
+    def close(): Unit = docs.unpersist(blocking = false)
+  }
+
+  /** One document's gradient terms added into `a` (see
+    * [[Staged.trainWeights]]); a null-id record joins no sigma.
+    */
+  private def addGradient(a: Array[Long], d: DocRows, w: Array[Long]): Array[Long] = {
+    if (d.id != null) {
+      val sig = d.groups.map(g => sigmoidMicroLong(margin(g, w)))
+      d.groups.foreach { g =>
+        if (g.labeled) {
+          val yM = Math.multiplyExact(g.y, 1000000L)
+          var i = 0
+          while (i < g.bkts.length) {
+            val k = g.bkts(i)
+            var j = 0
+            while (j < sig.length) {
+              a(k) = Math.addExact(a(k),
+                Math.multiplyExact(Math.subtractExact(sig(j), yM), g.cnts(i)))
+              j += 1
+            }
+            i += 1
+          }
+        }
+      }
+    }
+    a
+  }
+
+  private def addInto(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < a.length) { a(i) = Math.addExact(a(i), b(i)); i += 1 }
+    a
   }
 
   /** Final per-bucket weight table (bkt, w_micro) — all `buckets` rows. */
   def weightsTable(spark: SparkSession, w: Array[Long]): DataFrame =
     weightsDf(spark, w).withColumnRenamed("w", "w_micro")
-
-  /** Score `x` under `w`: (doc_id, y, sigma, pred) with pred = 1 iff
-    * sigma ≥ 500000 (the integer 0.5 threshold).
-    */
-  def score(spark: SparkSession, x: DataFrame, w: Array[Long]): DataFrame =
-    withSigmoid(margins(x, weightsDf(spark, w)), "z", "sigma")
-      .withColumn("pred", (col("sigma") >= 500000L).cast("long"))
 
   /** Frozen-scorer row form: score documents with a TRAINED weight vector
     * as a pure per-row expression — zero streaming state, no shuffle, the
@@ -383,7 +499,7 @@ object LogReg {
   /** Shared DuckDB CTE prelude: features, doc count, the NB-init w0, then
     * w1 … w`steps`. Returns (cte fragments, name of the final weights CTE).
     * Every integer step is the textual twin of the Spark/driver arithmetic
-    * ([[features]], [[nbInit]], [[trainWeights]]).
+    * ([[features]], [[Staged.nbInit]], [[Staged.trainWeights]]).
     */
   /** The feature-frame CTE (named `name`): one row per (doc, bucket) over
     * the rows of `table` satisfying `predSql`, plus the bias rows — the
@@ -410,10 +526,10 @@ object LogReg {
   /** GD-step CTEs `w{start}` … `w{start+steps-1}` over feature CTE `xName`
     * (doc count in `ndName`.n), starting from weights CTE `fromW`. Returns
     * (ctes, final weights CTE name). The duck twin of the
-    * [[trainWeights]] loop body, reusable mid-chain (the incremental
+    * [[Staged.trainWeights]] step, reusable mid-chain (the incremental
     * fine-tune continues a persisted model with a different x).
     *
-    * Precondition (shared with [[trainWeights]], which requires it at
+    * Precondition (shared with [[Staged.trainWeights]], which requires it at
     * entry): `ndName`.n > 0. DuckDB's `// (lrDen * n)` on n=0 yields NULL
     * weights instead of erroring, so an empty corpus slice would make the
     * two engines diverge silently rather than fail loudly — callers guard

@@ -90,7 +90,7 @@ object AnalyticsQueries {
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
     coClickLpMemo(spark, sfDir)
 
-  val entries: Map[String, QueryEntry] = Map(
+  val entries: Seq[(String, QueryEntry)] = Seq(
 
     // TPC-H Q1-style pricing summary: the flagship scan→hash-agg plan.
     "q1_pricing" -> QueryEntry(

@@ -102,7 +102,7 @@ object CorpusQueries {
   val lastWaterfallGateSeconds =
     new java.util.concurrent.atomic.AtomicReference[Vector[(String, Double)]](Vector.empty)
 
-  val entries: Map[String, QueryEntry] = Map(
+  val entries: Seq[(String, QueryEntry)] = Seq(
 
     // source-weighted domain mixing: hash-sample each weighted source toward
     // its share of the token budget; unweighted sources drop
@@ -608,28 +608,28 @@ object CorpusQueries {
         // --lr-target-lang/--min-lr-sigma-micro curate stage at the 0.5
         // posterior threshold) — trains ON the survivors, so the flagship
         // composition exercises the round's training loop end-to-end
-        gate("7_lr") {
-          import graft.operators.LogReg
-          import graft.queries.TextQueries.{LrBuckets, LrSteps, LrNum, LrDen}
-          // DELIBERATELY NOT sliced from the staged LR feature frame (r14,
-          // VERDICT item 8 — tried and reverted with numbers): featurization
-          // IS per-doc-local so the slice is provably value-identical
-          // (StagingSpec "gate-7 device" pins it), but probed SLOWER at
-          // bench scale — gate warm min 2.52 s inline vs 2.75-2.88 s via
-          // staged slice — for the same reason as gate 3: the staged frame
-          // spans the full corpus (feature rows >> survivor docs) and the
-          // semi-join + checkpoint of corpus-wide feature rows costs more
-          // than featurizing the survivor slice. Weights stay per-run
-          // either way (training is slice-dependent by design).
-          val xf = LogReg.features(dsir, "doc_id", "text",
-            col("lang") === "en", LrBuckets).localCheckpoint()
-          val wLr = LogReg.trainWeights(spark, xf, dsir.count(), LrBuckets,
-            LrSteps, LrNum, LrDen, init = Some(LogReg.nbInit(xf, LrBuckets)))
+        import graft.operators.LogReg
+        import graft.queries.TextQueries.{LrBuckets, LrSteps, LrNum, LrDen}
+        // DELIBERATELY NOT sliced from the staged LR feature frame (r14,
+        // VERDICT item 8 — tried and reverted with numbers): featurization
+        // IS per-doc-local so the slice is provably value-identical
+        // (StagingSpec "gate-7 device" pins it), but probed SLOWER at
+        // bench scale — gate warm min 2.52 s inline vs 2.75-2.88 s via
+        // staged slice — for the same reason as gate 3: the staged frame
+        // spans the full corpus (feature rows >> survivor docs) and the
+        // semi-join + checkpoint of corpus-wide feature rows costs more
+        // than featurizing the survivor slice. Weights stay per-run
+        // either way (training is slice-dependent by design). The staged
+        // records are released once the gate has counted its survivors
+        val xf = LogReg.stage(LogReg.features(dsir, "doc_id", "text",
+          col("lang") === "en", LrBuckets), LrBuckets)
+        try gate("7_lr") {
+          val wLr = xf.trainWeights(dsir.count(), LrSteps, LrNum, LrDen,
+            init = Some(xf.nbInit()))
           dsir.join(
-            LogReg.score(spark, xf, wLr)
-              .filter(col("sigma") >= 500000L).select("doc_id"),
+            xf.score(wLr).filter(col("sigma") >= 500000L).select("doc_id"),
             Seq("doc_id"), "left_semi")
-        }
+        } finally xf.close()
         // docs is a real CacheManager persist — release it. The gate frames
         // (exact/near/…) are localCheckpoint-ed: their blocks are RDD-level,
         // not CacheManager entries, so Dataset.unpersist on them is a no-op

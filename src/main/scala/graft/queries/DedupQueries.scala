@@ -46,7 +46,7 @@ object DedupQueries {
     })
   private[graft] def rawDocsDir(sfDir: String): String = rawDocsMemo(sfDir)
 
-  val entries: Map[String, QueryEntry] = Map(
+  val entries: Seq[(String, QueryEntry)] = Seq(
 
     // exact dedup: hash-groupBy, keep the smallest id per distinct text
     "dedup_exact" -> QueryEntry(

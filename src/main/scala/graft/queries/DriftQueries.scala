@@ -251,7 +251,7 @@ object DriftQueries {
         FROM ecdf a JOIN ecdf b ON a.len_bin = b.len_bin AND a.source < b.source
         GROUP BY 1, 2, 3, 4 ORDER BY src_a, src_b"""
 
-  val entries: Map[String, QueryEntry] = Map(
+  val entries: Seq[(String, QueryEntry)] = Seq(
 
     // per-user behavioral entropy: H(user) over its event-type distribution,
     // in micro-nats — H = ln N − (Σ n·ln n)/N, all integer micro-ln. Low

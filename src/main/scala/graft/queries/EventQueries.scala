@@ -155,7 +155,7 @@ object EventQueries {
        GROUP BY event_type ORDER BY event_type"""
   }
 
-  val entries: Map[String, QueryEntry] = Map(
+  val entries: Seq[(String, QueryEntry)] = Seq(
 
     // continuous verification, batch side: per-type order-insensitive
     // fingerprint (sum of row-hash signed-64s — commutative, so the stream

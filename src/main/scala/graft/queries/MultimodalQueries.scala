@@ -13,7 +13,7 @@ import graft.operators.Multimodal
   */
 object MultimodalQueries {
 
-  val entries: Map[String, QueryEntry] = Map(
+  val entries: Seq[(String, QueryEntry)] = Seq(
 
     // batch decode + feature extraction via mapPartitions over binary column
     "mm_meta" -> QueryEntry(

@@ -16,7 +16,7 @@ import graft.operators.TextAnalysis.{duckTokens, tokens}
   */
 object PrivacyQueries {
 
-  val entries: Map[String, QueryEntry] = Map(
+  val entries: Seq[(String, QueryEntry)] = Seq(
 
     // k-anonymity audit: each user's releasable behavioral profile —
     // (modal event type, peak-hour quarter-of-day, log2 activity band) —

@@ -96,7 +96,7 @@ object SimilarityQueries {
         expr(s"(1000000 * coalesce(n_hits, 0)) div $K").as("recall_micro"))
   }
 
-  val entries: Map[String, QueryEntry] = Map(
+  val entries: Seq[(String, QueryEntry)] = Seq(
 
     // exact top-k: broadcast queries × full scan, bounded-heap rank per
     // query — sliced from the ONE staged widest exact ranking

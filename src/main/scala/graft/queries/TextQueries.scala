@@ -52,8 +52,8 @@ object TextQueries {
   val LrCharSteps = 3
 
   /** The featurized full corpus (hashed word-bigram presence counts + label),
-    * localCheckpoint-ed once per fixture dir and shared by training,
-    * text_lr_scorecard, text_lr_calibration, and text_lr_margin_mining —
+    * localCheckpoint-ed once per fixture dir and shared by the staged
+    * training records ([[lrStaged]]) and the base/delta slices —
     * r10 verdict item 2: the bigram explode is the expensive LR stage and
     * each of those queries was rebuilding it. Lifecycle: the shared
     * [[graft.core.Staging]] memo (session-keyed, never evicted implicitly,
@@ -68,17 +68,26 @@ object TextQueries {
                                 sfDir: String): org.apache.spark.sql.DataFrame =
     lrFeatMemo(spark, sfDir)
 
+  /** The full-corpus feature frame staged for training and scoring
+    * ([[graft.operators.LogReg.stage]]) — shared by training and the
+    * text_lr_* scoring queries, released with the memo.
+    */
+  private val lrStagedMemo = new graft.core.Staging[graft.operators.LogReg.Staged]()(
+    (spark, sfDir) => graft.operators.LogReg.stage(lrFeatures(spark, sfDir), LrBuckets))
+
+  private[graft] def lrStaged(spark: org.apache.spark.sql.SparkSession,
+                              sfDir: String): graft.operators.LogReg.Staged =
+    lrStagedMemo(spark, sfDir)
+
   /** Training is deterministic (pure integer arithmetic, no sampling), so
     * the three text_lr_* queries share one training run per fixture dir —
     * plain driver data (1025 longs), session-independent.
     */
   private val lrMemo = new graft.core.Staging[Array[Long]](sessionScoped = false)(
     { (spark, sfDir) =>
-      import graft.operators.LogReg
       val nDocs = Readers.fixture(spark, sfDir, "documents").count()
-      val x = lrFeatures(spark, sfDir)
-      LogReg.trainWeights(spark, x, nDocs, LrBuckets, LrSteps,
-        LrNum, LrDen, init = Some(LogReg.nbInit(x, LrBuckets)))
+      val x = lrStaged(spark, sfDir)
+      x.trainWeights(nDocs, LrSteps, LrNum, LrDen, init = Some(x.nbInit()))
     })
 
   private[graft] def trainedLr(spark: org.apache.spark.sql.SparkSession,
@@ -92,19 +101,18 @@ object TextQueries {
     * un-memoized checkpoint blocks to GC.
     */
   private val lrCharMemo = new graft.core.Staging[
-      (org.apache.spark.sql.DataFrame, Array[Long])]()({ (spark, sfDir) =>
+      (graft.operators.LogReg.Staged, Array[Long])]()({ (spark, sfDir) =>
     import graft.operators.LogReg
     val docs = Readers.fixture(spark, sfDir, "documents")
-    val x = LogReg.featuresFromGrams(docs, "doc_id", LogReg.charTrigrams,
-      "text", col("lang") === "en", LrBuckets).localCheckpoint()
-    val w = LogReg.trainWeights(spark, x, docs.count(), LrBuckets,
-      LrCharSteps, LrCharNum, LrCharDen,
-      init = Some(LogReg.nbInit(x, LrBuckets)))
+    val x = LogReg.stage(LogReg.featuresFromGrams(docs, "doc_id", LogReg.charTrigrams,
+      "text", col("lang") === "en", LrBuckets), LrBuckets)
+    val w = x.trainWeights(docs.count(), LrCharSteps, LrCharNum, LrCharDen,
+      init = Some(x.nbInit()))
     (x, w)
   })
 
   private[graft] def lrCharTrained(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): (org.apache.spark.sql.DataFrame, Array[Long]) =
+      sfDir: String): (graft.operators.LogReg.Staged, Array[Long]) =
     lrCharMemo(spark, sfDir)
 
   /** The 90%-base-slice trained weights — text_lr_incremental's persisted
@@ -117,12 +125,13 @@ object TextQueries {
     */
   private val lrBaseMemo = new graft.core.Staging[Array[Long]](sessionScoped = false)(
     { (spark, sfDir) =>
-      import graft.operators.LogReg
-      val x = lrFeatures(spark, sfDir).filter(col("doc_id") % 10 =!= 9)
-      LogReg.trainWeights(spark, x,
+      val x = graft.operators.LogReg.stage(
+        lrFeatures(spark, sfDir).filter(col("doc_id") % 10 =!= 9), LrBuckets)
+      try x.trainWeights(
         Readers.fixture(spark, sfDir, "documents")
           .filter(col("doc_id") % 10 =!= 9).count(),
-        LrBuckets, LrSteps, LrNum, LrDen, init = Some(LogReg.nbInit(x, LrBuckets)))
+        LrSteps, LrNum, LrDen, init = Some(x.nbInit()))
+      finally x.close()
     })
 
   private[graft] def lrBaseTrained(spark: org.apache.spark.sql.SparkSession,
@@ -209,7 +218,7 @@ object TextQueries {
                                   sfDir: String): org.apache.spark.sql.DataFrame =
     lmXentMemo(spark, sfDir)
 
-  val entries: Map[String, QueryEntry] = Map(
+  val entries: Seq[(String, QueryEntry)] = Seq(
 
     // token/char stats + quality score per document
     "text_stats" -> QueryEntry(
@@ -1377,8 +1386,7 @@ object TextQueries {
     // a pipeline monitors when it retrains the filter
     "text_lr_scorecard" -> QueryEntry(
       fn = (spark, sfDir) => {
-        import graft.operators.LogReg
-        LogReg.score(spark, lrFeatures(spark, sfDir), trainedLr(spark, sfDir))
+        lrStaged(spark, sfDir).score(trainedLr(spark, sfDir))
           .groupBy(col("y"), col("pred"))
           .agg(count(lit(1)).as("n"), sum(col("sigma")).as("sum_sigma"))
           .orderBy(col("y"), col("pred"))
@@ -1397,9 +1405,8 @@ object TextQueries {
     // scorecard keeps that comparison a number, not an assumption
     "text_lr_chargram_scorecard" -> QueryEntry(
       fn = (spark, sfDir) => {
-        import graft.operators.LogReg
         val (x, w) = lrCharTrained(spark, sfDir)
-        LogReg.score(spark, x, w)
+        x.score(w)
           .groupBy(col("y"), col("pred"))
           .agg(count(lit(1)).as("n"), sum(col("sigma")).as("sum_sigma"))
           .orderBy(col("y"), col("pred"))
@@ -1415,8 +1422,7 @@ object TextQueries {
     // than only an argmax
     "text_lr_calibration" -> QueryEntry(
       fn = (spark, sfDir) => {
-        import graft.operators.LogReg
-        LogReg.score(spark, lrFeatures(spark, sfDir), trainedLr(spark, sfDir))
+        lrStaged(spark, sfDir).score(trainedLr(spark, sfDir))
           .withColumn("band", least(expr("sigma div 100000"), lit(9L)))
           .groupBy(col("band"))
           .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"),
@@ -1434,8 +1440,7 @@ object TextQueries {
     // sort — the same scale shape as every other top-k here
     "text_lr_margin_mining" -> QueryEntry(
       fn = (spark, sfDir) => {
-        import graft.operators.LogReg
-        LogReg.score(spark, lrFeatures(spark, sfDir), trainedLr(spark, sfDir))
+        lrStaged(spark, sfDir).score(trainedLr(spark, sfDir))
           .withColumn("margin", abs(col("sigma") - 500000L))
           .select(col("doc_id"), col("y"), col("sigma"), col("margin"))
           .orderBy(col("margin").asc, col("doc_id").asc)
@@ -1474,14 +1479,15 @@ object TextQueries {
           .createTempDirectory("graft-lr-model").resolve("m").toString
         LogReg.writeModel(spark, path, wBase, LrBuckets)
         val persisted = LogReg.readModel(spark, path, LrBuckets)
-        val xd = lrFeatures(spark, sfDir).filter(isDelta)
-        val w = LogReg.trainWeights(spark, xd,
-          docs.filter(isDelta).count(), LrBuckets,
-          LrDeltaSteps, LrNum, LrDen, init = Some(persisted))
-        LogReg.score(spark, xd, w)
+        // the delta's staged records serve the fine-tune; the returned
+        // scorecard re-reads them from the staging shuffle after close
+        val xd = LogReg.stage(lrFeatures(spark, sfDir).filter(isDelta), LrBuckets)
+        try xd.score(xd.trainWeights(docs.filter(isDelta).count(),
+            LrDeltaSteps, LrNum, LrDen, init = Some(persisted)))
           .groupBy(col("y"), col("pred"))
           .agg(count(lit(1)).as("n"), sum(col("sigma")).as("sum_sigma"))
           .orderBy(col("y"), col("pred"))
+        finally xd.close()
       },
       oracle = Some(graft.operators.LogReg.duckIncrementalSql(
         "lang = 'en'", LrBuckets, LrSteps, LrDeltaSteps, LrNum, LrDen,

@@ -110,7 +110,7 @@ object VerifierQueries {
   private val TzUnits =
     Seq("day", "hour", "minute", "month", "quarter", "second", "week", "year")
 
-  val entries: Map[String, QueryEntry] = Map(
+  val entries: Seq[(String, QueryEntry)] = Seq(
 
     // A3 merged report: two identical targets agree on every cell
     "pv_report_agree" -> QueryEntry(

@@ -683,20 +683,24 @@ object Sf1Probe {
     timed("rank_distributed 1x") { viaRanks(fixture("events")) }
     timed("rank_distributed 10x") { viaRanks(events10) }
 
-    // -- logreg filter training (LogReg.trainWeights) ------------------------
-    // scale claim: per GD step = one scan of the feature frame + two
-    // bounded shuffles (per-doc margin, ≤1025 gradient groups); weight
-    // state constant at 1025 longs however large the corpus. Expect ~linear
-    // wall growth, zero state growth.
-    def lrTrain(docs: DataFrame): Long = {
+    // -- logreg filter training (LogReg.stage + Staged.trainWeights) ---------
+    // scale claim: one staging shuffle of the feature frame, then per GD
+    // step one aggregate job over the staged per-doc records; weight state
+    // constant at 1025 longs however large the corpus. Expect ~linear wall
+    // growth, zero state growth.
+    def lrTrainOn(x: DataFrame, n: Long, steps: Int,
+                  init: Option[Array[Long]]): Array[Long] = {
       import graft.operators.LogReg
-      val n = docs.count()
-      val x = LogReg.features(docs, "doc_id", "text",
-        col("lang") === "en", 1024).localCheckpoint()
-      val w = LogReg.trainWeights(spark, x, n, 1024, 5, 2L, 1L,
-        init = Some(LogReg.nbInit(x, 1024)))
-      w.count(_ != 0L).toLong // nonzero weights: bounded by 1025 at any scale
+      val staged = LogReg.stage(x, 1024)
+      try staged.trainWeights(n, steps, 2L, 1L,
+        init = init.orElse(Some(staged.nbInit())))
+      finally staged.close()
     }
+    def lrFeatures(docs: DataFrame): DataFrame =
+      graft.operators.LogReg.features(docs, "doc_id", "text", col("lang") === "en", 1024)
+    def lrTrain(docs: DataFrame): Long =
+      // nonzero weights: bounded by 1025 at any scale
+      lrTrainOn(lrFeatures(docs), docs.count(), 5, None).count(_ != 0L).toLong
     timed("logreg_train 1x") { lrTrain(fixture("documents")) }
     timed("logreg_train 10x") { lrTrain(docs10) }
 
@@ -706,22 +710,15 @@ object Sf1Probe {
     def lrSplit(docs: DataFrame): (DataFrame, DataFrame) =
       (docs.filter(col("doc_id") % 10 =!= 9), docs.filter(col("doc_id") % 10 === 9))
     def lrBase(docs: DataFrame): Array[Long] = {
-      import graft.operators.LogReg
       val (base, _) = lrSplit(docs)
-      val x = LogReg.features(base, "doc_id", "text",
-        col("lang") === "en", 1024).localCheckpoint()
-      LogReg.trainWeights(spark, x, base.count(), 1024, 5, 2L, 1L,
-        init = Some(LogReg.nbInit(x, 1024)))
+      lrTrainOn(lrFeatures(base), base.count(), 5, None)
     }
     var lrModel: Array[Long] = null
     timed("lr_base_train 1x") { lrModel = lrBase(fixture("documents")); 1025L }
     timed("lr_delta_tune 1x") {
-      import graft.operators.LogReg
       val (_, delta) = lrSplit(fixture("documents"))
-      val xd = LogReg.features(delta, "doc_id", "text",
-        col("lang") === "en", 1024).localCheckpoint()
-      LogReg.trainWeights(spark, xd, delta.count(), 1024, 2, 2L, 1L,
-        init = Some(lrModel)).count(_ != 0L).toLong
+      lrTrainOn(lrFeatures(delta), delta.count(), 2, Some(lrModel))
+        .count(_ != 0L).toLong
     }
     // multimodal ingest screens: index build (amortized) vs delta probe
     // (recurring) for the pHash and landmark matchers
@@ -778,12 +775,9 @@ object Sf1Probe {
 
     timed("lr_base_train 10x") { lrModel = lrBase(docs10); 1025L }
     timed("lr_delta_tune 10x") {
-      import graft.operators.LogReg
       val (_, delta) = lrSplit(docs10)
-      val xd = LogReg.features(delta, "doc_id", "text",
-        col("lang") === "en", 1024).localCheckpoint()
-      LogReg.trainWeights(spark, xd, delta.count(), 1024, 2, 2L, 1L,
-        init = Some(lrModel)).count(_ != 0L).toLong
+      lrTrainOn(lrFeatures(delta), delta.count(), 2, Some(lrModel))
+        .count(_ != 0L).toLong
     }
 
     spark.stop()

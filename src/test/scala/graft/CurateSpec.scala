@@ -87,6 +87,8 @@ class CurateSpec extends SparkSpec {
       docsDir = dir, outDir = out, minQuality = 0.0,
       maxPiiPerMillion = Some(200000L))).toMap
     assert(funnel("pii_gated") == 2L, funnel.toString)
+    // quality_kept counts the frame that gets split, after the PII gate
+    assert(funnel("quality_kept") == 2L, funnel.toString)
     assert(funnel("written") == 2L, funnel.toString)
     val kept = spark.read.parquet(out).select("doc_id")
       .as[Long].collect().toSet
@@ -362,5 +364,56 @@ class CurateSpec extends SparkSpec {
     assert(Curate.parse(Seq("--max-cluster-size", "8", "in", "out"))
       .toOption.get.maxClusterSize.contains(8L))
     assert(Curate.parse(Seq("--max-cluster-size", "1", "in", "out")).isLeft)
+  }
+
+  test("a gate that drops every document writes nothing and reads nothing back") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-curate-pii-all").toString
+    Seq((1L, "contact me at alice@example.com for the table scan rows", "en", "s0"),
+      (2L, "call 5551234567 now or 5559876543 later ref 1234567 ok", "en", "s0"))
+      .toDF("doc_id", "text", "lang", "source")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    // the PII gate alone, then with the LR gate and chunking after it: the
+    // later stages must pass the empty survivor set through
+    for (extra <- Seq(Seq.empty[String],
+        Seq("--lr-target-lang", "en", "--min-lr-sigma-micro", "1000",
+          "--chunk-tokens", "4", "--shuffle-seed", "7"))) {
+      val out = java.nio.file.Files.createTempDirectory("graft-curate-pii0").toString
+      val cfg = Curate.parse(Seq("--min-quality", "0", "--max-pii-per-million", "0") ++
+        extra ++ Seq(dir, out)).toOption.get
+      val funnel = Curate.run(spark, cfg).toMap
+      assert(funnel("quality_filtered") == 2L, funnel.toString)
+      assert(funnel("pii_gated") == 0L, funnel.toString)
+      assert(Seq("lr_gated", "quality_kept", "written_units", "written")
+        .forall(funnel(_) == 0L), funnel.toString)
+    }
+  }
+
+  /** The product benchmark's curate gates (near-dup cluster cap, PII, LR,
+    * chunking, seeded shuffle).
+    */
+  private def benchGates(out: String): Curate.Config =
+    Curate.parse(Seq("--max-cluster-size", "3", "--max-pii-per-million", "20000",
+      "--lr-target-lang", "en", "--min-lr-sigma-micro", "1000",
+      "--chunk-tokens", "64", "--shuffle-seed", "7", sfDir, out)).toOption.get
+
+  test("one Curate.run with the benchmark gates runs one job per stage") {
+    val out = java.nio.file.Files.createTempDirectory("graft-curate-jobs").toString
+    val (funnel, jobs) = jobsOf(Curate.run(spark, benchGates(out)))
+    assert(funnel.toMap.apply("written") > 0, funnel.toString)
+    // per stage one counting job plus its shuffle-map jobs; the LR gate adds
+    // its NB init and one aggregate job per GD step. The run takes 47 jobs
+    // here; eager checkpoints plus recounts and per-step SQL took 110
+    val lrJobs = jobs.count(_.contains("LogReg.scala"))
+    assert(lrJobs <= 1 + graft.queries.TextQueries.LrSteps, jobs.mkString("\n"))
+    assert(jobs.size <= 55, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+  }
+
+  test("Curate.run leaves no persisted RDD behind") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = java.nio.file.Files.createTempDirectory("graft-curate-leak").toString
+    Curate.run(spark, benchGates(out))
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+    assert(left.isEmpty, left.values.map(r => s"${r.id}: ${r.name} ${r}").mkString("\n"))
   }
 }

@@ -14,7 +14,7 @@ import graft.queries.DriftQueries
 class DriftSpec extends SparkSpec {
   import spark.implicits._
 
-  private def run(name: String) = DriftQueries.entries(name).fn(spark, sfDir)
+  private def run(name: String) = QueryRegistry.all(name).fn(spark, sfDir)
 
   test("ev_user_entropy: bands partition all users; exact vs driver-side mirror") {
     val ev = Readers.fixture(spark, sfDir, "events")

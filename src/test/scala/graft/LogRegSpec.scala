@@ -79,15 +79,15 @@ class LogRegSpec extends SparkSpec {
   test("GD fine-tune never regresses the NB init and beats the base rate") {
     val docs = Readers.fixture(spark, sfDir, "documents")
     val nDocs = docs.count()
-    val x = LogReg.features(docs, "doc_id", "text", col("lang") === "en",
-      queries.TextQueries.LrBuckets).localCheckpoint()
-    val init = LogReg.nbInit(x, queries.TextQueries.LrBuckets)
+    val x = LogReg.stage(LogReg.features(docs, "doc_id", "text", col("lang") === "en",
+      queries.TextQueries.LrBuckets), queries.TextQueries.LrBuckets)
+    val init = x.nbInit()
     def correct(w: Array[Long]): Long =
-      LogReg.score(spark, x, w).filter(col("y") === col("pred")).count()
+      x.score(w).filter(col("y") === col("pred")).count()
     val initCorrect = correct(init)
-    val w = LogReg.trainWeights(spark, x, nDocs, queries.TextQueries.LrBuckets,
-      queries.TextQueries.LrSteps, queries.TextQueries.LrNum,
-      queries.TextQueries.LrDen, init = Some(init))
+    val w = x.trainWeights(nDocs, queries.TextQueries.LrSteps,
+      queries.TextQueries.LrNum, queries.TextQueries.LrDen, init = Some(init))
+    x.close()
     val finalCorrect = correct(w)
     val baseRate = math.max(
       docs.filter(col("lang") === "en").count(),
@@ -103,10 +103,10 @@ class LogRegSpec extends SparkSpec {
     val docs = Readers.fixture(spark, sfDir, "documents")
     val nDocs = docs.count()
     val buckets = 64
-    val x = LogReg.features(docs, "doc_id", "text", col("lang") === "en", buckets)
-      .localCheckpoint()
-    val w = LogReg.trainWeights(spark, x, nDocs, buckets, 2, 1L, 1L,
-      init = Some(LogReg.nbInit(x, buckets)))
+    val x = LogReg.stage(
+      LogReg.features(docs, "doc_id", "text", col("lang") === "en", buckets), buckets)
+    val w = x.trainWeights(nDocs, 2, 1L, 1L, init = Some(x.nbInit()))
+    x.close()
     // batch truth over the same corpus
     val batch = LogReg.scoreRows(docs, "doc_id", "text", w, buckets)
       .orderBy("doc_id").as[(Long, Long, Long)].collect().toSeq
@@ -142,10 +142,10 @@ class LogRegSpec extends SparkSpec {
   test("persisted model round-trips exactly and the feature-space guard fails loudly") {
     val docs = Readers.fixture(spark, sfDir, "documents")
     val buckets = 64
-    val x = LogReg.features(docs, "doc_id", "text", col("lang") === "en", buckets)
-      .localCheckpoint()
-    val w = LogReg.trainWeights(spark, x, docs.count(), buckets, 2, 1L, 1L,
-      init = Some(LogReg.nbInit(x, buckets)))
+    val x = LogReg.stage(
+      LogReg.features(docs, "doc_id", "text", col("lang") === "en", buckets), buckets)
+    val w = x.trainWeights(docs.count(), 2, 1L, 1L, init = Some(x.nbInit()))
+    x.close()
     val path = java.nio.file.Files
       .createTempDirectory("graft-lr-m").resolve("m").toString
     LogReg.writeModel(spark, path, w, buckets)
@@ -200,10 +200,12 @@ class LogRegSpec extends SparkSpec {
     // nDocs=0 previously threw ArithmeticException mid-loop while the duck
     // twin's integer division yielded NULL weights — loud, at entry, now
     val docs = Readers.fixture(spark, sfDir, "documents")
-    val x = LogReg.features(docs, "doc_id", "text", col("lang") === "en", 64)
+    val x = LogReg.stage(
+      LogReg.features(docs, "doc_id", "text", col("lang") === "en", 64), 64)
     val e = intercept[IllegalArgumentException] {
-      LogReg.trainWeights(spark, x, 0L, 64, 1, 1L, 1L)
+      x.trainWeights(0L, 1, 1L, 1L)
     }
+    x.close()
     assert(e.getMessage.contains("nDocs=0"))
   }
 
@@ -216,12 +218,122 @@ class LogRegSpec extends SparkSpec {
         if (d % 3 == 0) "en" else "xx")
     }.toDF("doc_id", "text", "lang")
     val buckets = 64
-    val x = LogReg.features(docs, "doc_id", "text", col("lang") === "en", buckets)
-      .localCheckpoint()
-    assert(x.select("bkt").distinct().count() <= buckets + 1)
-    val w = LogReg.trainWeights(spark, x, 200L, buckets, 2, 1L, 1L,
-      init = Some(LogReg.nbInit(x, buckets)))
+    val feats = LogReg.features(docs, "doc_id", "text", col("lang") === "en", buckets)
+    assert(feats.select("bkt").distinct().count() <= buckets + 1)
+    val x = LogReg.stage(feats, buckets)
+    val w = x.trainWeights(200L, 2, 1L, 1L, init = Some(x.nbInit()))
+    x.close()
     assert(w.length == buckets + 1)
     assert(LogReg.weightsTable(spark, w).count() == buckets + 1)
+  }
+
+  // ---- the SQL training path the staged kernel replaced, kept as its
+  // reference: margins grouped by (doc_id, y), the gradient joined on
+  // doc_id alone, one broadcast weight join per step
+
+  private def weightsDf(w: Array[Long]) = {
+    val spark2 = spark; import spark2.implicits._
+    w.toSeq.zipWithIndex.map { case (wv, b) => (b.toLong, wv) }.toDF("bkt", "w")
+  }
+
+  private def sqlScore(x: org.apache.spark.sql.DataFrame, w: Array[Long]) =
+    LogReg.withSigmoid(
+      x.join(broadcast(weightsDf(w)), "bkt").groupBy(col("doc_id"), col("y"))
+        .agg(sum(col("cnt") * col("w")).as("z")), "z", "sigma")
+      .withColumn("pred", (col("sigma") >= 500000L).cast("long"))
+
+  private def sqlStep(x: org.apache.spark.sql.DataFrame, w: Array[Long],
+                      nDocs: Long, lrNum: Long, lrDen: Long): Array[Long] = {
+    val grads = x.join(sqlScore(x, w).select(col("doc_id"), col("sigma")), "doc_id")
+      .groupBy(col("bkt"))
+      .agg(sum((col("sigma") - col("y") * 1000000L) * col("cnt")).as("g"))
+      .collect()
+    val out = w.clone()
+    // a bucket whose every term has a null label sums to NULL: no gradient
+    grads.filter(!_.isNullAt(1)).foreach { r =>
+      val b = r.getLong(0).toInt
+      val g = r.getLong(1)
+      out(b) -= math.signum(g) * (math.abs(g) * lrNum / (lrDen * nDocs))
+    }
+    out
+  }
+
+  private def sqlNbInit(x: org.apache.spark.sql.DataFrame, buckets: Int): Array[Long] = {
+    import graft.operators.Selection.lnMicroLong
+    val counts = x.filter(col("bkt") < buckets).groupBy(col("bkt")).agg(
+      sum(when(col("y") === 1L, col("cnt")).otherwise(0L)).as("n_t"),
+      sum(when(col("y") === 0L, col("cnt")).otherwise(0L)).as("n_r")).collect()
+    val tt = counts.map(_.getLong(1)).sum + buckets
+    val tr = counts.map(_.getLong(2)).sum + buckets
+    val w = Array.fill(buckets + 1)(lnMicroLong(tr) - lnMicroLong(tt))
+    counts.foreach { r =>
+      w(r.getLong(0).toInt) = lnMicroLong(r.getLong(1) + 1) - lnMicroLong(tt) -
+        (lnMicroLong(r.getLong(2) + 1) - lnMicroLong(tr))
+    }
+    val pr = x.filter(col("bkt") === buckets).agg(
+      sum(col("y")).as("np"), sum(lit(1L) - col("y")).as("nn")).head()
+    w(buckets) = lnMicroLong(pr.getLong(0) + 1) - lnMicroLong(pr.getLong(1) + 1)
+    w
+  }
+
+  /** A random (doc_id, y, bkt, cnt) frame: every document has a bias row,
+    * some labels are null, doc 1 carries both labels, and a few rows have
+    * a null doc_id.
+    */
+  private def randomFeatures(seed: Int, buckets: Int) = {
+    val spark2 = spark; import spark2.implicits._
+    val rnd = new scala.util.Random(seed)
+    val rows: Seq[(Option[Long], Option[Long], Long, Long)] = (1L to 40L).flatMap { d =>
+      val y: Option[Long] = if (d % 7 == 3) None else Some(rnd.nextInt(2).toLong)
+      val feats = rnd.shuffle((0 until buckets).toList).take(1 + rnd.nextInt(buckets / 2))
+      (Some(d), y, buckets.toLong, 1L) +:
+        feats.map(b => (Some(d), y, b.toLong, 1L + rnd.nextInt(3)))
+    } ++ Seq((Some(1L), Some(0L), 0L, 2L), (Some(1L), Some(0L), buckets.toLong, 1L),
+      (Some(1L), Some(1L), 3L, 1L), (Some(1L), Some(1L), buckets.toLong, 1L),
+      (None, Some(1L), 1L, 1L), (None, None, 2L, 1L))
+    rows.toDF("doc_id", "y", "bkt", "cnt")
+  }
+
+  test("staged kernel equals the SQL reference: NB init, each GD step, scores") {
+    val buckets = 16
+    for (seed <- Seq(1, 2, 3)) {
+      val x = randomFeatures(seed, buckets)
+      val staged = LogReg.stage(x, buckets)
+      try {
+        val init = staged.nbInit()
+        assert(init.toSeq == sqlNbInit(x, buckets).toSeq, s"seed $seed: NB init")
+        // from NB init and from random weights, one step at a time
+        val rnd = new scala.util.Random(seed)
+        val randomW = Array.fill(buckets + 1)(rnd.nextInt(6000001).toLong - 3000000L)
+        for (w0 <- Seq(init, randomW)) {
+          var w = w0
+          for (step <- 1 to 3) {
+            val want = sqlStep(x, w, 41L, 2L, 1L)
+            val got = staged.trainWeights(41L, 1, 2L, 1L, init = Some(w))
+            assert(got.toSeq == want.toSeq, s"seed $seed step $step")
+            w = got
+          }
+          def rowSet(df: org.apache.spark.sql.DataFrame) =
+            df.select("doc_id", "y", "z", "sigma", "pred").collect()
+              .map(r => (0 until 5).map(i => if (r.isNullAt(i)) None else Some(r.getLong(i))))
+              .toSet
+          assert(rowSet(staged.score(w)) == rowSet(sqlScore(x, w)), s"seed $seed scores")
+        }
+        // the multi-step loop is the step applied repeatedly
+        val stepped = (1 to 3).foldLeft(init)((w, _) => sqlStep(x, w, 41L, 2L, 1L))
+        assert(staged.trainWeights(41L, 3, 2L, 1L, init = Some(init)).toSeq == stepped.toSeq)
+      } finally staged.close()
+    }
+  }
+
+  test("staged kernel overflows the way ANSI SQL sum does") {
+    val spark2 = spark; import spark2.implicits._
+    val x = Seq((1L, 1L, 0L, Long.MaxValue / 2), (1L, 1L, 1L, 1L)).toDF("doc_id", "y", "bkt", "cnt")
+    val staged = LogReg.stage(x, 1)
+    try {
+      val e = intercept[Exception](staged.trainWeights(1L, 1, 1L, 1L, init = Some(Array(4L, 0L))))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), e.toString)
+    } finally staged.close()
   }
 }

@@ -665,13 +665,13 @@ class PlanSpec extends SparkSpec {
       s"hashed feature space leaked past the bucket bound: $distinctF")
   }
 
-  test("LR scorecard joins broadcast only bounded sides (weights table, per-doc margins)") {
-    // the trained-filter scoring join must broadcast the 1025-row weights
-    // table keyed on the hashed bucket `bkt` (never a vocabulary-sized
-    // side), and nothing in the plan may shuffle on a raw-token column
+  test("LR scorecard scores staged records: no join, no raw-bigram shuffle") {
+    // the trained weights (1025 longs) ship to the scoring tasks, which
+    // read the staged per-document feature records: the plan joins
+    // nothing (never a vocabulary-sized side) and nothing in it may
+    // shuffle on a raw-token column
     val plan = physicalPlan("text_lr_scorecard")
-    val joins = "BroadcastHashJoin \\[(\\w+)#".r.findAllMatchIn(plan).map(_.group(1)).toSeq
-    assert(joins.contains("bkt"), s"no bucket-keyed broadcast join in keys $joins:\n" +
+    assert(plan.contains("Scan ExistingRDD") && !plan.contains("Join"),
       plan.linesIterator.take(30).mkString("\n"))
     assert(!plan.contains("hashpartitioning(bg#") && !plan.contains("hashpartitioning(g#"),
       "scoring shuffles on a raw-bigram column")

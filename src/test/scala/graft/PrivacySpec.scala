@@ -69,7 +69,7 @@ class PrivacySpec extends SparkSpec {
       .groupBy(identity).map { case (s, cs) =>
         (s, (cs.size.toLong, s * cs.size))
       }
-    val got = PrivacyQueries.entries("ev_k_anonymity").fn(spark, sfDir)
+    val got = QueryRegistry.all("ev_k_anonymity").fn(spark, sfDir)
       .as[(Long, Long, Long)].collect()
       .map { case (s, c, u) => (s, (c, u)) }.toMap
     assert(got == expected)

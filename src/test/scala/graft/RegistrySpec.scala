@@ -42,12 +42,21 @@ class RegistrySpec extends SparkSpec {
   }
 
   test("query names are unique across modules; a duplicate fails, naming it") {
-    val names = QueryRegistry.modules.flatMap(_.keys)
+    val names = QueryRegistry.modules.flatMap(_.map(_._1))
     assert(names.distinct.size == names.size)
     assert(QueryRegistry.all.size == names.size)
     val e = intercept[IllegalArgumentException] {
       QueryRegistry.merge(Seq(QueryRegistry.modules.head, QueryRegistry.modules.head.take(1)))
     }
-    assert(e.getMessage.contains(QueryRegistry.modules.head.keys.head), e.getMessage)
+    assert(e.getMessage.contains(QueryRegistry.modules.head.head._1), e.getMessage)
+  }
+
+  test("a name repeated inside one module fails the merge, naming it") {
+    val entry = QueryEntry((s, _) => s.emptyDataFrame)
+    val e = intercept[IllegalArgumentException] {
+      QueryRegistry.merge(Seq(Seq("dup_q" -> entry, "other_q" -> entry, "dup_q" -> entry)))
+    }
+    assert(e.getMessage.contains("dup_q"), e.getMessage)
+    assert(!e.getMessage.contains("other_q"), e.getMessage)
   }
 }

@@ -259,12 +259,14 @@ class StagingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.operators.LogReg
     import graft.queries.TextQueries
-    val x = TextQueries.lrFeatures(spark, sfDir).filter(col("doc_id") % 10 =!= 9)
-    val fresh = LogReg.trainWeights(spark, x,
+    val x = LogReg.stage(TextQueries.lrFeatures(spark, sfDir)
+      .filter(col("doc_id") % 10 =!= 9), TextQueries.LrBuckets)
+    val fresh = x.trainWeights(
       Readers.fixture(spark, sfDir, "documents")
         .filter(col("doc_id") % 10 =!= 9).count(),
-      TextQueries.LrBuckets, TextQueries.LrSteps, TextQueries.LrNum,
-      TextQueries.LrDen, init = Some(LogReg.nbInit(x, TextQueries.LrBuckets)))
+      TextQueries.LrSteps, TextQueries.LrNum,
+      TextQueries.LrDen, init = Some(x.nbInit()))
+    x.close()
     assert(TextQueries.lrBaseTrained(spark, sfDir).toSeq == fresh.toSeq)
   }
 
