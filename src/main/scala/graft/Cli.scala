@@ -446,16 +446,7 @@ object Main {
         println(msg)
         if (msg != Cli.helpText) sys.exit(2)
       case Right(cfg) =>
-        val spark = SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-          .appName("graft")
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-          .getOrCreate()
+        val spark = Sessions.local("local[*]", 32)
         spark.sparkContext.setLogLevel(cfg.level match {
           case "debug" | "trace" => "INFO"
           case "warn" | "error"  => "ERROR"

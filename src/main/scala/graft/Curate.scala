@@ -395,7 +395,9 @@ object Curate {
       val xentGated = cfg.maxXentMicro.fold(quality) { cap =>
         val x = graft.operators.Vocab.lmXent(quality.df, "doc_id", "text")
         val heavy = x.filter(col("mean_xent_micro") > cap).select("doc_id")
-        stage(quality.df.join(heavy, Seq("doc_id"), "left_anti"))
+        // lmXent persists its bigram frame; the counted stage no longer needs it
+        try stage(quality.df.join(heavy, Seq("doc_id"), "left_anti"))
+        finally Staging.releaseCaches(x)
       }
 
       // optional PII safety gate (the text_pii_scan detectors per document):
@@ -429,10 +431,14 @@ object Curate {
           // dsirWeights left-joins every document, so the ranked frame has
           // exactly the redacted stage's rows
           val keep = ranked.filter(col("rnk") * 100L <= redacted.n * pct).select("doc_id")
-          val out = stage(redacted.df.join(keep, Seq("doc_id"), "left_semi"))
-          ranked.unpersist(blocking = false)
-          Staging.releaseFrame(ranked)
-          out
+          // dsirWeights persists its bucketed bigram frame: release it with
+          // the rank frame once the stage is counted
+          try stage(redacted.df.join(keep, Seq("doc_id"), "left_semi"))
+          finally {
+            ranked.unpersist(blocking = false)
+            Staging.releaseFrame(ranked)
+            Staging.releaseCaches(w)
+          }
         case _ => redacted
       }
 
@@ -544,16 +550,7 @@ object Curate {
         if (msg == helpText) println(msg)
         else { Console.err.println(msg); sys.exit(2) }
       case Right(cfg) =>
-        val spark = SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-          .config("spark.sql.adaptive.enabled", "true")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = Sessions.local("local[*]", 32)
         val funnel = run(spark, cfg)
         println(funnel.map { case (k, v) => s""""$k":$v""" }
           .mkString("{", ",", s""","out":"${cfg.outDir}"}"""))

@@ -98,6 +98,21 @@ object Staging {
   def releaseFrame(ds: Dataset[_]): Unit =
     checkpointRdds(ds).foreach(r => Try(r.unpersist(blocking = false)))
 
+  /** Uncache every `persist()`-ed frame that `ds` reads — the release seam
+    * for operators that persist an internal intermediate and return a frame
+    * derived from it (Selection.dsirWeights, Vocab.lmXent). Call it only
+    * once nothing still needs those caches, and only on a frame whose cached
+    * inputs the caller owns: a cached frame shared with other code would be
+    * dropped too.
+    */
+  def releaseCaches(ds: Dataset[_]): Unit = {
+    val spark = ds.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    ds.queryExecution.withCachedData.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder.logicalPlan
+    }.foreach(p => Try(spark.sharedState.cacheManager
+      .uncacheQuery(spark, p, cascade = false, blocking = false)))
+  }
+
   /** The RDDs behind a frame's `LogicalRDD` leaves — for a localCheckpoint-ed
     * frame (or anything derived from one) these are exactly the persisted
     * checkpoint RDDs; unpersisting a never-persisted LogicalRDD (e.g. a

@@ -75,14 +75,15 @@ object Graph {
     // UnknownPartitioning(0); an explicit repartition before the checkpoint
     // is therefore pure build-time cost) reaches the per-round join's
     // EnsureRequirements, so the |E|-frame exchange per round is a floor
-    // (R14Prim + plans/r14 dumps). What the checkpoint DOES buy, and why it
-    // replaced persist: lineage truncation (final plan 1347 → 654 lines —
-    // every barrier/result action re-analyzes a two-node tree, the kCore
-    // lesson) and ACCURATE LogicalRDD stats for AQE's per-round planning
-    // (R14Prim: fixture-scale edge frames flip SMJ → BHJ on checkpointed
-    // inputs where the same persisted frames stayed SMJ). Probed
-    // q_pagerank 3.07 → 2.46 s, q_ppr_seeds 2.79 → 2.28 s min-of-3. The two
-    // independent eager materializations overlap as Futures (§2.6).
+    // (OPTIMIZATION_r14.md item 5 + plans/r14 dumps). What the checkpoint
+    // DOES buy, and why it replaced persist: lineage truncation (final plan
+    // 1347 → 654 lines — every barrier/result action re-analyzes a two-node
+    // tree, the kCore lesson) and ACCURATE LogicalRDD stats for AQE's
+    // per-round planning (OPTIMIZATION_r14.md item 5: fixture-scale edge
+    // frames flip SMJ → BHJ on checkpointed inputs where the same persisted
+    // frames stayed SMJ). Probed q_pagerank 3.07 → 2.46 s, q_ppr_seeds
+    // 2.79 → 2.28 s min-of-3. The two independent eager materializations
+    // overlap as Futures (§2.6).
     val withDegExpr = e
       .join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), Seq("src"))
     val nodeSet = e.select(col("src").as("node"))

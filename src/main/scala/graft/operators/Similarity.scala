@@ -387,11 +387,6 @@ object Similarity {
     rankTopK(scored, "cos_micro", k)
   }
 
-  def ivfTopK(vectors: DataFrame, queryFilter: Column, k: Int, numCentroids: Int,
-              nprobe: Int = 1): DataFrame =
-    searchAssigned(ivfAssignRanked(vectors, numCentroids).persist(),
-      queryFilter, k, nprobe)
-
   /** IVF search over TRAINED centroids — the train → assign → probe story
     * end to end inside the engine ([[graft.operators.KMeans.train]] produces
     * `cent`).
@@ -479,7 +474,9 @@ object Similarity {
          FROM embeddings v CROSS JOIN cent c) AS a WHERE rn <= $nprobe)"""
   }
 
-  /** DuckDB twin of [[ivfTopK]]. `queryPred` references the `assign` CTE. */
+  /** DuckDB twin of [[searchRanked]] over [[ivfAssignRanked]] (the sampled
+    * centroids). `queryPred` references the `assign` CTE.
+    */
   def duckIvfTopK(k: Int, numCentroids: Int, queryPred: String, nprobe: Int = 1): String = {
     s"""WITH ${duckIvfAssignCtes(numCentroids, nprobe)}
        SELECT query_id, neighbor_id, cos_micro, rank FROM (

@@ -220,8 +220,9 @@ object Sketches {
     * aggregate per side, mergeable per shard — WITHOUT running the join.
     * The estimate join itself touches ≤ 2·depth·width counter rows.
     *
-    * SIZING RULE (measured, Sf1Probe join_size family): the per-lane
-    * collision term is ‖A‖₁·‖B‖₁/width, so holding RELATIVE error needs
+    * SIZING RULE (measured at ×10; BASELINE.md, "Round-8 continuation-3",
+    * the join-size family): the per-lane collision term is
+    * ‖A‖₁·‖B‖₁/width, so holding RELATIVE error needs
     * width ∝ the L1 product — at fixed 64k width the overestimate grew
     * 3.28× → 23.9× from 750k to 7.5M keys; with width scaled 10× alongside
     * the data it held 3.281 → 3.287. The scaled sketch is still ~5 MB of

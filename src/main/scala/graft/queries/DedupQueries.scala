@@ -304,8 +304,9 @@ object DedupQueries {
     // are absent by construction (resolved at their own ingest). O(delta +
     // index) per ingest, the dedup analogue of pv_merkle_incremental. Both
     // sides here SLICE the staged signature frame (the staged frame IS the
-    // persisted index in this harness); the shingle-only-the-delta path is
-    // executed and probed by IngestProbe/Sf1Probe
+    // persisted index in this harness); the shingle-only-the-delta path was
+    // measured at scale (IMPLEMENTATION.md, "Incremental-ingest dedup", and
+    // BASELINE.md, "Round-10 continuation: ingest-gate probes")
     "dedup_incremental" -> QueryEntry(
       fn = (spark, sfDir) => {
         val sigs = DedupStaging.signatures(spark, sfDir)

@@ -1537,8 +1537,9 @@ object EventQueries {
         // cost is join-state machinery, not the source scan. State
         // partitioning is sized by runToBatch (the interval join runs FOUR
         // state stores per partition and commits all of them every
-        // microbatch — StreamProbes r13: 32p = 6.2-7.6 s vs 8p = 2.5-2.9 s,
-        // identical output, batch-equivalent compute 0.5-1.6 s).
+        // microbatch — BASELINE.md, "Heavy streaming twins attributed":
+        // 32p = 6.2-7.6 s vs 8p = 2.5-2.9 s, identical output,
+        // batch-equivalent compute 0.5-1.6 s).
         val ev = graft.streaming.EventStreams.readEvents(spark, rawEventsDir(sfDir))
         val joined = graft.streaming.EventStreams.attributionJoin(ev, ev, AttributionUs)
         graft.streaming.EventStreams.runToBatch(joined,

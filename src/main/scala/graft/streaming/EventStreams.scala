@@ -598,8 +598,9 @@ object EventStreams {
       .start()
 
   /** Floor on derived streaming state partitions — the measured fixture
-    * optimum (StreamProbes r13: the 4-store interval join read 6.2-7.6 s at
-    * 32 partitions vs 2.5-2.9 s at 8, identical output): below this the
+    * optimum (BASELINE.md, "Heavy streaming twins attributed": the 4-store
+    * interval join read 6.2-7.6 s at 32 partitions vs 2.5-2.9 s at 8,
+    * identical output): below this the
     * per-microbatch state-store commit overhead is already negligible and
     * fewer partitions only serializes the compute.
     */

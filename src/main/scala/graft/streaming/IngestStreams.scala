@@ -172,9 +172,10 @@ object IngestStreams {
     // microbatch (and the single-file batch fixture) otherwise plans as one
     // partition, so the tokenize→shingle→probe pipeline ran on one core —
     // the whole gap between this twin (~5 s) and contaminatedIds (~0.7 s)
-    // in the r13 StreamProbes decomposition. A stateless repartition is
-    // legal ahead of the stateful dedup; it moves each arriving doc's text
-    // once — bounded by the delta, and a no-op cost-wise when the batch
+    // in the round-13 decomposition (BASELINE.md, "Heavy streaming twins
+    // attributed"). A stateless repartition is legal ahead of the stateful
+    // dedup; it moves each arriving doc's text once — bounded by the delta,
+    // and a no-op cost-wise when the batch
     // already arrives as many splits (the 100 TB case).
     docs.filter(col(textCol).isNotNull)
       .repartition(docs.sparkSession.sparkContext.defaultParallelism,

@@ -410,10 +410,51 @@ class CurateSpec extends SparkSpec {
 
   test("Curate.run leaves no persisted RDD behind") {
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = java.nio.file.Files.createTempDirectory("graft-curate-leak").toString
-    Curate.run(spark, benchGates(out))
-    val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
-    assert(left.isEmpty, left.values.map(r => s"${r.id}: ${r.name} ${r}").mkString("\n"))
+    // the benchmark's gates, then the perplexity and DSIR gates, whose
+    // operators persist an internal frame of their own
+    val gateSets = Seq(benchGates(_),
+      (out: String) => Curate.parse(Seq("--max-xent-micro", "3500000",
+        "--dsir-target-lang", "en", "--dsir-keep-pct", "50", sfDir, out)).toOption.get)
+    gateSets.foreach { gates =>
+      val before = sc.getPersistentRDDs.keySet
+      val out = java.nio.file.Files.createTempDirectory("graft-curate-leak").toString
+      Curate.run(spark, gates(out))
+      val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+      assert(left.isEmpty, left.values.map(r => s"${r.id}: ${r.name} ${r}").mkString("\n"))
+    }
+  }
+
+  test("Curate.run reads a corpus that carries a TIMESTAMP(NANOS) column") {
+    // pandas writes datetime columns as TIMESTAMP(NANOS) by default; Spark
+    // rejects that type unless the session reads it as int64 (Sessions)
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select("doc_id", "text", "lang", "source").collect()
+    val dir = java.nio.file.Files.createTempDirectory("graft-curate-nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      """message documents {
+        |  required int64 doc_id;
+        |  optional binary text (STRING);
+        |  optional binary lang (STRING);
+        |  optional binary source (STRING);
+        |  required int64 fetched_at (TIMESTAMP(NANOS,false));
+        |}""".stripMargin)
+    val rows = new SimpleGroupFactory(schema)
+    val writer = ExampleParquetWriter.builder(new Path(s"$dir/documents.parquet"))
+      .withType(schema).build()
+    try docs.foreach { r =>
+      val g = rows.newGroup().append("doc_id", r.getLong(0))
+      Seq("text", "lang", "source").zipWithIndex.foreach { case (c, i) =>
+        if (!r.isNullAt(i + 1)) g.append(c, r.getString(i + 1))
+      }
+      writer.write(g.append("fetched_at", 1700000000000000000L + r.getLong(0)))
+    } finally writer.close()
+    val out = java.nio.file.Files.createTempDirectory("graft-curate-nanos-out").toString
+    val funnel = Curate.run(spark, Curate.Config(docsDir = dir, outDir = out)).toMap
+    assert(funnel("input") == docs.length, funnel.toString)
+    assert(funnel("written") > 0 && funnel("written") == funnel("quality_kept"), funnel.toString)
   }
 }

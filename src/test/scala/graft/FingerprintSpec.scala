@@ -110,8 +110,8 @@ class FingerprintSpec extends SparkSpec {
   test("streamed exact digest equals collect() digest across the threshold") {
     // the toLocalIterator path must be byte-identical to the collect() path
     // it replaces past streamingCollectRowLimit; force the threshold to both
-    // sides of a 200k-row frame (DigestProbe measures the same equivalence
-    // plus driver peak heap at 12M rows — numbers in IMPLEMENTATION.md)
+    // sides of a 200k-row frame (the same equivalence plus driver peak heap
+    // at 12M rows is recorded in IMPLEMENTATION.md)
     val big = spark.range(200000).select(col("id"),
       concat(lit("payload-"), col("id")).as("s"))
     val base = VerifyConfig(fullModeRowLimit = Long.MaxValue)

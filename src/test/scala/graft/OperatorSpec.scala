@@ -166,6 +166,31 @@ class OperatorSpec extends SparkSpec {
     assert(!plan.contains("Window"), plan)
   }
 
+  test("top-k aggregate equals the window rank it replaced, ties included") {
+    import org.apache.spark.sql.expressions.Window
+    // each of the first 50 vectors gets a twin under a new id, so every
+    // query meets exact score ties (its own twin among them)
+    val vecs = emb.select("vec_id", "embedding").union(emb.filter(col("vec_id") < 50)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
+    val queries = vecs.filter(col("vec_id") < 8)
+    val k = 10
+    val viaAgg = Similarity.topK(queries, vecs, k)
+      .select("query_id", "neighbor_id", "cos_micro", "rank")
+      .as[(Long, Long, Long, Long)].collect().toSet
+    val scored = vecs.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"))
+      .crossJoin(queries.select(col("vec_id").as("query_id"), col("embedding").as("qv")))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), Similarity.cosineScaledWithNorms(
+        col("qv"), col("nv"), Similarity.norm(col("qv")), Similarity.norm(col("nv"))).as("cos_micro"))
+    val viaWindow = scored
+      .withColumn("rank", row_number().over(Window.partitionBy("query_id")
+        .orderBy(col("cos_micro").desc, col("neighbor_id").asc)).cast("long"))
+      .filter(col("rank") <= k)
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(viaAgg.size == 8 * k)
+    assert(viaAgg == viaWindow, (viaAgg diff viaWindow, viaWindow diff viaAgg))
+  }
+
   test("JL sketch: projection is integer-exact and rerank recall holds its floor") {
     // the projection must be pure integers (the quantize-then-project
     // contract) and bit-stable: two runs produce identical sketches

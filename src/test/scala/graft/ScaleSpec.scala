@@ -22,6 +22,27 @@ class ScaleSpec extends SparkSpec {
     assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty)
   }
 
+  test("with broadcast joins off, the salted join shuffles and equals the plain join") {
+    import spark.implicits._
+    // salting exists for the shuffle join on a hot key; with broadcasts off
+    // it must stay a shuffle join (the salt is not planned away) and agree
+    // with the plain shuffle join row for row
+    val large = (1 to 2000).map(i => (if (i % 2 == 0) 0L else i.toLong % 100, i.toLong))
+      .toDF("k", "x")
+    val small = (0 until 100).map(i => (i.toLong, s"dim-$i")).toDF("k", "d")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val plain = large.join(small, "k")
+      val salted = SkewJoin.saltedJoin(large, small, "k", salt = 8)
+      assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty)
+      salted.collect()
+      val plan = salted.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastHashJoin") && plan.contains("SortMergeJoin"), plan)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("bucketed tables join without a shuffle exchange") {
     // tables land in ./spark-warehouse (gitignored); warehouse.dir is static.
     // DROP only clears the in-memory catalog — a previous JVM's directories
