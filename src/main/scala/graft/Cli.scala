@@ -254,7 +254,9 @@ object Cli {
 
   /** `--drill-down`: for each inconsistent table, report which rows differ
     * ([[RowDiff.diff]]) and which columns within the rows present on both
-    * sides ([[RowDiff.diffColumns]]), capped at 20 rendered rows per table.
+    * sides ([[RowDiff.diffColumns]]), capped at 20 rendered rows per table;
+    * both reports come from one query over one PK join
+    * ([[RowDiff.firstDiffs]]).
     * Spark's default case-insensitive resolution lines the join up across
     * heterogeneous identifier casing (Derby `ID` vs parquet `id`).
     *
@@ -286,13 +288,11 @@ object Cli {
     def diffPair(ta: Target, wa: VerifyRun.TableWork, tb: Target,
                  wb: VerifyRun.TableWork, labels: String)(out: Writer): Unit =
       scala.util.Try {
-        val (a, b) = (wa.df, wb.df)
-        val rows = RowDiff.diff(a, b, wa.spec, cfg.verifyConfig).limit(20)
+        val (rows, cols) = RowDiff.firstDiffs(wa.df, wb.df, wa.spec, cfg.verifyConfig, 20)
         out.write(s"\ndrill-down rows: ${wa.schema}.${wa.table} ($labels, first 20)\n")
-        VerifyRun.renderTable(rows, rows.columns.toSeq, out)
-        val cols = RowDiff.diffColumns(a, b, wa.spec, cfg.verifyConfig).limit(20)
+        VerifyRun.renderRows(wa.spec.pks :+ "status", rows, out)
         out.write(s"drill-down columns: ${wa.schema}.${wa.table} (first 20)\n")
-        VerifyRun.renderTable(cols, cols.columns.toSeq, out)
+        VerifyRun.renderRows(wa.spec.pks :+ "column_name", cols, out)
       }.recover { case e =>
         out.write(s"\ndrill-down: ${wa.schema}.${wa.table} failed: ${e.getMessage}\n")
       }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Staging
+import graft.core.{Readers, Staging}
 import graft.operators.{Corpus, DedupClusters, MinHashLSH, TextAnalysis}
 
 /** `graft-curate` — the training-data product surface: one command running
@@ -280,7 +280,7 @@ object Curate {
       Stage(c, c.queryExecution.toRdd.count())
     }
     try {
-      val docs = spark.read.parquet(s"${cfg.docsDir}/documents.parquet")
+      val docs = Readers.parquet(spark, s"${cfg.docsDir}/documents.parquet")
       val input = Stage(docs, docs.count())
 
       // exact dedup: keep the smallest id per distinct text

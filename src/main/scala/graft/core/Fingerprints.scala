@@ -26,12 +26,16 @@ case class VerifyConfig(
     // variant is the default rather than a caller opt-in. Both sides of a
     // comparison share the config, so both degrade identically.
     fullModeRowLimit: Long = 100000000L,
-    // row count above which the exact digest stops collect()-ing the sorted
-    // hashes into one driver array (32 B/row — 10M rows ≈ 320 MB) and
-    // streams them via toLocalIterator instead (driver holds one partition
-    // at a time), extending exact parity to fullModeRowLimit without a
-    // driver-heap cliff. Below it, collect() wins: one job, where
-    // toLocalIterator schedules a job per partition (~2× at bench scale).
+    // row count above which the exact digest stops collect()-ing the hashes
+    // into one driver array and streams them via toLocalIterator instead
+    // (driver holds one partition at a time), extending exact parity to
+    // fullModeRowLimit without a driver-heap cliff. A collected row carries
+    // the 32-char hash AND its sort key k (the driver merges the
+    // per-partition sorted runs by k), so the driver's per-row budget is
+    // 32 B plus the canonical PK text: 10M rows keyed by a 7-digit integer
+    // carry ≈ 390 MB of hashes and keys. Below it, collect() wins: one job,
+    // where toLocalIterator schedules a job per partition (~2× at bench
+    // scale).
     streamingCollectRowLimit: Long = 10000000L,
     merkleBuckets: Int = 1024)
 
@@ -56,8 +60,10 @@ object TestModes {
   *     gzip, a single hot file) does a pre-projection repartition fire
   *     ([[Readers.spreadBySize]]'s splittability gate) so the md5 work is
   *     not pipelined into one task.
-  *   - `exactDigest` needs a global PK-order — a range-partition exchange
-  *     (parallel sort) followed by a sequential driver-side MD5 chain.
+  *   - The exact digest needs a global PK-order: each partition sorts its
+  *     rows in parallel and the driver merges the sorted runs (past
+  *     `streamingCollectRowLimit`, a range-partition exchange and global
+  *     sort instead), followed by a sequential driver-side MD5 chain.
   *     MD5-chaining is inherently sequential, so byte-parity with the
   *     reference's `md5(string_agg(...))` cannot be parallelized further;
   *     use it when the literal reference fingerprint is required.
@@ -102,33 +108,60 @@ object Fingerprints {
       Canon.rowHash(df.schema, cols, cfg.tsPrecision, spec.jsonColumns).as("h"))
   }
 
-  /** Digest an already-(k,h)-projected frame in exact global (k,h) order:
-    * parallel range-partitioned sort, then a driver-side MD5 chain over the
-    * hashes (32 bytes/row — 600k rows is ~19 MB). Equal to SQL
-    * `md5(string_agg(h, '' ORDER BY k, h))`.
+  /** Digest an already-(k,h)-projected frame in exact global (k,h) order —
+    * SQL `md5(string_agg(h, '' ORDER BY k, h))` — through a driver-side MD5
+    * chain over the hashes.
     *
     * The MD5 chain is inherently sequential, so the exact-parity fingerprint
     * is driver-bound by construction (like the reference's single-node
     * `string_agg`, README.md:69); at real scale [[merkleDigest]]'s combine is
-    * parallel. Below `streamLimit` rows the sorted hashes are collect()-ed
-    * (one job — fastest at bench scale); when the caller KNOWS the count
-    * exceeds it, the sorted column streams through toLocalIterator so driver
-    * memory is one partition, not the table — exact parity holds another
-    * order of magnitude before the Merkle degrade. Callers without a cheap
-    * count (the single-mode sparse paths) pass None and keep collect().
+    * parallel. Below `streamLimit` rows the hashes are collected in
+    * partition-sorted runs and merged on the driver ([[collectSorted]]: one
+    * job, no exchange, no range sampling). When the caller KNOWS the count
+    * exceeds it, Spark sorts globally and the hashes stream through
+    * toLocalIterator, so driver memory is one partition, not the table —
+    * exact parity holds another order of magnitude before the Merkle
+    * degrade (a k-way merge needs every run at once, which is what
+    * streaming avoids). Callers without a cheap count (the single-mode
+    * sparse paths) pass None and collect.
     */
   private def digestOrdered(kh: DataFrame, nRows: Option[Long] = None,
                             streamLimit: Long = Long.MaxValue): Option[String] = {
-    val sorted = kh.orderBy(col("k"), col("h")).select(col("h"))
-    if (nRows.exists(_ > streamLimit)) {
-      import scala.jdk.CollectionConverters.IteratorHasAsScala
-      val it = sorted.toLocalIterator().asScala.map(_.getString(0))
-      if (it.hasNext) Some(Digests.md5OfConcat(it)) else None
-    } else {
-      val rows = sorted.collect()
-      if (rows.isEmpty) None
-      else Some(Digests.md5OfConcat(rows.iterator.map(_.getString(0))))
-    }
+    val hashes =
+      if (nRows.exists(_ > streamLimit)) {
+        import scala.jdk.CollectionConverters.IteratorHasAsScala
+        kh.orderBy(col("k"), col("h")).select(col("h")).toLocalIterator().asScala
+      } else collectSorted(kh, Nil).iterator
+    if (hashes.hasNext) Some(Digests.md5OfConcat(hashes.map(_.getString(0)))) else None
+  }
+
+  /** `kh`'s rows as `(h, rest…, k)`, collected in exact ascending (k, h)
+    * order: each partition sorts its own rows where the (usually kept)
+    * projection lies — no exchange — and the driver merges the P sorted
+    * runs. `java.util.Arrays.sort` on objects is TimSort, which finds the
+    * runs and merges them: O(n log P) comparisons, no boxing beyond the
+    * collected rows, and correct whatever the runs (the merge never relies
+    * on the partition layout). Equal to collecting `kh.orderBy(k, h)`,
+    * without its range-bounds sampling job, shuffle and sort stage.
+    */
+  private def collectSorted(kh: DataFrame, rest: Seq[Column]): Array[Row] = {
+    val rows = kh.sortWithinPartitions(col("k"), col("h"))
+      .select(col("h") +: rest :+ col("k").cast(BinaryType): _*).collect()
+    java.util.Arrays.sort(rows, KhOrder)
+    rows
+  }
+
+  /** Spark's ascending (k, h) order over `(h, …, k: binary)` rows: k by
+    * unsigned UTF-8 bytes (string binary collation; nulls first), then h.
+    * Not `String.compareTo` on k: UTF-16 code units put supplementary-plane
+    * characters (surrogates, 0xD800–0xDFFF) before U+E000–U+FFFF, where
+    * UTF-8 puts them after. h is an MD5 hex string — ASCII, where the two
+    * orders agree.
+    */
+  private val KhOrder: java.util.Comparator[Row] = (x: Row, y: Row) => {
+    val c = java.util.Arrays.compareUnsigned(
+      x.getAs[Array[Byte]](x.length - 1), y.getAs[Array[Byte]](y.length - 1))
+    if (c != 0) c else x.getString(0).compareTo(y.getString(0))
   }
 
   /** full mode — /root/reference/query.go:122-158. Carries the same
@@ -136,15 +169,26 @@ object Fingerprints {
     * without it, the same `VerifyConfig` would yield different "full" outputs
     * depending on call path (single-mode vs multi-mode), and the driver-side
     * collect hazard the limit exists for would survive on this path. The
-    * persist makes the count and the digest share one canonicalize+hash pass.
+    * count and the digest share one canonicalize+hash pass ([[counted]]).
     */
   def fullDigest(df: DataFrame, spec: TableSpec, cfg: VerifyConfig): String = {
-    val kh = hashedRows(df, spec, cfg).persist()
+    val (kh, n) = counted(hashedRows(df, spec, cfg))
     try {
-      val n = kh.count()
       if (n > cfg.fullModeRowLimit) degradeToMerkle(kh, cfg)
       else digestOrdered(kh, Some(n), cfg.streamingCollectRowLimit).getOrElse(NoRows)
-    } finally kh.unpersist(blocking = false)
+    } finally Staging.releaseFrame(kh)
+  }
+
+  /** `df` lazily local-checkpointed and counted by ONE job — the Curate
+    * stage idiom: the job that counts the rows also computes and keeps them,
+    * so every later read starts from the kept rows. (A `persist()`-ed frame
+    * under adaptive execution adds a separate job that fills the cache
+    * before the count.) Release the frame with [[Staging.releaseFrame]].
+    */
+  private def counted(df: DataFrame): (DataFrame, Long) = {
+    val kept = df.localCheckpoint(eager = false)
+    try (kept, kept.queryExecution.toRdd.count())
+    catch { case e: Throwable => Staging.releaseFrame(kept); throw e }
   }
 
   /** Shared full→Merkle degrade (scale guard), logged so a degraded run is
@@ -431,25 +475,31 @@ object Fingerprints {
   /** All requested modes over one table, each piece of work done once — the
     * reference runs one server-side query per mode
     * (verify.go:205-232); here one table costs one read, one
-    * projection and, in the common case, one sorted pass:
+    * projection and, in the common case, two Spark jobs:
     *
     *  - the canonicalize+hash projection `(k, h)` — plus the sparse key `sk`
-    *    and the PK columns when sparse is requested — is built once,
-    *    persisted and counted. That count `n` IS rowcount mode, and stats
-    *    is an aggregate observed on the rows the same job materializes.
-    *    Only when the projection cannot be built (e.g. a PK column is
-    *    missing, which sends every hash mode to `(err)`) do rowcount and
-    *    stats scan `df` themselves.
+    *    and the PK columns when sparse is requested — is built once, kept
+    *    and counted by ONE job ([[counted]]). That count `n` IS rowcount
+    *    mode, and stats is an aggregate observed on the rows the same job
+    *    materializes. Only when the projection cannot be built
+    *    (e.g. a PK column is missing, which sends every hash mode to
+    *    `(err)`) do rowcount and stats scan `df` themselves.
     *  - When full is requested and exact (`n ≤ fullModeRowLimit`), ONE
-    *    (k, h)-sorted stream comes to the driver — collect() up to
-    *    `streamingCollectRowLimit` rows, toLocalIterator past it — and full,
-    *    bookend and sparse are all folded from it ([[sortedPass]]). A failed
-    *    pass reports `(err)` for every mode it serves.
+    *    (k, h)-ordered stream comes to the driver and full, bookend and
+    *    sparse are all folded from it ([[sortedPass]]). Up to
+    *    `streamingCollectRowLimit` rows that stream is the second job: the
+    *    kept projection sorted within its partitions and collected, the
+    *    runs merged on the driver ([[collectSorted]]) — no range sampling,
+    *    no shuffle, no sort stage. Past it, Spark sorts globally and the
+    *    stream arrives through toLocalIterator. A failed pass reports
+    *    `(err)` for every mode it serves.
     *  - Otherwise (full not requested, or degraded to Merkle) each hash mode
-    *    runs its own plan over the persisted projection, as does
+    *    runs its own plan over the kept projection, as does
     *    composite-PK sparse when the pass streams.
     *
-    * Per-mode failures degrade to the `(err)` sentinel like the reference (X3).
+    * An input that [[Readers.spreadBySize]] spreads adds the spread's
+    * shuffle-map job in front of the count. Per-mode failures degrade to the
+    * `(err)` sentinel like the reference (X3).
     */
   def runModes(modes: Seq[String], df: DataFrame, spec: TableSpec, cfg: VerifyConfig): Map[String, String] = {
     val needsHash = modes.exists(m => m != TestModes.RowCount && m != TestModes.Stats)
@@ -471,16 +521,14 @@ object Fingerprints {
         else GraftFunctions.md5Signed64(
           Canon.pkSortKey(df.schema, spec.pks, hashPrimaryKeys = false, cfg.tsPrecision)).as("sk") +:
           (if (composite) spec.pks.zipWithIndex.map { case (p, i) => col(p).as(s"__pk$i") } else Nil)
-      val kh = src.select(
+      val projection = src.select(
         Canon.pkSortKey(df.schema, spec.pks, cfg.hashPrimaryKeys, cfg.tsPrecision).as("k") +:
           Canon.rowHash(df.schema, hashableColumns(df, spec), cfg.tsPrecision, spec.jsonColumns).as("h") +:
           sparseCols: _*)
-        .persist()
-      // materialize once so every mode reads the cache; this job builds the
-      // cache, so the stats aggregate observed inside it is final here
-      val counted = kh.groupBy().count()
-      val n = counted.collect().head.getLong(0)
-      (kh, n, counted.queryExecution.observedMetrics.get("stats").map(_.getString(0)))
+      // the stats aggregate observed inside the counting job is final once
+      // that job ends
+      val (kh, n) = counted(projection)
+      (kh, n, projection.queryExecution.observedMetrics.get("stats").map(_.getString(0)))
     }.toOption
     val fromPass: Map[String, String] = khOpt match {
       case Some((kh, n, _)) if modes.contains(TestModes.Full) && n <= cfg.fullModeRowLimit =>
@@ -515,12 +563,12 @@ object Fingerprints {
             val kh = khOpt.get._1
             val sampled = kh.filter(col("sk") % cfg.sparseMod === 0)
             if (!composite)
-              // a filter over the persisted kh: the guarding count and the
-              // digest are both cached-frame scans
+              // a filter over the kept kh: the guarding count and the
+              // digest both scan the kept rows
               digestOrdered(sampled.select(col("k"), col("h")), Some(sampled.count()),
                 cfg.streamingCollectRowLimit).getOrElse(NoRows)
             else {
-              // the chained semi-joins are NOT covered by kh's persist —
+              // the chained semi-joins are NOT covered by kh's checkpoint —
               // materialize them once so the guarding count doesn't run the
               // whole join tree a second time when the digest evaluates
               val selected = spec.pks.indices.foldLeft(kh) { (acc, i) =>
@@ -535,18 +583,20 @@ object Fingerprints {
         }
       }.getOrElse(Err))
     }.toMap
-    khOpt.foreach(_._1.unpersist(blocking = false))
+    khOpt.foreach(t => Staging.releaseFrame(t._1))
     out
   }
 
-  /** The one (k, h)-sorted pass of [[runModes]]: the exact full digest's
+  /** The one (k, h)-ordered pass of [[runModes]]: the exact full digest's
     * sorted hash stream, folded on the driver into every `served` mode at
     * once — full chains every hash; bookend keeps the first and the last
     * `bookendLimit` hashes (the descending end side is the ascending tail
     * reversed: ascending sorts put nulls first and descending ones last, so
     * the two orders are exact mirrors); sparse chains the sampled rows,
     * which in global (k, h) order are exactly the order the per-mode sparse
-    * digest sorts them into.
+    * digest sorts them into. The stream is [[collectSorted]]'s merged runs
+    * up to `streamingCollectRowLimit` rows, Spark's global sort past it;
+    * both deliver rows as `(h, sk, __pk…)` (the collected ones with k last).
     *
     * Composite-PK sparse keeps the semi-join's per-column membership: a row
     * is selected when each of its PK values equals that column's value on
@@ -557,8 +607,7 @@ object Fingerprints {
     import scala.jdk.CollectionConverters.IteratorHasAsScala
     val sparse = served(TestModes.Sparse)
     val nPks = if (sparse && composite) kh.columns.count(_.startsWith("__pk")) else 0
-    val sorted = kh.orderBy(col("k"), col("h")).select(
-      col("h") +: (if (sparse) col("sk") +: (0 until nPks).map(i => col(s"__pk$i")) else Nil): _*)
+    val rest = if (sparse) col("sk") +: (0 until nPks).map(i => col(s"__pk$i")) else Nil
     // field 1 is sk; a null key fails the SQL filter `sk % mod = 0`
     val sampled: Row => Boolean = r => !r.isNullAt(1) && r.getLong(1) % cfg.sparseMod == 0
     val limit = if (served(TestModes.Bookend)) cfg.bookendLimit max 0 else 0
@@ -575,9 +624,11 @@ object Fingerprints {
       }
       if (sparse && selected(r)) sparseChain.add(h)
     }
-    if (n > cfg.streamingCollectRowLimit) fold(sorted.toLocalIterator().asScala, sampled)
+    if (n > cfg.streamingCollectRowLimit)
+      fold(kh.orderBy(col("k"), col("h")).select(col("h") +: rest: _*).toLocalIterator().asScala,
+        sampled)
     else {
-      val rows = sorted.collect()
+      val rows = collectSorted(kh, rest)
       fold(rows.iterator, if (nPks == 0) sampled else {
         val sets = Array.fill(nPks)(scala.collection.mutable.HashSet.empty[Any])
         for (r <- rows if sampled(r); i <- 0 until nPks if !r.isNullAt(2 + i))

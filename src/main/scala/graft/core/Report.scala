@@ -224,8 +224,14 @@ object VerifyRun {
   /** Generic box-table renderer over an explicit header — the report sink
     * shared by the mode pivot above and the incremental-Merkle drift report.
     */
-  def renderTable(df: DataFrame, header: Seq[String], out: java.io.Writer): Unit = {
-    val rows = df.select(header.map(col): _*).collect()
+  def renderTable(df: DataFrame, header: Seq[String], out: java.io.Writer): Unit =
+    renderRows(header, df.select(header.map(col): _*).collect().toSeq, out)
+
+  /** [[renderTable]] over rows already on the driver, fields in `header`
+    * order.
+    */
+  def renderRows(header: Seq[String], collected: Seq[Row], out: java.io.Writer): Unit = {
+    val rows = collected
       .map(r => header.indices.map(i => Option(r.get(i)).map(_.toString).getOrElse("")))
       .sortWith { (a, b) => // column-wise lexicographic, results.go:148-156
         a.indices.find(i => a(i) != b(i)).exists(i => a(i) < b(i))

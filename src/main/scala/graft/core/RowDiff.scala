@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.canon.Canon
@@ -8,13 +8,20 @@ import graft.canon.Canon
 /** Row-level drill-down for a table that fingerprint modes flagged as
   * inconsistent — the extension the survey sketches in §7.6 ("row-level diff
   * drill-down via except/full-outer-join on PK"). The reference stops at
-  * per-table disagreement; this answers "which rows".
+  * per-table disagreement; this answers "which rows" ([[diff]]) and "which
+  * columns within them" ([[diffColumns]]).
+  *
+  * Both reports are projections of ONE full-outer PK join ([[joined]]) that
+  * carries each side's row hash and canonical column texts; [[firstDiffs]]
+  * takes the first rows of both from one query over that join, which is
+  * what `--drill-down` prints.
   *
   * Scale: one shuffle join keyed on the PK. At 100 TB this is the
   * unavoidable expensive path (both sides repartition on pk); with
   * pk-bucketed storage the exchange disappears entirely, and AQE's skew-join
-  * splitting covers hot keys. Row hashes are computed *before* the join so
-  * only (pk, 32-char hash) crosses the wire, not full rows.
+  * splitting covers hot keys. Row hashes and canonical texts are computed
+  * *before* the join, so only (pk, 32-char hash, canonical strings) cross
+  * the wire — the column texts only when the column report asks for them.
   */
 object RowDiff {
 
@@ -23,61 +30,109 @@ object RowDiff {
     * different row hash).
     */
   def diff(a: DataFrame, b: DataFrame, spec: TableSpec,
-           cfg: VerifyConfig = VerifyConfig()): DataFrame = {
-    def keyed(df: DataFrame, hname: String) = {
-      val cols = Fingerprints.hashableColumns(df, spec)
-      df.select(spec.pks.map(col) :+
-        Canon.rowHash(df.schema, cols, cfg.tsPrecision, spec.jsonColumns).as(hname): _*)
-    }
-    keyed(a, "h_a").join(keyed(b, "h_b"), spec.pks, "full_outer")
-      .filter(col("h_a").isNull || col("h_b").isNull || col("h_a") =!= col("h_b"))
-      .select(spec.pks.map(col) :+
-        when(col("h_b").isNull, "only_a")
-          .when(col("h_a").isNull, "only_b")
-          .otherwise("differs").as("status"): _*)
+           cfg: VerifyConfig = VerifyConfig()): DataFrame =
+    joined(a, b, spec, cfg, Nil).filter(rowDiffers)
+      .select(spec.pks.map(col) :+ status.as("status"): _*)
       .orderBy(spec.pks.map(col): _*)
-  }
 
-  /** Column-level attribution for the rows [[diff]] flags as `differs`: one
-    * row per (pk, column) whose CANONICAL text disagrees between the two
+  /** Column-level attribution for the rows present on both sides: one row
+    * per (pk, column) whose CANONICAL text disagrees between the two
     * versions — the drill-down after "which rows" is "which columns".
     * Canonical (not raw) comparison keeps attribution consistent with the
     * row hash: a change the hash cannot see (e.g. a timestamp moving within
     * the truncation window) is correctly not attributed. Rows present on
     * only one side carry no column story and stay with [[diff]]'s
-    * `only_a`/`only_b`.
+    * `only_a`/`only_b`. Column names are side a's hashable non-PK columns,
+    * each resolved against each side's own physical case.
     *
-    * Scale: same single PK-keyed shuffle join as [[diff]], but carrying one
-    * canonical string per column instead of one row hash — the wire cost is
-    * the drill-down's price, which is why this runs on flagged tables (or
+    * Scale: the same PK-keyed join as [[diff]], but carrying one canonical
+    * string per column instead of one row hash — the wire cost is the
+    * drill-down's price, which is why this runs on flagged tables (or
     * flagged Merkle buckets), not everywhere.
     */
   def diffColumns(a: DataFrame, b: DataFrame, spec: TableSpec,
                   cfg: VerifyConfig = VerifyConfig()): DataFrame = {
-    val cols = Canon.hashColumnOrder(Fingerprints.hashableColumns(a, spec)
-      .filterNot(c => spec.pks.exists(_.equalsIgnoreCase(c))))
-    def keyed(df: DataFrame, suffix: String) = {
-      // resolve names against THIS side's physical case: heterogeneous
-      // targets render the same column as N_NAME (Derby) and n_name
-      // (parquet/PG), and an exact-case lookup would throw on one side
+    val cols = comparedColumns(a, spec)
+    joined(a, b, spec, cfg, cols).filter(bothSides)
+      .select(spec.pks.map(col) :+
+        explode(array(cols.map(c => when(differs(c), lit(c))): _*)).as("column_name"): _*)
+      .filter(col("column_name").isNotNull)
+      .orderBy(spec.pks.map(col) :+ col("column_name"): _*)
+  }
+
+  /** The first `limit` rows of [[diff]] and the first `limit` (pk, column)
+    * pairs of [[diffColumns]], from ONE query over ONE join: every joined
+    * row expands into its report records — a row record (its status) when
+    * its hashes disagree, a column record per canonical disagreement when
+    * both sides hold it — and each report keeps its first `limit` records
+    * in its own order (a top-`limit` per report, no global sort). Both
+    * reports read the same records, so the join's two shuffles run once.
+    * Returns the two reports on the driver, in order, as `(pk…, status)`
+    * and `(pk…, column_name)` rows.
+    */
+  def firstDiffs(a: DataFrame, b: DataFrame, spec: TableSpec, cfg: VerifyConfig,
+                 limit: Int): (Seq[Row], Seq[Row]) = {
+    val cols = comparedColumns(a, spec)
+    val pks = spec.pks.map(col)
+    def record(report: Int, detail: Column) =
+      struct(lit(report).as("report"), detail.as("detail"))
+    // explode the whole array and drop its null slots after: `array_compact`
+    // is a lambda function, which has no generated code and would push the
+    // Generate into interpreted evaluation
+    val records = joined(a, b, spec, cfg, cols)
+      .select(pks :+ explode(array(
+        when(rowDiffers, record(0, status)) +:
+          cols.map(c => when(bothSides && differs(c), record(1, lit(c)))): _*)).as("r"): _*)
+      .filter(col("r").isNotNull)
+      .select(pks :+ col("r.report").as("report") :+ col("r.detail").as("detail"): _*)
+    def first(report: Int, order: Seq[Column]) =
+      records.filter(col("report") === report).orderBy(order: _*).limit(limit)
+    val got = first(0, pks).union(first(1, pks :+ col("detail"))).collect()
+    val tag = spec.pks.length
+    def report(r: Int) =
+      got.iterator.filter(_.getInt(tag) == r).map(x => Row.fromSeq(x.toSeq.patch(tag, Nil, 1))).toSeq
+    (report(0), report(1))
+  }
+
+  /** The full-outer PK join both reports project. Each side contributes its
+    * PK columns (aliased to the spec's names), its row hash (`h_a` / `h_b`:
+    * never null on a present row, so a null marks the absent side) and the
+    * canonical text of each of `columns` (`<c>__a` / `<c>__b`). Names
+    * resolve against each side's own physical case: heterogeneous targets
+    * render the same column as N_NAME (Derby) and n_name (parquet/PG), and
+    * an exact-case lookup would throw on one side.
+    */
+  private def joined(a: DataFrame, b: DataFrame, spec: TableSpec, cfg: VerifyConfig,
+                     columns: Seq[String]): DataFrame = {
+    def side(df: DataFrame, suffix: String) = {
       def phys(name: String) =
         df.schema.fields.find(_.name.equalsIgnoreCase(name))
           .getOrElse(throw new IllegalArgumentException(
             s"column $name missing from ${df.schema.fieldNames.mkString(",")}"))
-      df.select(spec.pks.map(p => col(phys(p).name).as(p)) ++ cols.map { c =>
-        val f = phys(c)
-        val canon =
-          if (spec.jsonColumns.exists(_.equalsIgnoreCase(c))) coalesce(Canon.canonJson(col(f.name)), lit(""))
-          else Canon.canonCol(col(f.name), f.dataType, cfg.tsPrecision)
-        canon.as(s"${c}__$suffix")
-      }: _*)
+      df.select(spec.pks.map(p => col(phys(p).name).as(p)) ++
+        (Canon.rowHash(df.schema, Fingerprints.hashableColumns(df, spec), cfg.tsPrecision,
+          spec.jsonColumns).as(s"h_$suffix") +:
+        columns.map { c =>
+          val f = phys(c)
+          val canon =
+            if (spec.jsonColumns.exists(_.equalsIgnoreCase(c))) coalesce(Canon.canonJson(col(f.name)), lit(""))
+            else Canon.canonCol(col(f.name), f.dataType, cfg.tsPrecision)
+          canon.as(s"${c}__$suffix")
+        }): _*)
     }
-    keyed(a, "a").join(keyed(b, "b"), spec.pks, "inner")
-      .select(spec.pks.map(col) :+
-        explode(array_compact(array(cols.map(c =>
-          when(col(s"${c}__a") =!= col(s"${c}__b"), lit(c))): _*))).as("column_name"): _*)
-      .orderBy(spec.pks.map(col) :+ col("column_name"): _*)
+    side(a, "a").join(side(b, "b"), spec.pks, "full_outer")
   }
+
+  /** Side a's hashable non-PK columns, in hash order. */
+  private def comparedColumns(a: DataFrame, spec: TableSpec): Seq[String] =
+    Canon.hashColumnOrder(Fingerprints.hashableColumns(a, spec)
+      .filterNot(c => spec.pks.exists(_.equalsIgnoreCase(c))))
+
+  private def bothSides: Column = col("h_a").isNotNull && col("h_b").isNotNull
+  private def rowDiffers: Column = col("h_a").isNull || col("h_b").isNull || col("h_a") =!= col("h_b")
+  private def status: Column =
+    when(col("h_b").isNull, "only_a").when(col("h_a").isNull, "only_b").otherwise("differs")
+  private def differs(c: String): Column = col(s"${c}__a") =!= col(s"${c}__b")
 
   /** Bucket-scoped row diff — the drill-down behind incremental Merkle
     * re-verification: restrict both sides to the buckets

@@ -231,18 +231,51 @@ object Readers {
     case p => p.children.map(plannedPartitions).max
   }
 
-  /** Columns stored as TIMESTAMP(NANOS) in the fixture parquet (TESTDATA.md). */
-  private val nanosColumns: Map[String, Seq[String]] = Map("events" -> Seq("ts"))
+  /** A fixture table: [[parquet]] plus [[normalizeNtz]]. */
+  def fixture(spark: SparkSession, dir: String, table: String): DataFrame =
+    normalizeNtz(parquet(spark, s"$dir/$table.parquet"))
 
-  def fixture(spark: SparkSession, dir: String, table: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$table.parquet")
-    val deNanosed = nanosColumns.getOrElse(table, Nil).foldLeft(df) { (d, c) =>
+  /** `spark.read.parquet(path)` with every TIMESTAMP(NANOS) column — which
+    * graft sessions read as raw int64 nanos (`nanosAsLong`) — converted to
+    * a microsecond TimestampType. The columns come from the parquet
+    * footer's logical-type annotations ([[nanosColumns]]), so a column
+    * that merely holds int64 values stays a number.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val df = spark.read.parquet(path)
+    nanosColumns(spark, path).foldLeft(df) { (d, c) =>
       if (d.schema.fields.exists(f => f.name == c && f.dataType == LongType))
         // integer `div`, not `/`: the nanos exceed a double's exact range
         d.withColumn(c, timestamp_micros(expr(s"`$c` div 1000")))
       else d
     }
-    normalizeNtz(deNanosed)
+  }
+
+  /** Top-level columns stored as TIMESTAMP(NANOS), read off the footer of
+    * the first data file under `path` (a file or a directory): one footer
+    * read through parquet-hadoop, no Spark job.
+    */
+  private def nanosColumns(spark: SparkSession, path: String): Seq[String] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val files = fs.listFiles(root, true)
+    val first = Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .find(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+    first.toSeq.flatMap { file =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      val schema = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+      scala.jdk.CollectionConverters.ListHasAsScala(schema.getFields).asScala.collect {
+        case f if f.isPrimitive && (f.getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        }) => f.getName
+      }.toSeq
+    }
   }
 
   /** Session-timestamp normalize: parquet written with naive (isAdjustedToUTC

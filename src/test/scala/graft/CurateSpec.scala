@@ -456,5 +456,16 @@ class CurateSpec extends SparkSpec {
     val funnel = Curate.run(spark, Curate.Config(docsDir = dir, outDir = out)).toMap
     assert(funnel("input") == docs.length, funnel.toString)
     assert(funnel("written") > 0 && funnel("written") == funnel("quality_kept"), funnel.toString)
+    // the nanos column is written back as a timestamp, not as raw int64 nanos
+    val part = scala.jdk.CollectionConverters.IteratorHasAsScala(
+        java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()).asScala.map(_.toString)
+      .find(p => p.endsWith(".parquet") && !p.contains("/_") && !p.contains("/."))
+      .getOrElse(fail(s"no parquet output under $out"))
+    val written = spark.read.parquet(part).schema("fetched_at").dataType
+    assert(written == org.apache.spark.sql.types.TimestampType, s"fetched_at written as $written")
+    // holding the written nanos truncated to microseconds
+    val ts = spark.read.parquet(part).select(col("doc_id"), unix_micros(col("fetched_at"))).collect()
+    assert(ts.nonEmpty && ts.forall(r => r.getLong(1) == (1700000000000000000L + r.getLong(0)) / 1000),
+      ts.take(3).toSeq)
   }
 }

@@ -107,6 +107,82 @@ class FingerprintSpec extends SparkSpec {
       Fingerprints.fullDigest(joint, cspec, c))
   }
 
+  /** full, bookend and sparse folded from Spark's own global
+    * `orderBy(k, h)` — the order the driver-side merge must reproduce.
+    */
+  private def referenceFold(d: org.apache.spark.sql.DataFrame, sp: TableSpec,
+                            c: VerifyConfig): Map[String, String] = {
+    def ordered(f: org.apache.spark.sql.DataFrame, desc: Boolean = false) = {
+      val kh = Fingerprints.hashedRows(f, sp, c)
+      val order = if (desc) Seq(col("k").desc, col("h").desc) else Seq(col("k"), col("h"))
+      kh.orderBy(order: _*).select("h").collect().map(_.getString(0)).toSeq
+    }
+    def md5(hs: Seq[String]) = if (hs.isEmpty) Fingerprints.NoRows else Digests.md5OfConcat(hs.iterator)
+    def part(hs: Seq[String]) = if (hs.isEmpty) "" else Digests.md5OfConcat(hs.iterator)
+    val sampled = d.filter(Fingerprints.sparseFilter(d, sp, c))
+    // composite PKs keep the reference's per-column IN membership
+    val selected =
+      if (sp.pks.length == 1) sampled
+      else sp.pks.foldLeft(d)((acc, pk) => acc.join(sampled.select(col(pk)), Seq(pk), "left_semi"))
+    Map(TestModes.Full -> md5(ordered(d)),
+      TestModes.Bookend -> Digests.md5OfConcat(Iterator("(",
+        part(ordered(d).take(c.bookendLimit)), ")(",
+        part(ordered(d, desc = true).take(c.bookendLimit)), ")")),
+      TestModes.Sparse -> md5(ordered(selected)))
+  }
+
+  test("the merged sorted runs fold exactly like Spark's global (k, h) sort") {
+    val c = VerifyConfig(bookendLimit = 4, sparseMod = 3)
+    // supplementary-plane characters (UTF-16 surrogates) sort BEFORE
+    // U+E000..U+FFFF by String.compareTo but AFTER them in UTF-8 bytes
+    val chars = Seq("\uD83D\uDE00", "\uE000", "\uD800\uDC00", "\uFFFD", "\uFF21", "a", "\uD83E\uDD80")
+    val unicode = (for { (ch, i) <- chars.zipWithIndex; j <- 0 until 5 }
+      yield (s"$ch$j", i * 10 + j, s"v$i-$j")).toDF("id", "n", "s")
+    val uspec = TableSpec("t", Seq("id"))
+    // duplicate (k, h) pairs: the same rows twice, split across partitions
+    val dupes = unicode.union(unicode).repartition(3)
+    val composite = (for { a <- 0 until 6; b <- Seq("x", "\uD83D\uDE00", "\uE001") }
+      yield (a, b, s"$a$b")).toDF("a", "b", "s")
+    val cspec = TableSpec("t", Seq("a", "b"))
+    val layouts = Seq(
+      "unicode, 4 partitions" -> (unicode.repartition(4), uspec, c),
+      "duplicates across partitions" -> (dupes, uspec, c),
+      "empty partitions" -> (unicode.filter(col("n") % 10 === 0).repartition(9), uspec, c),
+      "single partition" -> (unicode.coalesce(1), uspec, c),
+      "--hash-primary-keys" -> (unicode.repartition(3), uspec, c.copy(hashPrimaryKeys = true)),
+      "composite-PK sparse" -> (composite.repartition(4), cspec, c))
+    for ((name, (d, sp, cfg)) <- layouts) {
+      val expected = referenceFold(d, sp, cfg)
+      val got = Fingerprints.runModes(TestModes.All, d, sp, cfg)
+      assert(expected.forall { case (m, v) => got(m) == v }, s"$name: $got vs $expected")
+      assert(Fingerprints.fullDigest(d, sp, cfg) == expected(TestModes.Full), name)
+      assert(Fingerprints.sparseDigest(d, sp, cfg) == expected(TestModes.Sparse), name)
+    }
+    // the unicode keys really do order differently under UTF-16 and UTF-8
+    val keys = chars.map(_ + "0")
+    assert(keys.sorted != keys.sortBy(_.getBytes("UTF-8").map(b => (b & 0xff).toChar).mkString))
+  }
+
+  test("runModes(All) job budget: count + collected pass, plus the spread's shuffle") {
+    val cfg = VerifyConfig()
+    // unspread: a fixture table under the spread threshold — one job counts
+    // and caches the projection, one collects its sorted runs
+    val li = Readers.fixture(spark, sfDir, "lineitem")
+    val lspec = Fixtures.specs("lineitem")
+    assert(Readers.spreadBySize(li, col(lspec.pks.head)) eq li)
+    val (out, jobs) = jobsOf(Fingerprints.runModes(TestModes.All, li, lspec, cfg))
+    assert(!out.values.exists(_ == Fingerprints.Err), out)
+    assert(jobs.size <= 2, jobs)
+    // spread: a single-partition source too big for one task gains the
+    // spread's shuffle-map job, nothing else
+    val big = spark.range(0, 200000, 1, 1).select(col("id"), concat(lit("p"), col("id")).as("s"))
+    val bspec = TableSpec("t", Seq("id"))
+    assert(!(Readers.spreadBySize(big, col("id")) eq big))
+    val (bigOut, bigJobs) = jobsOf(Fingerprints.runModes(TestModes.All, big, bspec, cfg))
+    assert(!bigOut.values.exists(_ == Fingerprints.Err), bigOut)
+    assert(bigJobs.size <= 3, bigJobs)
+  }
+
   test("streamed exact digest equals collect() digest across the threshold") {
     // the toLocalIterator path must be byte-identical to the collect() path
     // it replaces past streamingCollectRowLimit; force the threshold to both

@@ -704,6 +704,24 @@ class OperatorSpec extends SparkSpec {
     assert(got == Seq((2, "v"), (3, "v"), (3, "x")))
   }
 
+  test("firstDiffs: both drill-down reports' first rows from one join") {
+    // id 5's two columns concatenate to the same text on both sides, so its
+    // row hashes agree while its columns differ: the column report names it,
+    // the row report does not
+    val a = Seq((1, "a", "x"), (2, "b", "y"), (3, "c", "z"), (5, "ab", "c"), (6, "f", "u"))
+      .toDF("id", "v", "w")
+    val b = Seq((2, "B", "y"), (3, "C", "Z"), (4, "d", "t"), (5, "a", "bc"), (6, "F", "U"))
+      .toDF("id", "v", "w")
+    val spec = TableSpec("t", Seq("id"))
+    for (limit <- Seq(2, 20)) {
+      val (rows, cols) = RowDiff.firstDiffs(a, b, spec, graft.core.VerifyConfig(), limit)
+      assert(rows == RowDiff.diff(a, b, spec).limit(limit).collect().toSeq, limit)
+      assert(cols == RowDiff.diffColumns(a, b, spec).limit(limit).collect().toSeq, limit)
+    }
+    val (rows, cols) = RowDiff.firstDiffs(a, b, spec, graft.core.VerifyConfig(), 20)
+    assert(!rows.exists(_.getInt(0) == 5) && cols.count(_.getInt(0) == 5) == 2, (rows, cols))
+  }
+
   test("column diff resolves heterogeneous identifier casing per side") {
     // Derby-style uppercase vs PG-style lowercase physical columns — the
     // drill-down's advertised cross-engine case; names must resolve against

@@ -682,4 +682,37 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("TakeOrderedAndProject"),
       plan.linesIterator.take(20).mkString("\n"))
   }
+
+  test("the collected sorted pass plans no exchange over the kept projection") {
+    // a spread input: the projection's own plan holds the spread's exchange,
+    // and the pass that reads the kept rows must add none (no range
+    // sampling, no shuffle, no global sort) — only a per-partition sort
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.core.{Fingerprints, Readers, TableSpec, TestModes, VerifyConfig}
+    val collected = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "collect") collected.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val big = spark.range(0, 200000, 1, 1).select(col("id"), concat(lit("p"), col("id")).as("s"))
+    assert(!(Readers.spreadBySize(big, col("id")) eq big))
+    spark.listenerManager.register(listener)
+    try {
+      Fingerprints.runModes(TestModes.All, big, TableSpec("t", Seq("id")), VerifyConfig())
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val plans = scala.jdk.CollectionConverters.CollectionHasAsScala(collected).asScala.toSeq
+    assert(plans.size == 1, plans.mkString("\n\n"))
+    val plan = plans.head
+    assert(plan.find(_.isInstanceOf[RDDScanExec]).nonEmpty, plan) // the kept rows
+    assert(plan.find(_.isInstanceOf[SortExec]).nonEmpty, plan)
+    // AdaptiveSparkPlanExec would hide an exchange from `find`; neither may appear
+    assert(plan.find(p => p.isInstanceOf[Exchange] || p.isInstanceOf[AdaptiveSparkPlanExec]).isEmpty,
+      plan)
+  }
 }

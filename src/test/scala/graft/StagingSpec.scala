@@ -273,13 +273,17 @@ class StagingSpec extends SparkSpec {
   test("purchaseEdges release hook drops the staged edge list") {
     // a prior suite in this JVM may have staged it already — start clean
     graft.queries.AnalyticsQueries.releasePurchaseEdges(sfDir)
-    val before = spark.sparkContext.getPersistentRDDs.size
+    // compare RDD ids, not the global count: earlier suites' asynchronous
+    // cleanup can drop unrelated RDDs while this test runs
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
     val edges = graft.queries.AnalyticsQueries.purchaseEdges(spark, sfDir)
     val n = edges.count()
     assert(n > 0)
-    assert(spark.sparkContext.getPersistentRDDs.size == before + 1)
+    val staged = persisted -- before
+    assert(staged.size == 1, staged)
     graft.queries.AnalyticsQueries.releasePurchaseEdges(sfDir)
-    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    assert((persisted & staged).isEmpty, staged)
     // rebuilds on next access
     assert(graft.queries.AnalyticsQueries.purchaseEdges(spark, sfDir).count() == n)
   }
