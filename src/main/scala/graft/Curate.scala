@@ -268,20 +268,21 @@ object Curate {
     * the full accumulated stage lineage; truncation caps plan depth at one
     * stage. The funnel reuses the recorded counts: a disabled gate passes
     * on its input frame with that frame's count, so no frame is counted
-    * twice. Only `input` and the `written` read-back (the on-disk truth)
-    * are counted outside the stages. Every checkpoint is released once the
-    * output is written.
+    * twice. `input` and `written` (the on-disk truth) are summed from the
+    * parquet footers, with no Spark job. Every checkpoint is released once
+    * the output is written.
     */
   def run(spark: SparkSession, cfg: Config): Seq[(String, Long)] = {
     val staged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def stage(df: DataFrame): Stage = {
-      val c = df.localCheckpoint(eager = false)
+      val (c, n) = Staging.checkpointCount(df)
       staged += c
-      Stage(c, c.queryExecution.toRdd.count())
+      Stage(c, n)
     }
     try {
-      val docs = Readers.parquet(spark, s"${cfg.docsDir}/documents.parquet")
-      val input = Stage(docs, docs.count())
+      val docsPath = s"${cfg.docsDir}/documents.parquet"
+      val docs = Readers.parquet(spark, docsPath)
+      val input = Stage(docs, Readers.parquetRows(spark, docsPath))
 
       // exact dedup: keep the smallest id per distinct text
       val keepIds = docs.groupBy(md5(col("text")).as("h"))
@@ -292,36 +293,29 @@ object Curate {
       // representative per cluster: minimum id by default, or the
       // highest-quality member under --keep-best (the dedup_best_rep rule —
       // dropping duplicates shouldn't also drop the best-written copy).
-      // The signatures are persisted here (the banding reads them three
-      // times) and released once the stage is counted
-      val sigs = MinHashLSH.signatures(exact.df, "doc_id", "text", 3, 16)
-      val pairs = MinHashLSH.candidatePairsFromSignatures(sigs, 16, 4)
-        .filter(col("est_jaccard") >= 0.5).select("doc_a", "doc_b")
-      val comp = DedupClusters.components(pairs)
-      val dropNearBase =
-        if (!cfg.keepBest) comp.filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
-        else {
-          import org.apache.spark.sql.expressions.Window
-          comp.join(exact.df.select(col("doc_id"),
-              TextAnalysis.qualityScore(TextAnalysis.tokens(col("text"))).as("q")), "doc_id")
-            .withColumn("rn", row_number().over(
-              Window.partitionBy(col("cluster_id")).orderBy(col("q").desc, col("doc_id"))))
-            .filter(col("rn") > 1).select("doc_id")
-        }
       // --max-cluster-size: a cluster wider than the cap is a template farm —
       // its REPRESENTATIVE is as synthetic as its members, so the whole
       // cluster drops (dedup_cluster_sizes is the histogram that picks the
-      // cap). Cluster sizes are a clusters-sized aggregate of the components
-      // frame; the drop set unions with the representative rule
-      val dropNear = cfg.maxClusterSize.fold(dropNearBase) { maxSz =>
-        val farms = comp.join(
-          comp.groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
-            .filter(col("sz") > maxSz).select("cluster_id"),
-          Seq("cluster_id"), "left_semi").select("doc_id")
-        dropNearBase.unionByName(farms).distinct()
+      // cap). A closure that fits on the driver yields the drop set there,
+      // and the stage is one broadcast anti-join; the signatures are
+      // persisted for the closure's one counting job
+      val sigs = MinHashLSH.signatures(exact.df, "doc_id", "text", 3, 16)
+      val pairs = MinHashLSH.candidatePairsFromSignatures(sigs, 16, 4)
+        .filter(col("est_jaccard") >= 0.5).select("doc_a", "doc_b")
+      val closure = try DedupClusters.closure(pairs) finally sigs.unpersist(blocking = false)
+      val nearDeduped = closure match {
+        case Left(local) =>
+          val drop = local.dropSet(cfg.maxClusterSize,
+            if (cfg.keepBest) bestRepresentatives(exact.df, local) else identity)
+          if (drop.isEmpty) exact
+          else {
+            import spark.implicits._
+            stage(exact.df.join(broadcast(drop.toSeq.toDF("doc_id")), Seq("doc_id"), "left_anti"))
+          }
+        case Right(comp) =>
+          try stage(exact.df.join(nearDropFrame(exact.df, comp, cfg), Seq("doc_id"), "left_anti"))
+          finally Staging.releaseFrame(comp)
       }
-      val nearDeduped = stage(exact.df.join(dropNear, Seq("doc_id"), "left_anti"))
-      sigs.unpersist(blocking = false)
 
       // optional eval-set decontamination (broadcast trigram semi-join)
       val decontaminated = cfg.decontaminateAgainst.fold(nearDeduped) { dir =>
@@ -498,8 +492,7 @@ object Curate {
       // two parents' chunks
       val units = cfg.chunkTokens.fold(Stage(split, sampled.n)) { ct =>
         val stride = cfg.chunkStride.getOrElse(ct)
-        stage(Corpus.chunk(split, "doc_id", "text", ct, stride)
-          .join(split.select(col("doc_id"), col("lang"), col("split")), "doc_id")
+        stage(Corpus.chunk(split, "doc_id", "text", ct, stride, passThrough = Seq("lang", "split"))
           .select(
             when(col("chunk_idx") < 100000L, col("doc_id") * 100000L + col("chunk_idx"))
               .otherwise(raise_error(lit("chunk id packing overflow: a document " +
@@ -513,15 +506,12 @@ object Curate {
       // re-permutes. BOTH columns are written — shuffle_pos alone is a
       // per-shard position and would be ambiguous without its shard
       val tagged = cfg.shuffleSeed.fold(units.df) { seed =>
-        units.df.join(
-          Corpus.shuffle(units.df, "doc_id", seed, cfg.shards)
-            .select(col("id").as("doc_id"), col("shard").as("shuffle_shard"),
-              col("pos").as("shuffle_pos")),
-          "doc_id")
+        Corpus.withShuffleOrder(units.df, "doc_id", seed, cfg.shards,
+          "shuffle_shard", "shuffle_pos")
       }
       Corpus.writeSharded(tagged, cfg.outDir, "doc_id", Seq("split", "lang"), cfg.shards)
-      // an all-filtered corpus writes only _SUCCESS — nothing to read back
-      val written = if (units.n == 0) 0L else spark.read.parquet(cfg.outDir).count()
+      // an all-filtered corpus writes only _SUCCESS: no footers, 0 rows
+      val written = Readers.parquetRows(spark, cfg.outDir)
 
       Seq(
         "input" -> input,
@@ -540,6 +530,58 @@ object Curate {
         "written_units" -> units).map { case (k, st) => k -> st.n } :+
         ("written" -> written)
     } finally staged.foreach(Staging.releaseFrame)
+  }
+
+  /** The near-dup drop set as a frame, for a closure too large for the
+    * driver: the non-representatives (per `--keep-best`, a window over each
+    * cluster) plus, under `--max-cluster-size`, every member of a larger
+    * cluster.
+    */
+  private[graft] def nearDropFrame(docs: DataFrame, comp: DataFrame, cfg: Config): DataFrame = {
+    val dropNonReps =
+      if (!cfg.keepBest) comp.filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
+      else {
+        import org.apache.spark.sql.expressions.Window
+        comp.join(docs.select(col("doc_id"),
+            TextAnalysis.qualityScore(TextAnalysis.tokens(col("text"))).as("q")), "doc_id")
+          .withColumn("rn", row_number().over(
+            Window.partitionBy(col("cluster_id")).orderBy(col("q").desc, col("doc_id"))))
+          .filter(col("rn") > 1).select("doc_id")
+      }
+    cfg.maxClusterSize.fold(dropNonReps) { maxSz =>
+      val farms = comp.join(
+        comp.groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
+          .filter(col("sz") > maxSz).select("cluster_id"),
+        Seq("cluster_id"), "left_semi").select("doc_id")
+      dropNonReps.unionByName(farms).distinct()
+    }
+  }
+
+  /** `--keep-best` on a driver-side closure: each cluster's member with the
+    * highest quality score, the smallest id among ties — the order of the
+    * window in [[nearDropFrame]]. One job collects the members' scores.
+    */
+  private[graft] def bestRepresentatives(docs: DataFrame,
+                                         local: DedupClusters.LocalComponents): Long => Long = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val scored = docs.join(broadcast(local.toDF(spark)), "doc_id")
+      .select(col("cluster_id"), col("doc_id"),
+        TextAnalysis.qualityScore(TextAnalysis.tokens(col("text"))).cast("double").as("q"))
+      .as[(Long, Long, Option[Double])].collect()
+    // the window's `q DESC` order: null last, NaN first, -0.0 == 0.0
+    def higher(x: Option[Double], y: Option[Double]): Int = (x, y) match {
+      case (Some(a), Some(b)) =>
+        if (a.isNaN || b.isNaN) java.lang.Boolean.compare(a.isNaN, b.isNaN)
+        else java.lang.Double.compare(a + 0.0, b + 0.0)
+      case _ => java.lang.Boolean.compare(x.isDefined, y.isDefined)
+    }
+    scored.groupBy(_._1).map { case (c, members) =>
+      c -> members.reduce { (x, y) =>
+        val h = higher(x._3, y._3)
+        if (h > 0 || (h == 0 && x._2 < y._2)) x else y
+      }._2
+    }
   }
 
   def main(args: Array[String]): Unit = {

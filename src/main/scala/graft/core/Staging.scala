@@ -5,6 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.util.Try
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Session-keyed, fixture-dir-keyed memo of staged values — the one shared
   * implementation of the staging-cache pattern that had grown five
@@ -82,8 +84,7 @@ object Staging {
     * are ignored — release must never fail the caller.
     */
   private[core] def releaseValue(v: Any): Unit = v match {
-    case ds: Dataset[_] =>
-      checkpointRdds(ds).foreach(r => Try(r.unpersist(blocking = false)))
+    case ds: Dataset[_] => releaseFrame(ds)
     case c: AutoCloseable => Try(c.close())
     case it: Iterable[_] => it.foreach(releaseValue)
     case p: Product => p.productIterator.foreach(releaseValue)
@@ -96,7 +97,27 @@ object Staging {
     * leave its blocks to GC (r14: pageRank's co-partitioned edge frame).
     */
   def releaseFrame(ds: Dataset[_]): Unit =
-    checkpointRdds(ds).foreach(r => Try(r.unpersist(blocking = false)))
+    checkpointRdds(ds).foreach(r => Try(Bridge.unpersistRDD(r)))
+
+  /** `ds` checkpointed lazily and counted in one job, which also writes the
+    * checkpoint blocks. The count runs on the checkpoint RDD itself, not on
+    * a plan over it, so it compiles no code. Release with [[releaseFrame]].
+    */
+  def checkpointCount[T](ds: Dataset[T]): (Dataset[T], Long) = {
+    val c = ds.localCheckpoint(eager = false)
+    (c, checkpointedRows(c).count())
+  }
+
+  /** The rows of a checkpointed frame, read straight off its checkpoint RDD:
+    * no plan and no generated code. They are the frame's output columns in
+    * order, as `UnsafeRow`s.
+    */
+  private[graft] def checkpointedRows(ds: Dataset[_]): org.apache.spark.rdd.RDD[InternalRow] =
+    checkpointRdds(ds) match {
+      case Seq(rdd) => rdd.asInstanceOf[org.apache.spark.rdd.RDD[InternalRow]]
+      case other => throw new IllegalArgumentException(
+        s"expected one checkpointed frame, found ${other.size} RDD leaves")
+    }
 
   /** Uncache every `persist()`-ed frame that `ds` reads — the release seam
     * for operators that persist an internal intermediate and return a frame

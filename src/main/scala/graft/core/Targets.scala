@@ -256,19 +256,9 @@ object Readers {
     * read through parquet-hadoop, no Spark job.
     */
   private def nanosColumns(spark: SparkSession, path: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val files = fs.listFiles(root, true)
-    val first = Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
-      .find(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-    first.toSeq.flatMap { file =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-      val schema = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+    dataFiles(spark, path).take(1).toSeq.flatMap { file =>
+      val schema = footer(spark, file).getFileMetaData.getSchema
       scala.jdk.CollectionConverters.ListHasAsScala(schema.getFields).asScala.collect {
         case f if f.isPrimitive && (f.getLogicalTypeAnnotation match {
           case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
@@ -276,6 +266,38 @@ object Readers {
         }) => f.getName
       }.toSeq
     }
+  }
+
+  /** The rows of the parquet data under `path` (a file, or a directory
+    * such as a partitioned write), summed from the file footers: no Spark
+    * job and no schema inference.
+    */
+  def parquetRows(spark: SparkSession, path: String): Long =
+    dataFiles(spark, path).map { f =>
+      scala.jdk.CollectionConverters.ListHasAsScala(footer(spark, f).getBlocks).asScala
+        .map(_.getRowCount).sum
+    }.sum
+
+  /** Data files under `path`, recursively, skipping what Spark's reader
+    * skips: any file or directory whose name starts with `_` or `.`
+    * (`_SUCCESS`, `.crc` checksums, `_temporary`).
+    */
+  private def dataFiles(spark: SparkSession, path: String): Iterator[org.apache.hadoop.fs.Path] = {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(new Path(path))
+    val files = fs.listFiles(root, true)
+    def hidden(p: Path): Boolean = p.depth() > root.depth() &&
+      (p.getName.startsWith("_") || p.getName.startsWith(".") || hidden(p.getParent))
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath).filterNot(hidden)
+  }
+
+  private def footer(spark: SparkSession, file: org.apache.hadoop.fs.Path) = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    try reader.getFooter finally reader.close()
   }
 
   /** Session-timestamp normalize: parquet written with naive (isAdjustedToUTC

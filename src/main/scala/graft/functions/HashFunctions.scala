@@ -1,11 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Parse a hex string (1..16 chars) as an UNSIGNED 64-bit value and
@@ -39,6 +41,175 @@ case class HexToSignedLong(child: Expression) extends UnaryExpression {
 object HexToSignedLong {
   /** Static entry point shared by interpreted eval and generated code. */
   def parse(s: UTF8String): Long = java.lang.Long.parseUnsignedLong(s.toString, 16)
+}
+
+/** MinHash signature of a shingle array as one codegen expression: lane
+  * `p` is the minimum over the non-null shingles `s` of the unsigned 32-bit
+  * big-endian word `p % 4` of `md5("{p / 4}:" + s)` — exactly
+  * `MinHashLSH.permHash` folded by `array_min`, computed with
+  * `numPerm / 4` digests per shingle and no hex round-trip. A lane is null
+  * when the array holds no non-null shingle, as `array_min` gives.
+  *
+  * It replaces an explode, `numPerm / 4` md5 columns and a `numPerm`-way
+  * `min` aggregate (one large generated class plus a shuffle) with a
+  * per-row call inside the scan's whole-stage codegen.
+  */
+case class MinHashSignature(child: Expression, numPerm: Int) extends UnaryExpression {
+  require(numPerm > 0 && numPerm % 4 == 0,
+    s"numPerm=$numPerm must be a positive multiple of 4 (128-bit MD5 split into 32-bit lanes)")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(s"minhash_signature needs array<string>, got $other")
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    MinHashSignature.sign(input.asInstanceOf[ArrayData], numPerm)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashSignature.sign($c, $numPerm)")
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
+    copy(child = newChild)
+
+  override def prettyName: String = "minhash_signature"
+}
+
+object MinHashSignature {
+  private[functions] val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  /** Static entry point shared by interpreted eval and generated code. */
+  def sign(shingles: ArrayData, numPerm: Int): ArrayData = {
+    val md = md5.get()
+    val nMd5 = numPerm / 4
+    val prefixes = Array.tabulate(nMd5)(q => s"$q:".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val mins = Array.fill(numPerm)(Long.MaxValue)
+    val digest = new Array[Byte](16)
+    var seen = false
+    var i = 0
+    while (i < shingles.numElements()) {
+      if (!shingles.isNullAt(i)) {
+        seen = true
+        val s = shingles.getUTF8String(i).getBytes
+        var q = 0
+        while (q < nMd5) {
+          md.update(prefixes(q))
+          md.update(s)
+          md.digest(digest, 0, 16)
+          var l = 0
+          while (l < 4) {
+            val v = ((digest(4 * l) & 0xffL) << 24) | ((digest(4 * l + 1) & 0xffL) << 16) |
+              ((digest(4 * l + 2) & 0xffL) << 8) | (digest(4 * l + 3) & 0xffL)
+            val p = 4 * q + l
+            if (v < mins(p)) mins(p) = v
+            l += 1
+          }
+          q += 1
+        }
+      }
+      i += 1
+    }
+    if (seen) UnsafeArrayData.fromPrimitiveArray(mins)
+    else new GenericArrayData(new Array[Any](numPerm))
+  }
+}
+
+/** MinHash band hashes of a signature as one codegen expression: band `b`
+  * is the md5 hex of lanes `[b * rowsPerBand, (b + 1) * rowsPerBand)` as
+  * decimal strings joined by "|", null lanes skipped — exactly
+  * `MinHashLSH.bandHashes` (`md5(array_join(transform(slice(...))))`), whose
+  * lambdas keep the plan node that evaluates them out of whole-stage codegen.
+  */
+case class MinHashBands(child: Expression, numBands: Int, rowsPerBand: Int)
+  extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
+  override protected def nullSafeEval(input: Any): Any =
+    MinHashBands.bands(input.asInstanceOf[ArrayData], numBands, rowsPerBand)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.MinHashBands.bands($c, $numBands, $rowsPerBand)")
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashBands =
+    copy(child = newChild)
+
+  override def prettyName: String = "minhash_bands"
+}
+
+object MinHashBands {
+  private val HexDigits = "0123456789abcdef".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+
+  /** Static entry point shared by interpreted eval and generated code. */
+  def bands(sig: ArrayData, numBands: Int, rowsPerBand: Int): ArrayData = {
+    val md = MinHashSignature.md5.get()
+    val n = sig.numElements()
+    val sb = new java.lang.StringBuilder
+    val out = new Array[Any](numBands)
+    var b = 0
+    while (b < numBands) {
+      sb.setLength(0)
+      var i = b * rowsPerBand
+      while (i < math.min((b + 1) * rowsPerBand, n)) {
+        if (!sig.isNullAt(i)) {
+          if (sb.length > 0) sb.append('|')
+          sb.append(sig.getLong(i))
+        }
+        i += 1
+      }
+      val d = md.digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val hex = new Array[Byte](32)
+      var k = 0
+      while (k < 16) {
+        hex(2 * k) = HexDigits((d(k) >> 4) & 0xf)
+        hex(2 * k + 1) = HexDigits(d(k) & 0xf)
+        k += 1
+      }
+      out(b) = UTF8String.fromBytes(hex)
+      b += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
+/** Signature positions where two MinHash signatures agree (null lanes
+  * never do, and positions past the shorter one never do) — the
+  * `size(filter(zip_with(a, b, _ === _), identity))` count as one codegen
+  * expression.
+  */
+case class MinHashMatches(left: Expression, right: Expression) extends BinaryExpression {
+
+  override def dataType: DataType = LongType
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    MinHashMatches.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.MinHashMatches.count($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): MinHashMatches =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "minhash_matches"
+}
+
+object MinHashMatches {
+  /** Static entry point shared by interpreted eval and generated code. */
+  def count(a: ArrayData, b: ArrayData): Long = {
+    val n = math.min(a.numElements(), b.numElements())
+    var m = 0L
+    var i = 0
+    while (i < n) {
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i)) m += 1
+      i += 1
+    }
+    m
+  }
 }
 
 /** Unicode NFC normalization as a native codegen expression. Exact dedup
@@ -82,13 +253,25 @@ object NfcNormalize {
 
 /** Column-level helpers shared by the fingerprint modes and the north-star
   * operators. Everything here composes built-in codegen'd functions except
-  * [[GraftFunctions.hexToSignedLong]] (custom expression, above).
+  * the lifts of the custom expressions above.
   */
 object GraftFunctions {
 
   /** Lift the custom [[HexToSignedLong]] expression to the Column API. */
   def hexToSignedLong(c: Column): Column =
     Bridge.column(HexToSignedLong(Bridge.expression(c)))
+
+  /** Lift the custom [[MinHashSignature]] expression to the Column API. */
+  def minhashSignature(shingles: Column, numPerm: Int): Column =
+    Bridge.column(MinHashSignature(Bridge.expression(shingles), numPerm))
+
+  /** Lift the custom [[MinHashBands]] expression to the Column API. */
+  def minhashBands(sig: Column, numBands: Int, rowsPerBand: Int): Column =
+    Bridge.column(MinHashBands(Bridge.expression(sig), numBands, rowsPerBand))
+
+  /** Lift the custom [[MinHashMatches]] expression to the Column API. */
+  def minhashMatches(a: Column, b: Column): Column =
+    Bridge.column(MinHashMatches(Bridge.expression(a), Bridge.expression(b)))
 
   /** Lift the custom [[NfcNormalize]] expression to the Column API. */
   def nfcNormalize(c: Column): Column =

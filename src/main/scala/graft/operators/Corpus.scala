@@ -445,23 +445,27 @@ object Corpus {
     * shuffle at all; chunk count ≈ n_tokens/stride rows out.
     */
   def chunk(docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
-            chunkTokens: Int, stride: Int): org.apache.spark.sql.DataFrame = {
+            chunkTokens: Int, stride: Int,
+            passThrough: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
     require(stride >= 1 && stride <= chunkTokens,
       s"stride=$stride must be in [1, chunkTokens=$chunkTokens]")
-    docs.select(col(idCol).as("doc_id"), TextAnalysis.tokens(col(textCol)).as("tk"))
+    // `passThrough` columns ride along on every chunk of their document, so
+    // a caller keeping per-document attributes needs no join back
+    val carry = passThrough.map(col)
+    docs.select((col(idCol).as("doc_id") +: carry) :+ TextAnalysis.tokens(col(textCol)).as("tk"): _*)
       .withColumn("n", size(col("tk")).cast("long"))
       // ceil((n - chunkTokens) / stride) + 1 chunks; 1 when n <= chunkTokens
       .withColumn("n_chunks",
         when(col("n") <= chunkTokens, 1L)
           .otherwise(expr(s"(n - $chunkTokens + $stride - 1) div $stride") + 1L))
-      .select(col("doc_id"), col("tk"), col("n"),
-        explode(sequence(lit(0L), col("n_chunks") - 1L)).as("i"))
-      .select(col("doc_id"), col("i").as("chunk_idx"),
+      .select((col("doc_id") +: carry) ++ Seq(col("tk"), col("n"),
+        explode(sequence(lit(0L), col("n_chunks") - 1L)).as("i")): _*)
+      .select((Seq(col("doc_id"), col("i").as("chunk_idx"),
         (col("i") * stride + 1L).as("start_pos"),
         least(lit(chunkTokens.toLong), col("n") - col("i") * stride).as("n_chunk_tokens"),
         array_join(slice(col("tk"), (col("i") * stride + 1L).cast("int"),
           least(lit(chunkTokens.toLong), col("n") - col("i") * stride).cast("int")), " ")
-          .as("chunk_text"))
+          .as("chunk_text")) ++ carry): _*)
   }
 
   /** DuckDB twin of [[chunk]] over the `documents` fixture. */
@@ -491,15 +495,25 @@ object Corpus {
     * serializing the corpus through one global-order partition.
     */
   def shuffle(docs: org.apache.spark.sql.DataFrame, idCol: String,
-              seed: Int, nShards: Int): org.apache.spark.sql.DataFrame = {
+              seed: Int, nShards: Int): org.apache.spark.sql.DataFrame =
+    withShuffleOrder(docs.select(col(idCol).as("id")), "id", seed, nShards, "shard", "pos")
+      .select(col("shard"), col("pos"), col("id"))
+
+  /** `docs` with [[shuffle]]'s order appended as `shardCol` and `posCol`:
+    * the same key and the one within-shard window, over the caller's own
+    * rows, so attaching the order needs no join back to `docs`.
+    */
+  def withShuffleOrder(docs: org.apache.spark.sql.DataFrame, idCol: String, seed: Int,
+                       nShards: Int, shardCol: String,
+                       posCol: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val key = md5(concat(lit(s"$seed:"), col(idCol).cast("string")))
-    val w = Window.partitionBy(col("shard")).orderBy(col("k"), col("id"))
-    docs.select(col(idCol).as("id"), key.as("k"))
-      .withColumn("shard",
-        (conv(substring(col("k"), 1, 8), 16, 10).cast("long") % nShards).cast("int"))
-      .withColumn("pos", row_number().over(w).cast("long"))
-      .select(col("shard"), col("pos"), col("id"))
+    val w = Window.partitionBy(col(shardCol)).orderBy(col("__k"), col(idCol))
+    docs.withColumn("__k", key)
+      .withColumn(shardCol,
+        (conv(substring(col("__k"), 1, 8), 16, 10).cast("long") % nShards).cast("int"))
+      .withColumn(posCol, row_number().over(w).cast("long"))
+      .drop("__k")
   }
 
   /** DuckDB twin of [[shuffle]] over the `documents` fixture. */
@@ -671,10 +685,16 @@ object Corpus {
     * |domains| micro of truncation.
     */
   def doremiWeights(docs: DataFrame, idCol: String, textCol: String,
-                    domainCol: String, alphaMicro: Long = 10000L): DataFrame =
-    doremiWeightsFromXent(Vocab.lmXent(docs, idCol, textCol),
-      docs.select(col(idCol).as("doc_id"), col(domainCol).as("source")),
-      alphaMicro)
+                    domainCol: String, alphaMicro: Long = 10000L): DataFrame = {
+    val x = Vocab.lmXent(docs, idCol, textCol)
+    // the result reads only the eager `per` checkpoint, so lmXent's bigram
+    // cache is released once that checkpoint is written (a cache of the same
+    // plan made elsewhere, e.g. the staged lmXentShared memo over the same
+    // documents, is dropped too and recomputes on its next use)
+    try doremiWeightsFromXent(x,
+      docs.select(col(idCol).as("doc_id"), col(domainCol).as("source")), alphaMicro)
+    finally graft.core.Staging.releaseCaches(x)
+  }
 
   /** [[doremiWeights]] over a PRE-BUILT per-doc cross-entropy table
     * (doc_id, n_bigrams, mean_xent_micro) — the staged-LM seam: the bigram

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.{minhashBands, minhashMatches, minhashSignature}
 import graft.operators.TextAnalysis.{duckTokens, shinglesFromTokens, tokens}
 
 /** Near-duplicate detection for a training-data pipeline: MinHash+LSH
@@ -12,10 +13,11 @@ import graft.operators.TextAnalysis.{duckTokens, shinglesFromTokens, tokens}
   * Hash functions are MD5-derived so every stage is engine-portable (DuckDB
   * oracle twins built from the same parameters).
   *
-  * Scale shape (100 TB): signatures are per-row expressions (scan-parallel,
-  * no shuffle). Candidate generation shuffles only narrow (id, band, hash)
-  * tuples — the standard LSH banding join — and exact verification joins
-  * signatures back by id. Nothing ever materializes the O(n²) pair space.
+  * Scale shape (100 TB): signatures are one per-row codegen kernel
+  * ([[graft.functions.MinHashSignature]]; scan-parallel, no shuffle).
+  * Candidate generation shuffles (id, signature, band, hash) rows — the
+  * standard LSH banding join — and counts matching signature positions on
+  * the band join itself. Nothing ever materializes the O(n²) pair space.
   */
 object MinHashLSH {
 
@@ -91,51 +93,35 @@ object MinHashLSH {
       .persist()
 
   /** Text-input signatures keep the shingle expression INLINE in the
-    * generator (NOT routed through [[shingleFrame]] + an attribute explode):
-    * exploding an attribute triggers Catalyst's InferFiltersFromGenerate,
-    * which synthesizes `size(sh) > 0 AND isnotnull(sh)` and pushes it below
-    * the repartition with the full tokenize+shingle expression substituted
-    * back in — every input row then computes the shingle pipeline 2-3x
-    * (measured r4: corpus_curated 4 s → ≥15 s). With the inline generator no
-    * filter is inferred and shingles compute exactly once per row.
+    * kernel's argument (NOT routed through [[shingled]] + an attribute
+    * explode): exploding an attribute triggers Catalyst's
+    * InferFiltersFromGenerate, which synthesizes `size(sh) > 0 AND
+    * isnotnull(sh)` and pushes it below the repartition with the full
+    * tokenize+shingle expression substituted back in — every input row then
+    * computes the shingle pipeline 2-3x (measured r4: corpus_curated 4 s →
+    * ≥15 s). Here nothing is exploded and shingles compute once per row.
+    *
+    * One output row per input row, so ids must be unique (they are keys
+    * everywhere in graft). Persisted: callers release it.
     */
   def signatures(df: DataFrame, idCol: String, textCol: String,
                  shingleN: Int, numPerm: Int): DataFrame =
-    signatureAgg(
-      graft.core.Readers.spread(
+    graft.core.Readers.spreadBySize(
         df.select(col(idCol).as("id"), col(textCol).as("text")), col("id"))
-        .withColumn("tk", tokens(col("text")))
-        .select(col("id"), explode(shinglesFromTokens(col("tk"), shingleN)).as("s")),
-      numPerm)
+      .withColumn("tk", tokens(col("text")))
+      .select(col("id"),
+        minhashSignature(shinglesFromTokens(col("tk"), shingleN), numPerm).as("sig"))
+      .persist()
 
-  /** Signatures from a PERSISTED `(id, sh)` frame (see [[shingled]]). Here
-    * the attribute explode's inferred filter is harmless — it reads the
-    * materialized array from the cache, not the recomputed pipeline.
+  /** Signatures from a PERSISTED `(id, sh)` frame (see [[shingled]]). A row
+    * with no shingles (an empty or null array) has no signature and drops,
+    * as in the explode-and-`min`-aggregate form (MinHashSpec's reference).
+    * Persisted: callers release it.
     */
   def signaturesFromShingles(shingled: DataFrame, numPerm: Int): DataFrame =
-    signatureAgg(shingled.select(col("id"), explode(col("sh")).as("s")), numPerm)
-
-  /** Explode + codegen'd hash-aggregate over `(id, s)` shingle rows instead
-    * of the per-row HOF [[signature]]: HOFs evaluate interpreted (closure per
-    * element); the exploded form runs inside whole-stage codegen with
-    * map-side partial min — measured ~4x faster at sf0.1. The numPerm/4 MD5
-    * hex strings are staged as named columns so each digest is computed
-    * exactly once per shingle (not relying on codegen CSE across the 4 lanes
-    * that read it).
-    */
-  private def signatureAgg(exploded0: DataFrame, numPerm: Int): DataFrame = {
-    val nMd5 = laneCount(numPerm)
-    val exploded = exploded0
-      .select(col("id") +: (0 until nMd5).map(q =>
-        md5(concat(lit(q.toString), lit(":"), col("s"))).as(s"h$q")): _*)
-    val mins = (0 until numPerm).map(p =>
-      min(conv(substring(col(s"h${p / LanesPerMd5}"), (p % LanesPerMd5) * 8 + 1, 8), 16, 10)
-        .cast("long")).as(s"m$p"))
-    exploded.groupBy(col("id"))
-      .agg(mins.head, mins.tail: _*)
-      .select(col("id"), array((0 until numPerm).map(p => col(s"m$p")): _*).as("sig"))
+    shingled.filter(size(col("sh")) > 0)
+      .select(col("id"), minhashSignature(col("sh"), numPerm).as("sig"))
       .persist()
-  }
 
   def candidatePairs(df: DataFrame, idCol: String, textCol: String,
                      shingleN: Int, numPerm: Int, numBands: Int): DataFrame =
@@ -151,7 +137,7 @@ object MinHashLSH {
     * set (dedup_bands_curve): signatures cost one corpus pass and are
     * banding-independent, so re-signing per configuration would triple the
     * expensive stage. Pass a persisted or checkpointed `sigs`: the banding
-    * reads it three times and caches nothing itself.
+    * caches nothing itself.
     */
   def candidatePairsFromSignatures(sigs: DataFrame, numPerm: Int,
                                    numBands: Int): DataFrame =
@@ -417,34 +403,46 @@ object MinHashLSH {
        WHERE ($docPredSql) ORDER BY doc_id"""
   }
 
-  private def candidatePairsFromSigs(sigsIn: DataFrame, numPerm: Int, numBands: Int): DataFrame = {
+  /** Band rows `(id, sig, band_idx, band_hash)`: each signature explodes
+    * into its `numBands` band hashes ([[bandHashes]] as one codegen
+    * expression) and carries the signature along, so a band match counts
+    * matching positions on the spot. The generator stays inline: an
+    * attribute explode would infer a filter that recomputes the band hashes
+    * below it (the note on [[signatures]]).
+    */
+  private def bandRows(sigs: DataFrame, numPerm: Int, numBands: Int): DataFrame = {
     require(numPerm % numBands == 0,
       s"numPerm=$numPerm must be divisible by numBands=$numBands or trailing signature positions silently drop from banding")
-    val rowsPerBand = numPerm / numBands
-    // no persist here: the input is read three times (the band self-join's
-    // one reused exchange and the two signature joins), so callers pass a
-    // persisted or checkpointed frame and own its release. A cache made
-    // here would be reachable from no handle and never released
-    val sigs = sigsIn
-      .withColumn("bands", bandHashes(col("sig"), numBands, rowsPerBand))
-    // narrow band relation: only (id, band_idx, band_hash) shuffles
-    val bands = sigs.select(col("id"), posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
-    val pairs = bands.as("x").join(bands.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_hash") === col("y.band_hash") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("doc_a"), col("y.id").as("doc_b")).distinct()
-    val sa = sigs.select(col("id").as("doc_a"), col("sig").as("sig_a"))
-    val sb = sigs.select(col("id").as("doc_b"), col("sig").as("sig_b"))
+    sigs.select(col("id"), col("sig"),
+      posexplode(minhashBands(col("sig"), numBands, numPerm / numBands))
+        .as(Seq("band_idx", "band_hash")))
+  }
+
+  private def bandMatch: Column =
+    col("x.band_idx") === col("y.band_idx") && col("x.band_hash") === col("y.band_hash")
+
+  private def withJaccard(pairs: DataFrame, numPerm: Int): DataFrame =
+    pairs.select(col("doc_a"), col("doc_b"), col("n_matching"),
+      (col("n_matching").cast("double") / numPerm).as("est_jaccard"))
+
+  /** One band self-join: the band rows are all the join moves, each
+    * carrying its `numPerm`-long signature, and `n_matching` is computed on
+    * the joined rows before one `distinct` — in place of re-shuffling the
+    * full signature frame into two joins against the distinct pairs.
+    * `n_matching` is a function of the pair, so the distinct keeps one row
+    * per pair. No persist here: callers pass a persisted or checkpointed
+    * `sigs` (each join side reads it) and own its release.
+    */
+  private def candidatePairsFromSigs(sigs: DataFrame, numPerm: Int, numBands: Int): DataFrame = {
+    val bands = bandRows(sigs, numPerm, numBands)
     // no output sort here: downstream consumers (cluster closure, jaccard
     // verification, curation) destroy any order immediately — a global sort
     // of the pair set is pure waste at scale. Callers that need deterministic
     // output (the registered query) add their own orderBy.
-    pairs.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn("n_matching",
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (u, v) => u === v), x => x)).cast("long"))
-      .select(col("doc_a"), col("doc_b"), col("n_matching"),
-        (col("n_matching").cast("double") / numPerm).as("est_jaccard"))
+    withJaccard(bands.as("x").join(bands.as("y"), bandMatch && col("x.id") < col("y.id"))
+      .select(col("x.id").as("doc_a"), col("y.id").as("doc_b"),
+        minhashMatches(col("x.sig"), col("y.sig")).as("n_matching"))
+      .distinct(), numPerm)
   }
 
   /** CTE staging shared by duck twins: id + tokens + shingles. */
@@ -456,7 +454,7 @@ object MinHashLSH {
     * checked against the EXISTING corpus through its persisted band/
     * signature index, plus within-batch pairs. Only the delta is tokenized,
     * shingled, and signed; the corpus contributes index rows (|corpus| ×
-    * numBands narrow tuples + |corpus| signatures), its TEXT is never
+    * numBands band rows, each carrying its signature), its TEXT is never
     * re-read — the property that turns a full-corpus O(corpus) re-dedup
     * into O(delta + index) per ingest at 100 TB. Existing×existing pairs
     * are absent BY CONSTRUCTION (they were resolved when those docs were
@@ -464,32 +462,19 @@ object MinHashLSH {
     */
   def incrementalCandidates(newSigs: DataFrame, indexSigs: DataFrame,
                             numPerm: Int, numBands: Int): DataFrame = {
-    require(numPerm % numBands == 0,
-      s"numPerm=$numPerm must be divisible by numBands=$numBands or trailing signature positions silently drop from banding")
-    val rowsPerBand = numPerm / numBands
-    def bandsOf(sigs: DataFrame) = sigs
-      .withColumn("bands", bandHashes(col("sig"), numBands, rowsPerBand))
-      .select(col("id"), posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
-    val nb = bandsOf(newSigs).persist()
-    val ib = bandsOf(indexSigs)
-    def bandCond = col("x.band_idx") === col("y.band_idx") &&
-      col("x.band_hash") === col("y.band_hash")
+    val nb = bandRows(newSigs, numPerm, numBands).persist()
+    val ib = bandRows(indexSigs, numPerm, numBands)
     // delta × index: pair order normalized (ingest ids interleave with the
-    // corpus, so neither side is uniformly the smaller id)
-    val cross = nb.as("x").join(ib.as("y"), bandCond)
+    // corpus, so neither side is uniformly the smaller id); n_matching is
+    // symmetric, so the signatures need no reordering
+    val cross = nb.as("x").join(ib.as("y"), bandMatch)
       .select(least(col("x.id"), col("y.id")).as("doc_a"),
-        greatest(col("x.id"), col("y.id")).as("doc_b"))
-    val within = nb.as("x").join(nb.as("y"), bandCond && col("x.id") < col("y.id"))
-      .select(col("x.id").as("doc_a"), col("y.id").as("doc_b"))
-    val pairs = cross.union(within).distinct()
-    val all = newSigs.union(indexSigs)
-    val sa = all.select(col("id").as("doc_a"), col("sig").as("sig_a"))
-    val sb = all.select(col("id").as("doc_b"), col("sig").as("sig_b"))
-    val result = pairs.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn("n_matching",
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (u, v) => u === v), x => x)).cast("long"))
-      .select(col("doc_a"), col("doc_b"), col("n_matching"),
-        (col("n_matching").cast("double") / numPerm).as("est_jaccard"))
+        greatest(col("x.id"), col("y.id")).as("doc_b"),
+        minhashMatches(col("x.sig"), col("y.sig")).as("n_matching"))
+    val within = nb.as("x").join(nb.as("y"), bandMatch && col("x.id") < col("y.id"))
+      .select(col("x.id").as("doc_a"), col("y.id").as("doc_b"),
+        minhashMatches(col("x.sig"), col("y.sig")).as("n_matching"))
+    val result = withJaccard(cross.union(within).distinct(), numPerm)
     // materialize-then-release (the ExactSubstr persist-lifecycle tail):
     // the delta band cache must not outlive this call — repeated ingests in
     // a long-lived session would otherwise accumulate cached partitions

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.Staging
 
 /** Transitive closure of near-dup candidate pairs into dedup clusters:
   * connected components by iterative min-label propagation, each doc labeled
@@ -32,13 +34,57 @@ object DedupClusters {
     * close on the driver (union-find), large ones via distributed min-label
     * propagation — identical output either way.
     */
-  def components(pairs: DataFrame, maxIters: Int = 10): DataFrame = {
-    val p = pairs.persist()
-    val result =
-      if (p.count() <= DriverPairLimit) unionFind(p)
-      else propagate(p, maxIters)
-    p.unpersist(blocking = false)
-    result
+  def components(pairs: DataFrame, maxIters: Int = 10): DataFrame =
+    closure(pairs, maxIters).fold(_.toDF(pairs.sparkSession), identity)
+
+  /** The closure of `pairs`: on the driver (`Left`) when the pair set fits
+    * [[DriverPairLimit]], else the distributed [[propagate]] result (`Right`,
+    * checkpointed; the caller releases it). The pairs are checkpointed
+    * lazily and counted in one job, which also writes the checkpoint; the
+    * union-find's collect then reads those blocks instead of recomputing
+    * the candidate generation. The pair checkpoint is released on return.
+    */
+  def closure(pairs: DataFrame, maxIters: Int = 10): Either[LocalComponents, DataFrame] = {
+    val (p, n) = Staging.checkpointCount(
+      pairs.select(col("doc_a").cast("long").as("doc_a"), col("doc_b").cast("long").as("doc_b")))
+    try {
+      if (n <= DriverPairLimit) Left(unionFind(p))
+      else {
+        val labels = propagate(p, maxIters)
+        val out = labels.localCheckpoint()
+        Staging.releaseCaches(labels)
+        Right(out)
+      }
+    } finally Staging.releaseFrame(p)
+  }
+
+  /** A closure computed on the driver: `docIds` ascending, `clusterIds(i)`
+    * the smallest doc id in the component of `docIds(i)`.
+    */
+  final case class LocalComponents(docIds: Array[Long], clusterIds: Array[Long]) {
+
+    def toDF(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      docIds.indices.map(i => (docIds(i), clusterIds(i))).toDF("doc_id", "cluster_id")
+    }
+
+    /** The documents a near-dup gate drops: every member but its cluster's
+      * representative (`rep` of the cluster id; by default the cluster id,
+      * the smallest member), and every member of a cluster with more than
+      * `maxSize` members, representative included.
+      */
+    def dropSet(maxSize: Option[Long], rep: Long => Long = identity): Array[Long] = {
+      val sizes = new LongLongMap(docIds.length)
+      clusterIds.foreach(c => sizes.put(c, sizes.getOrElse(c, 0L) + 1L))
+      val out = Array.newBuilder[Long]
+      var i = 0
+      while (i < docIds.length) {
+        val c = clusterIds(i)
+        if (maxSize.exists(sizes.getOrElse(c, 0L) > _) || docIds(i) != rep(c)) out += docIds(i)
+        i += 1
+      }
+      out.result()
+    }
   }
 
   /** Open-addressed long→long map (linear probing, power-of-two capacity) —
@@ -80,21 +126,20 @@ object DedupClusters {
     }
   }
 
-  /** Driver-side union-find with path compression over collected pairs;
-    * primitive long arrays end-to-end (no boxed tuples/maps near the limit).
+  /** Driver-side union-find with path compression over the collected
+    * (long) pairs of a checkpointed frame; primitive long arrays end-to-end
+    * (no boxed tuples or maps near the limit).
     */
-  private def unionFind(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    // typed collect: the encoder materializes specialized (Long, Long) tuples
-    // (~32 B/pair transient) instead of GenericRow objects several times larger
-    val rows = pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .as[(Long, Long)].collect()
-    val ea = new Array[Long](rows.length)
-    val eb = new Array[Long](rows.length)
-    var i = 0
-    while (i < rows.length) { ea(i) = rows(i)._1; eb(i) = rows(i)._2; i += 1 }
-    val parent = new LongLongMap(rows.length)
+  private def unionFind(pairs: DataFrame): LocalComponents = {
+    val parts = Staging.checkpointedRows(pairs).mapPartitions { rows =>
+      val a = Array.newBuilder[Long]
+      val b = Array.newBuilder[Long]
+      rows.foreach { r => a += r.getLong(0); b += r.getLong(1) }
+      Iterator((a.result(), b.result()))
+    }.collect()
+    val ea = parts.flatMap(_._1)
+    val eb = parts.flatMap(_._2)
+    val parent = new LongLongMap(ea.length)
     def find(x: Long): Long = {
       var r = x
       while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
@@ -102,7 +147,7 @@ object DedupClusters {
       while (parent.getOrElse(c, c) != c) { val n = parent.getOrElse(c, c); parent.put(c, r); c = n }
       r
     }
-    i = 0
+    var i = 0
     while (i < ea.length) {
       val (a, b) = (ea(i), eb(i))
       // seed both endpoints so every doc appears as a key in the output
@@ -112,9 +157,11 @@ object DedupClusters {
       if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
       i += 1
     }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    parent.foreachKey(d => out += ((d, find(d))))
-    out.sortBy(_._1).toSeq.toDF("doc_id", "cluster_id")
+    val docs = Array.newBuilder[Long]
+    parent.foreachKey(d => docs += d)
+    val sorted = docs.result()
+    java.util.Arrays.sort(sorted)
+    LocalComponents(sorted, sorted.map(find))
   }
 
   /** Distributed min-label propagation (the >10M-pairs path). */

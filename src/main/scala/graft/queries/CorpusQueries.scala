@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.QueryEntry
-import graft.core.Readers
+import graft.core.{Readers, Staging}
 import graft.operators.Corpus
 
 /** Corpus-management operators over `documents`: deterministic train/val/test
@@ -582,9 +582,12 @@ object CorpusQueries {
         // --max-xent-micro curate stage)
         val xentKept = gate("5_xent") {
           val xent = graft.operators.Vocab.lmXent(quality, "doc_id", "text")
-          quality.join(
+          val kept = quality.join(
             xent.filter(col("mean_xent_micro") > 3500000L).select("doc_id"),
             Seq("doc_id"), "left_anti").localCheckpoint()
+          // the eager checkpoint holds the gate: lmXent's bigram cache goes
+          Staging.releaseCaches(xent)
+          kept
         }
         // gate 6: DSIR top half by English-target likelihood (the
         // --dsir-target-lang/--dsir-keep-pct curate stage); weights are
@@ -600,9 +603,15 @@ object CorpusQueries {
           // ranked is cached + row-preserving, so this count is a cache
           // read, not a second DSIR pass
           val nW = ranked.count()
-          xentKept.join(
+          val kept = xentKept.join(
             ranked.filter(col("rnk") * 2L <= nW).select("doc_id"),
             Seq("doc_id"), "left_semi").localCheckpoint()
+          // the eager checkpoint holds the gate: release the rank frame (its
+          // cache and input checkpoint) and dsirWeights' bucketed bigram cache
+          ranked.unpersist(blocking = false)
+          Staging.releaseFrame(ranked)
+          Staging.releaseCaches(wdf)
+          kept
         }
         // gate 7: the trained LR filter over the DSIR survivors (the
         // --lr-target-lang/--min-lr-sigma-micro curate stage at the 0.5
@@ -633,9 +642,10 @@ object CorpusQueries {
         // docs is a real CacheManager persist — release it. The gate frames
         // (exact/near/…) are localCheckpoint-ed: their blocks are RDD-level,
         // not CacheManager entries, so Dataset.unpersist on them is a no-op
-        // (the r11 advisor finding); reclamation is GC-driven via the
-        // ContextCleaner once this invocation's references drop
+        // (the r11 advisor finding); the result is a local table of counts,
+        // so their checkpoints are released here
         docs.unpersist(blocking = false)
+        Seq(exact, near, decon, quality, xentKept, dsir).foreach(Staging.releaseFrame)
         lastWaterfallGateSeconds.set(secs)
         System.err.println("[waterfall] " + secs.map {
           case (s, t) => f"$s=$t%.2fs" }.mkString(" "))

@@ -84,58 +84,27 @@ object IngestStreams {
       }
   }
 
-  private val HexDigits = "0123456789abcdef".toCharArray
-
-  private def md5Hex(digest: java.security.MessageDigest, s: String): String = {
-    val bytes = digest.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = HexDigits((bytes(i) >> 4) & 0xf)
-      out(2 * i + 1) = HexDigits(bytes(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
   /** JVM twin of the batch banding expressions: tokenization is
     * `split(text, " ")` (trailing empties kept, as Spark's `split` keeps
     * them), shingles are the k-token windows with the short-doc whole-text
     * fallback of [[TextAnalysis.shinglesFromTokens]] (duplicates need no
-    * dedup — the min is unaffected), permutation p is the unsigned 32-bit
-    * lane p%4 of md5("{p/4}:shingle") exactly as [[MinHashLSH.permHash]],
-    * and band b hashes its lane minima joined by "|" as decimal strings
-    * exactly as [[MinHashLSH.bandHashes]].
+    * dedup — the min is unaffected); signing and banding call the batch
+    * kernels' own entry points ([[graft.functions.MinHashSignature]],
+    * [[graft.functions.MinHashBands]]) on that shingle array.
     */
   private[streaming] def bandHashesOf(text: String, shingleN: Int, numPerm: Int,
                                       numBands: Int, rowsPerBand: Int): Seq[String] = {
+    import org.apache.spark.unsafe.types.UTF8String
     val tk = text.split(" ", -1)
-    val shingles: Iterator[String] =
+    val shingles =
       if (tk.length >= shingleN)
-        (0 to tk.length - shingleN).iterator.map(i => tk.slice(i, i + shingleN).mkString(" "))
-      else Iterator(tk.mkString(" "))
-    val nMd5 = numPerm / MinHashLSH.LanesPerMd5
-    val mins = Array.fill(numPerm)(Long.MaxValue)
-    val digest = java.security.MessageDigest.getInstance("MD5")
-    for (s <- shingles) {
-      var q = 0
-      while (q < nMd5) {
-        val hex = md5Hex(digest, s"$q:$s")
-        var lane = 0
-        while (lane < MinHashLSH.LanesPerMd5) {
-          val v = java.lang.Long.parseLong(hex.substring(lane * 8, lane * 8 + 8), 16)
-          val p = q * MinHashLSH.LanesPerMd5 + lane
-          if (v < mins(p)) mins(p) = v
-          lane += 1
-        }
-        q += 1
-      }
-    }
-    (0 until numBands).map { b =>
-      val joined = (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(mins).mkString("|")
-      md5Hex(digest, joined)
-    }
+        (0 to tk.length - shingleN).map(i => tk.slice(i, i + shingleN).mkString(" "))
+      else Seq(tk.mkString(" "))
+    val sig = graft.functions.MinHashSignature.sign(
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        shingles.map(UTF8String.fromString).toArray[Any]), numPerm)
+    val bands = graft.functions.MinHashBands.bands(sig, numBands, rowsPerBand)
+    (0 until numBands).map(b => bands.getUTF8String(b).toString)
   }
 
   /** The stateful bucket join: emits each candidate pair at the arrival of

@@ -320,6 +320,23 @@ class CorpusSpec extends SparkSpec {
     s7.unpersist()
   }
 
+  test("chunk pass-through and withShuffleOrder equal the joins they replace") {
+    import spark.implicits._
+    val docs = Readers.fixture(spark, sfDir, "documents")
+    val carried = Corpus.chunk(docs, "doc_id", "text", 16, 12, passThrough = Seq("lang", "source"))
+    val joined = Corpus.chunk(docs, "doc_id", "text", 16, 12)
+      .join(docs.select("doc_id", "lang", "source"), "doc_id")
+    def chunkRows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "chunk_idx", "start_pos", "n_chunk_tokens", "chunk_text", "lang", "source")
+        .as[(Long, Long, Long, Long, String, String, String)].collect().toSeq.sorted
+    assert(chunkRows(carried) == chunkRows(joined))
+    val ordered = Corpus.withShuffleOrder(docs, "doc_id", 7, 4, "shard", "pos")
+      .select("shard", "pos", "doc_id").as[(Int, Long, Long)].collect().toSeq.sorted
+    val viaShuffle = Corpus.shuffle(docs, "doc_id", 7, 4)
+      .select("shard", "pos", "id").as[(Int, Long, Long)].collect().toSeq.sorted
+    assert(ordered.nonEmpty && ordered == viaShuffle)
+  }
+
   test("frozen-scorer replay equals the batch DSIR weights bit for bit") {
     // the round-11 one-pass frozenScorer (llr map + unseen-bucket default)
     // must reproduce dsirWeights exactly when replayed over the training

@@ -366,6 +366,40 @@ class CurateSpec extends SparkSpec {
     assert(Curate.parse(Seq("--max-cluster-size", "1", "in", "out")).isLeft)
   }
 
+  test("the driver-side near-dup drop set equals the distributed drop frame") {
+    // a 4-doc near-dup clique, a pair whose higher id is the longer (higher-
+    // quality) text, and a singleton; every --keep-best / cap combination
+    // must drop the same documents on both closure paths
+    import graft.operators.{DedupClusters, MinHashLSH}
+    val farm = (1 to 40).map(i => s"tok$i").mkString(" ")
+    val pair = (1 to 40).map(i => s"pair$i").mkString(" ")
+    val docs = Seq(
+      (1L, s"$farm endA"), (2L, s"$farm endB"), (3L, s"$farm endC"), (4L, s"$farm endD"),
+      (5L, s"$pair endA"), (6L, s"$pair endB plus extra distinct tail tokens here now"),
+      (7L, (1 to 30).map(i => s"other$i").mkString(" ")))
+      .toDF("doc_id", "text")
+    val sigs = MinHashLSH.signatures(docs, "doc_id", "text", 3, 16)
+    val pairs = MinHashLSH.candidatePairsFromSignatures(sigs, 16, 4)
+      .filter(col("est_jaccard") >= 0.5).select("doc_a", "doc_b")
+    val local = DedupClusters.closure(pairs).swap.toOption.get
+    // the distributed closure a pair set past DriverPairLimit takes
+    val comp = DedupClusters.propagate(pairs)
+    try {
+      assert(comp.as[(Long, Long)].collect().toSet ==
+        local.docIds.zip(local.clusterIds).toSet)
+      for (keepBest <- Seq(false, true); cap <- Seq(None, Some(3L))) {
+        val cfg = Curate.Config(keepBest = keepBest, maxClusterSize = cap)
+        val driver = local.dropSet(cap,
+          if (keepBest) Curate.bestRepresentatives(docs, local) else identity).toSet
+        val frame = Curate.nearDropFrame(docs, comp, cfg).as[Long].collect().toSet
+        assert(driver.nonEmpty && driver == frame, s"$cfg: driver $driver, frame $frame")
+      }
+    } finally {
+      graft.core.Staging.releaseCaches(comp)
+      sigs.unpersist()
+    }
+  }
+
   test("a gate that drops every document writes nothing and reads nothing back") {
     val dir = java.nio.file.Files.createTempDirectory("graft-curate-pii-all").toString
     Seq((1L, "contact me at alice@example.com for the table scan rows", "en", "s0"),
@@ -400,12 +434,32 @@ class CurateSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft-curate-jobs").toString
     val (funnel, jobs) = jobsOf(Curate.run(spark, benchGates(out)))
     assert(funnel.toMap.apply("written") > 0, funnel.toString)
-    // per stage one counting job plus its shuffle-map jobs; the LR gate adds
-    // its NB init and one aggregate job per GD step. The run takes 47 jobs
-    // here; eager checkpoints plus recounts and per-step SQL took 110
+    // per stage one counting job plus its shuffle-map jobs; the near-dup
+    // closure's one collect; the LR gate's NB init and one aggregate job per
+    // GD step; the write. `input` and `written` come from parquet footers.
+    // Measured: 30 jobs (47 while the closure counted and collected twice,
+    // the signatures were an aggregate and the output tail joined back and
+    // re-read; 110 with eager checkpoints, recounts and per-step SQL)
     val lrJobs = jobs.count(_.contains("LogReg.scala"))
     assert(lrJobs <= 1 + graft.queries.TextQueries.LrSteps, jobs.mkString("\n"))
-    assert(jobs.size <= 55, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    assert(jobs.count(_.startsWith("collect at DedupClusters")) == 1, jobs.mkString("\n"))
+    assert(jobs.size <= 30, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+  }
+
+  test("a second identical Curate.run with the benchmark gates compiles almost no code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def run(): Seq[(String, Long)] = Curate.run(spark,
+      benchGates(java.nio.file.Files.createTempDirectory("graft-curate-warm").toString))
+    val first = run()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = run()
+    val recompiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    assert(second == first)
+    // the run's generated classes fit Spark's codegen cache (100 entries; a
+    // whole-stage class takes two, the driver's and the executor's): measured
+    // 0 recompiles here, where the aggregate signatures, the HOF band
+    // hashes and the output tail's joins recompiled about 110
+    assert(recompiled <= 10, recompiled)
   }
 
   test("Curate.run leaves no persisted RDD behind") {

@@ -356,4 +356,63 @@ class StagingSpec extends SparkSpec {
     val staged = segSet(TextQueries.bpeSegShared(spark, sfDir))
     assert(staged == fresh)
   }
+
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("checkpoint release logs no truncated-lineage warning; Curate and Cli leave no persisted RDD") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-release-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    val before = persisted
+    try {
+      val out = java.nio.file.Files.createTempDirectory("graft-release-curate").toString
+      assert(Curate.run(spark, Curate.Config(docsDir = sfDir, outDir = out)).toMap.apply("written") > 0)
+      val cfg = Cli.parse(Seq("--include-tables", "nation,orders", "--aliases", "a,b",
+        sfDir, sfDir)).toOption.get
+      assert(Cli.run(spark, cfg, new java.io.StringWriter) == 0)
+    } finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val warned = scala.jdk.CollectionConverters.CollectionHasAsScala(lines).asScala
+      .filter(_.contains("was locally checkpointed"))
+    assert(warned.isEmpty, warned.mkString("\n"))
+    assert((persisted -- before).isEmpty, persisted -- before)
+  }
+
+  test("corpus_waterfall releases its gate checkpoints and the lmXent/dsirWeights caches") {
+    // the staged signature memo gate 2 slices is shared with other queries:
+    // it belongs to the baseline
+    DedupStaging.signatures(spark, sfDir)
+    val before = persisted
+    val rows = SparkEntry.queries("corpus_waterfall")(spark, sfDir).collect()
+    assert(rows.length == 8, rows.toSeq)
+    assert((persisted -- before).isEmpty, persisted -- before)
+  }
+
+  test("doremiWeights keeps only its per-domain checkpoint, not lmXent's cache") {
+    // a slice no other caller trains on: an identical plan cached elsewhere
+    // (the staged lmXentShared memo) would be reused, not cached anew
+    val docs = Readers.fixture(spark, sfDir, "documents").filter(col("doc_id") % 3 =!= 1)
+    val before = persisted
+    val w = graft.operators.Corpus.doremiWeights(docs, "doc_id", "text", "source")
+    assert(w.count() > 0)
+    val checkpoint = w.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+    assert(checkpoint.size == 1 && persisted -- before == checkpoint, persisted -- before)
+    graft.core.Staging.releaseFrame(w)
+    assert((persisted -- before).isEmpty, persisted -- before)
+  }
 }
