@@ -296,17 +296,20 @@ object Curate {
       // --max-cluster-size: a cluster wider than the cap is a template farm —
       // its REPRESENTATIVE is as synthetic as its members, so the whole
       // cluster drops (dedup_cluster_sizes is the histogram that picks the
-      // cap). A closure that fits on the driver yields the drop set there,
-      // and the stage is one broadcast anti-join; the signatures are
-      // persisted for the closure's one counting job
+      // cap). A closure that fits on the driver yields the min-id and cap
+      // drop set there, and the stage is one broadcast anti-join; --keep-best
+      // ranks each cluster with the frame rule on either closure path. The
+      // signatures are persisted for the closure's one counting job
       val sigs = MinHashLSH.signatures(exact.df, "doc_id", "text", 3, 16)
       val pairs = MinHashLSH.candidatePairsFromSignatures(sigs, 16, 4)
         .filter(col("est_jaccard") >= 0.5).select("doc_a", "doc_b")
       val closure = try DedupClusters.closure(pairs) finally sigs.unpersist(blocking = false)
       val nearDeduped = closure match {
+        case Left(local) if cfg.keepBest =>
+          stage(exact.df.join(nearDropFrame(exact.df, local.toDF(spark), cfg),
+            Seq("doc_id"), "left_anti"))
         case Left(local) =>
-          val drop = local.dropSet(cfg.maxClusterSize,
-            if (cfg.keepBest) bestRepresentatives(exact.df, local) else identity)
+          val drop = local.dropSet(cfg.maxClusterSize)
           if (drop.isEmpty) exact
           else {
             import spark.implicits._
@@ -532,10 +535,11 @@ object Curate {
     } finally staged.foreach(Staging.releaseFrame)
   }
 
-  /** The near-dup drop set as a frame, for a closure too large for the
-    * driver: the non-representatives (per `--keep-best`, a window over each
-    * cluster) plus, under `--max-cluster-size`, every member of a larger
-    * cluster.
+  /** The near-dup drop set as a frame over a closure `comp` (doc_id,
+    * cluster_id): the non-representatives (per `--keep-best`, a window over
+    * each cluster) plus, under `--max-cluster-size`, every member of a larger
+    * cluster. Used for a closure too large for the driver, and for
+    * `--keep-best` on either path.
     */
   private[graft] def nearDropFrame(docs: DataFrame, comp: DataFrame, cfg: Config): DataFrame = {
     val dropNonReps =
@@ -554,33 +558,6 @@ object Curate {
           .filter(col("sz") > maxSz).select("cluster_id"),
         Seq("cluster_id"), "left_semi").select("doc_id")
       dropNonReps.unionByName(farms).distinct()
-    }
-  }
-
-  /** `--keep-best` on a driver-side closure: each cluster's member with the
-    * highest quality score, the smallest id among ties — the order of the
-    * window in [[nearDropFrame]]. One job collects the members' scores.
-    */
-  private[graft] def bestRepresentatives(docs: DataFrame,
-                                         local: DedupClusters.LocalComponents): Long => Long = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val scored = docs.join(broadcast(local.toDF(spark)), "doc_id")
-      .select(col("cluster_id"), col("doc_id"),
-        TextAnalysis.qualityScore(TextAnalysis.tokens(col("text"))).cast("double").as("q"))
-      .as[(Long, Long, Option[Double])].collect()
-    // the window's `q DESC` order: null last, NaN first, -0.0 == 0.0
-    def higher(x: Option[Double], y: Option[Double]): Int = (x, y) match {
-      case (Some(a), Some(b)) =>
-        if (a.isNaN || b.isNaN) java.lang.Boolean.compare(a.isNaN, b.isNaN)
-        else java.lang.Double.compare(a + 0.0, b + 0.0)
-      case _ => java.lang.Boolean.compare(x.isDefined, y.isDefined)
-    }
-    scored.groupBy(_._1).map { case (c, members) =>
-      c -> members.reduce { (x, y) =>
-        val h = higher(x._3, y._3)
-        if (h > 0 || (h == 0 && x._2 < y._2)) x else y
-      }._2
     }
   }
 

@@ -134,6 +134,12 @@ object Staging {
       .uncacheQuery(spark, p, cascade = false, blocking = false)))
   }
 
+  /** Whether the session's cache manager holds a cache of `ds`'s plan. */
+  def isCached(ds: Dataset[_]): Boolean =
+    ds.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+      .lookupCachedData(ds.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+
   /** The RDDs behind a frame's `LogicalRDD` leaves — for a localCheckpoint-ed
     * frame (or anything derived from one) these are exactly the persisted
     * checkpoint RDDs; unpersisting a never-persisted LogicalRDD (e.g. a

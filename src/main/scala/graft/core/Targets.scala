@@ -278,9 +278,11 @@ object Readers {
         .map(_.getRowCount).sum
     }.sum
 
-  /** Data files under `path`, recursively, skipping what Spark's reader
-    * skips: any file or directory whose name starts with `_` or `.`
-    * (`_SUCCESS`, `.crc` checksums, `_temporary`).
+  /** Data files under `path`, recursively, skipping what Spark's file
+    * index skips: a file or directory whose name starts with `.`, or with
+    * `_` and has no `=` (`_SUCCESS`, `.crc` checksums, `_temporary`; a
+    * partition directory such as `_k=1` is kept), or ends with `._COPYING_`
+    * (a copy in flight). Every other file is read as parquet.
     */
   private def dataFiles(spark: SparkSession, path: String): Iterator[org.apache.hadoop.fs.Path] = {
     import org.apache.hadoop.fs.Path
@@ -288,7 +290,8 @@ object Readers {
     val root = fs.makeQualified(new Path(path))
     val files = fs.listFiles(root, true)
     def hidden(p: Path): Boolean = p.depth() > root.depth() &&
-      (p.getName.startsWith("_") || p.getName.startsWith(".") || hidden(p.getParent))
+      ((p.getName.startsWith("_") && !p.getName.contains("=")) ||
+        p.getName.startsWith(".") || p.getName.endsWith("._COPYING_") || hidden(p.getParent))
     Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath).filterNot(hidden)
   }
 

@@ -686,14 +686,15 @@ object Corpus {
     */
   def doremiWeights(docs: DataFrame, idCol: String, textCol: String,
                     domainCol: String, alphaMicro: Long = 10000L): DataFrame = {
-    val x = Vocab.lmXent(docs, idCol, textCol)
     // the result reads only the eager `per` checkpoint, so lmXent's bigram
-    // cache is released once that checkpoint is written (a cache of the same
-    // plan made elsewhere, e.g. the staged lmXentShared memo over the same
-    // documents, is dropped too and recomputes on its next use)
+    // cache is released once that checkpoint is written, unless another
+    // owner had cached the same plan (e.g. the staged lmXentShared memo over
+    // the same documents): lmXent then reused that cache, which stays
+    val shared = graft.core.Staging.isCached(Vocab.lmBigrams(docs, idCol, textCol))
+    val x = Vocab.lmXent(docs, idCol, textCol)
     try doremiWeightsFromXent(x,
       docs.select(col(idCol).as("doc_id"), col(domainCol).as("source")), alphaMicro)
-    finally graft.core.Staging.releaseCaches(x)
+    finally if (!shared) graft.core.Staging.releaseCaches(x)
   }
 
   /** [[doremiWeights]] over a PRE-BUILT per-doc cross-entropy table

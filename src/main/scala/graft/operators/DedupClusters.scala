@@ -69,18 +69,17 @@ object DedupClusters {
     }
 
     /** The documents a near-dup gate drops: every member but its cluster's
-      * representative (`rep` of the cluster id; by default the cluster id,
-      * the smallest member), and every member of a cluster with more than
-      * `maxSize` members, representative included.
+      * representative (the cluster id, its smallest member), and every member
+      * of a cluster with more than `maxSize` members, representative included.
       */
-    def dropSet(maxSize: Option[Long], rep: Long => Long = identity): Array[Long] = {
+    def dropSet(maxSize: Option[Long]): Array[Long] = {
       val sizes = new LongLongMap(docIds.length)
       clusterIds.foreach(c => sizes.put(c, sizes.getOrElse(c, 0L) + 1L))
       val out = Array.newBuilder[Long]
       var i = 0
       while (i < docIds.length) {
         val c = clusterIds(i)
-        if (maxSize.exists(sizes.getOrElse(c, 0L) > _) || docIds(i) != rep(c)) out += docIds(i)
+        if (maxSize.exists(sizes.getOrElse(c, 0L) > _) || docIds(i) != c) out += docIds(i)
         i += 1
       }
       out.result()

@@ -362,13 +362,7 @@ object Vocab {
     * drop (no bigram to score).
     */
   def lmXent(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tk = split(col(textCol), " ")
-    val bigrams = transform(sequence(lit(1), size(tk) - 1),
-      i => struct(element_at(tk, i).as("w1"), element_at(tk, i + 1).as("w2")))
-    val docBg = docs.filter(size(tk) >= 2)
-      .select(col(idCol).as("doc_id"), explode(bigrams).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .persist()
+    val docBg = lmBigrams(docs, idCol, textCol).persist()
     val pair = docBg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_pair"))
     val uni = pair.groupBy(col("w1")).agg(sum(col("n_pair")).as("n_w1"))
     val lm = pair.join(uni, "w1")
@@ -381,6 +375,19 @@ object Vocab {
       .agg(count(lit(1)).as("n_bigrams"), sum(col("xent_micro")).as("sum_x"))
       .select(col("doc_id"), col("n_bigrams"),
         expr("sum_x div n_bigrams").as("mean_xent_micro"))
+  }
+
+  /** The (doc_id, w1, w2) bigram rows [[lmXent]] persists, unpersisted: a
+    * caller can ask whether that plan is already cached before it runs
+    * [[lmXent]].
+    */
+  private[graft] def lmBigrams(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val tk = split(col(textCol), " ")
+    val bigrams = transform(sequence(lit(1), size(tk) - 1),
+      i => struct(element_at(tk, i).as("w1"), element_at(tk, i + 1).as("w2")))
+    docs.filter(size(tk) >= 2)
+      .select(col(idCol).as("doc_id"), explode(bigrams).as("bg"))
+      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
   }
 
   /** DuckDB twin CTE chain for [[lmXent]], ending in

@@ -369,7 +369,8 @@ class CurateSpec extends SparkSpec {
   test("the driver-side near-dup drop set equals the distributed drop frame") {
     // a 4-doc near-dup clique, a pair whose higher id is the longer (higher-
     // quality) text, and a singleton; every --keep-best / cap combination
-    // must drop the same documents on both closure paths
+    // must drop the same documents on both closure paths (--keep-best ranks
+    // with the frame rule on both)
     import graft.operators.{DedupClusters, MinHashLSH}
     val farm = (1 to 40).map(i => s"tok$i").mkString(" ")
     val pair = (1 to 40).map(i => s"pair$i").mkString(" ")
@@ -389,8 +390,9 @@ class CurateSpec extends SparkSpec {
         local.docIds.zip(local.clusterIds).toSet)
       for (keepBest <- Seq(false, true); cap <- Seq(None, Some(3L))) {
         val cfg = Curate.Config(keepBest = keepBest, maxClusterSize = cap)
-        val driver = local.dropSet(cap,
-          if (keepBest) Curate.bestRepresentatives(docs, local) else identity).toSet
+        val driver =
+          if (keepBest) Curate.nearDropFrame(docs, local.toDF(spark), cfg).as[Long].collect().toSet
+          else local.dropSet(cap).toSet
         val frame = Curate.nearDropFrame(docs, comp, cfg).as[Long].collect().toSet
         assert(driver.nonEmpty && driver == frame, s"$cfg: driver $driver, frame $frame")
       }

@@ -45,4 +45,26 @@ class FixtureSchemaSpec extends SparkSpec {
         assert(sql.contains(c), s"$name: oracle sql missing output column $c")
     }
   }
+
+  test("parquetRows counts the rows Spark reads back from a partitioned write") {
+    import java.nio.file.{Files, StandardCopyOption}
+    val spark0 = spark
+    import spark0.implicits._
+    val dir = Files.createTempDirectory("graft-parquet-rows").resolve("out")
+    // a partition column whose directories start with `_` but hold `=`,
+    // which Spark reads; then files Spark skips: a copy in flight and a
+    // dot-file, both valid parquet
+    (0 until 50).map(i => (i.toLong, i % 3)).toDF("id", "_p")
+      .write.partitionBy("_p").parquet(dir.toString)
+    val part = Files.list(dir.resolve("_p=0")).filter(_.toString.endsWith(".parquet"))
+      .findFirst().get
+    Files.copy(part, part.resolveSibling(part.getFileName.toString + "._COPYING_"),
+      StandardCopyOption.REPLACE_EXISTING)
+    Files.copy(part, part.resolveSibling(".hidden.parquet"))
+    val read = spark.read.parquet(dir.toString).count()
+    assert(read == 50L)
+    assert(Readers.parquetRows(spark, dir.toString) == read)
+    assert(Readers.parquetRows(spark, part.toString) ==
+      spark.read.parquet(part.toString).count())
+  }
 }

@@ -415,4 +415,23 @@ class StagingSpec extends SparkSpec {
     graft.core.Staging.releaseFrame(w)
     assert((persisted -- before).isEmpty, persisted -- before)
   }
+
+  test("doremiWeights leaves a cache of lmXent's plan that another owner made") {
+    import graft.core.Staging
+    import graft.operators.{Corpus, Vocab}
+    val docs = Readers.fixture(spark, sfDir, "documents").filter(col("doc_id") % 3 =!= 2)
+    // another owner's lmXent over the same documents caches the bigram plan
+    // first; doremiWeights reuses that cache and must not drop it
+    val owned = Vocab.lmXent(docs, "doc_id", "text")
+    try {
+      assert(owned.count() > 0)
+      val before = persisted
+      val w = Corpus.doremiWeights(docs, "doc_id", "text", "source")
+      assert(w.count() > 0)
+      assert(Staging.isCached(Vocab.lmBigrams(docs, "doc_id", "text")))
+      Staging.releaseFrame(w)
+      assert(persisted == before, s"before $before, after $persisted")
+    } finally Staging.releaseCaches(owned)
+    assert(!Staging.isCached(Vocab.lmBigrams(docs, "doc_id", "text")))
+  }
 }
