@@ -58,7 +58,7 @@ object TestModes {
   *     whole-stage-codegen'd per partition. On a splittable input there is
   *     no shuffle; only when the planned scan cannot spread (one row group,
   *     gzip, a single hot file) does a pre-projection repartition fire
-  *     ([[Readers.spreadBySize]]'s splittability gate) so the md5 work is
+  *     ([[Readers.spread]]'s rule) so the md5 work is
   *     not pipelined into one task.
   *   - The exact digest needs a global PK-order: each partition sorts its
   *     rows in parallel and the driver merges the sorted runs (past
@@ -102,7 +102,7 @@ object Fingerprints {
     // shaped, so partitioning never changes a result); no-PK specs keep the
     // scan shape (their only hash consumers are PK-free aggregates).
     val spreadDf =
-      if (spec.pks.nonEmpty) Readers.spreadBySize(df, col(spec.pks.head)) else df
+      if (spec.pks.nonEmpty) Readers.spread(df, col(spec.pks.head)) else df
     spreadDf.select(
       Canon.pkSortKey(df.schema, spec.pks, cfg.hashPrimaryKeys, cfg.tsPrecision).as("k"),
       Canon.rowHash(df.schema, cols, cfg.tsPrecision, spec.jsonColumns).as("h"))
@@ -326,7 +326,7 @@ object Fingerprints {
     val keyCols = df.schema.fields.filterNot(f => typeContainsMap(f.dataType))
       .map(f => col(f.name)).toSeq
     val spreadDf =
-      if (keyCols.isEmpty) df else Readers.spreadBySize(df, struct(keyCols: _*))
+      if (keyCols.isEmpty) df else Readers.spread(df, struct(keyCols: _*))
     spreadDf.agg(statsDigestCol(df.schema, spec, cfg).as("fp")).head().getString(0)
   }
 
@@ -497,7 +497,7 @@ object Fingerprints {
     *    runs its own plan over the kept projection, as does
     *    composite-PK sparse when the pass streams.
     *
-    * An input that [[Readers.spreadBySize]] spreads adds the spread's
+    * An input that [[Readers.spread]] spreads adds the spread's
     * shuffle-map job in front of the count. Per-mode failures degrade to the
     * `(err)` sentinel like the reference (X3).
     */
@@ -510,7 +510,7 @@ object Fingerprints {
       // canonicalize+hash pass must not pipeline into a single scan task
       // when the input is unsplittable (missing PK columns still throw
       // inside this Try — the per-mode (err) degrade is unchanged)
-      val spread = if (spec.pks.nonEmpty) Readers.spreadBySize(df, col(spec.pks.head)) else df
+      val spread = if (spec.pks.nonEmpty) Readers.spread(df, col(spec.pks.head)) else df
       val src =
         if (!modes.contains(TestModes.Stats)) spread
         else spread.observe("stats", statsDigestCol(df.schema, spec, cfg).as("fp"))

@@ -21,6 +21,11 @@ import org.apache.spark.sql.graftbridge.Bridge
   *    rebuilds — and, unlike the hand-rolled copies, first releases the
   *    replaced entry's checkpoint blocks (they were unreachable garbage
   *    reclaimed only by GC before).
+  *  - '''Fresh''': a value is served only while the files directly under
+  *    its directory keep their names, lengths and modification times. When
+  *    they change, the entry is released and rebuilt, as for a replaced
+  *    session, so a long-lived JVM never serves a value built from files
+  *    that have since been rewritten.
   *  - '''Never evicted implicitly''': a localCheckpoint's lineage is
   *    truncated, so dropping its blocks while any live plan references them
   *    cannot recompute and fails the query. The cache is bounded by the
@@ -44,18 +49,23 @@ import org.apache.spark.sql.graftbridge.Bridge
 final class Staging[V](sessionScoped: Boolean = true)(
     build: (SparkSession, String) => V) {
 
-  private val cache = new ConcurrentHashMap[String, (SparkSession, V)]()
+  private case class Entry(session: SparkSession, files: Seq[Staging.FileStamp], value: V)
 
-  def apply(spark: SparkSession, sfDir: String): V =
+  private val cache = new ConcurrentHashMap[String, Entry]()
+
+  def apply(spark: SparkSession, sfDir: String): V = {
+    val files = Staging.topLevelFiles(sfDir)
     cache.compute(sfDir, { (_, cur) =>
-      if (cur != null && (!sessionScoped || (cur._1 eq spark))) cur
+      if (cur != null && (!sessionScoped || (cur.session eq spark)) && cur.files == files) cur
       else {
-        // a stale entry's blocks belong to a replaced session: drop them
-        // before building, else they linger unreleasable for the JVM's life
-        if (cur != null) Staging.releaseValue(cur._2)
-        (spark, build(spark, sfDir))
+        // a stale entry (a replaced session's blocks, or a value built from
+        // files that have since changed): drop it before building, else its
+        // blocks linger unreleasable for the JVM's life
+        if (cur != null) Staging.releaseValue(cur.value)
+        Entry(spark, files, build(spark, sfDir))
       }
-    })._2
+    }).value
+  }
 
   /** Session-free access for `sessionScoped = false` memos whose build
     * ignores the session (temp fixture dirs, driver-side arrays).
@@ -71,11 +81,21 @@ final class Staging[V](sessionScoped: Boolean = true)(
     */
   def release(sfDir: String): Unit = {
     val cur = cache.remove(sfDir)
-    if (cur != null) Staging.releaseValue(cur._2)
+    if (cur != null) Staging.releaseValue(cur.value)
   }
 }
 
 object Staging {
+
+  /** A file's name, length and modification time. */
+  private type FileStamp = (String, Long, Long)
+
+  /** The files directly under `dir`, stamped and sorted by name; empty when
+    * `dir` is not a directory.
+    */
+  private def topLevelFiles(dir: String): Seq[FileStamp] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten.filter(_.isFile)
+      .map(f => (f.getName, f.length, f.lastModified)).sortBy(_._1)
 
   /** Unpersist every checkpoint block reachable from `v`: walks DataFrames,
     * case classes / tuples, and collections, and closes `AutoCloseable`

@@ -164,71 +164,103 @@ object FileTarget {
 object Readers {
   import scala.util.control.NonFatal
   import org.apache.spark.sql.Column
+  import org.apache.spark.sql.catalyst.expressions.DynamicPruningExpression
   import org.apache.spark.sql.execution.{FileSourceScanExec, InputRDDCodegen, SparkPlan, UnionExec}
-  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec,
+    BroadcastQueryStageExec, ShuffleQueryStageExec}
   import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-  import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+  import org.apache.spark.sql.execution.datasources.FilePartition
+  import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+  import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, REPARTITION_BY_NUM,
+    ShuffleExchangeLike}
   import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-  /** Spread rows across all cores before a CPU-heavy per-row stage. An
-    * explicit partition count, not `repartition(col)`: AQE sizes shuffles by
-    * BYTES and would coalesce a few-MB frame back to one partition even when
-    * the downstream cost is CPU per row (measured: md5-heavy stages ran
-    * single-threaded without this).
-    */
-  def spread(df: DataFrame, key: Column): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
+  /** One task's worth of input: a frame that reads fewer bytes runs unspread. */
+  val SpreadFloorBytes: Long = 256L * 1024
 
-  /** Scale-adaptive spread (r13): partition count derived from the plan's
-    * size estimate — one partition per `bytesPerTask` of input, capped at
-    * defaultParallelism — so a 5-row dimension table pays NO exchange, the
-    * single-row-group fixture fact tables fan out across the machine, and
-    * a genuinely large input behaves exactly like [[spread]] (the cap).
-    * Sources without real statistics estimate huge and take the cap — the
-    * safe side for the CPU-heavy stages this guards. Use before per-row
-    * expensive projections whose input may be unsplittable; results must
-    * be (and for every caller here are) partitioning-independent.
+  /** Spread rows across all cores before a CPU-heavy per-row stage
+    * (canonicalize+md5, MinHash signatures, gram hashing): repartition by
+    * `key` to `defaultParallelism` partitions unless
+    *  - the bytes the input reads ([[inputBytes]]) are under
+    *    [[SpreadFloorBytes]] (a 5-row dimension table pays no exchange), or
+    *  - the input already arrives in at least half that many partitions
+    *    that hold rows ([[plannedPartitions]]): a splittable table scans in
+    *    parallel natively, and an exchange in front of the projection would
+    *    move every row only to spread work the scan already spreads.
     *
-    * Splittability gate (r13 advisor): a big SPLITTABLE table already scans
-    * in parallel, and repartitioning raw rows in front of the projection
-    * would be a full-table exchange that exists only to "spread" work the
-    * scan spreads natively — at 100 TB, pure cost. So the spread fires only
-    * when the planned scan's actual partition count is well below the
-    * target (one row group, gzip, a single hot file); a scan already at
-    * half the target parallelism or better keeps its native split shape
-    * and pays NO exchange. The split count comes from the planned scan
-    * ([[plannedPartitions]]), so the gate itself starts no job.
+    * A streaming frame always spreads: a micro-batch's layout is unknown
+    * when the query is planned. An explicit count, not `repartition(col)`:
+    * adaptive execution sizes shuffles by bytes and would coalesce a few-MB
+    * frame back to one partition even though the downstream cost is CPU per
+    * row. Deciding reads the plan and parquet footers only, so it starts no
+    * job. Callers' results must not depend on the partitioning (for every
+    * caller here they do not).
     */
-  def spreadBySize(df: DataFrame, key: Column,
-                   bytesPerTask: Long = 256 * 1024): DataFrame = {
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val cap = BigInt(df.sparkSession.sparkContext.defaultParallelism)
-    val target = ((bytes / bytesPerTask) min cap) max BigInt(1)
-    if (target <= 1) df
-    else {
-      val scanParts =
-        try plannedPartitions(df.queryExecution.sparkPlan) catch { case NonFatal(_) => 1 }
-      if (2 * scanParts >= target.toInt) df
-      else df.repartition(target.toInt, key)
-    }
+  def spread(df: DataFrame, key: Column): DataFrame = {
+    val n = df.sparkSession.sparkContext.defaultParallelism
+    def parallel =
+      try 2 * plannedPartitions(df.queryExecution.executedPlan) >= n
+      catch { case NonFatal(_) => false }
+    if (!df.isStreaming && (inputBytes(df) < SpreadFloorBytes || parallel)) df
+    else df.repartition(n, key)
   }
 
-  /** The partition count a plan's input arrives in, read off the planned
-    * (not executed) physical plan: a file scan's split count, a JDBC or
-    * local scan's RDD, an explicit exchange's partition count. Building
-    * these RDDs lists splits only — no job starts and no code is compiled,
-    * where `df.rdd` would compile the whole plan and, under adaptive
-    * execution, run its shuffle stages to learn the same number.
+  /** The estimated bytes `df` reads: the sum of its plan's leaves (for a
+    * parquet scan, its files' size). Not the estimate of `df` itself: that
+    * scales a projection by default type widths (20 bytes a string), which
+    * says nothing of the rows a per-row kernel will process.
     */
-  private[graft] def plannedPartitions(plan: SparkPlan): Int = plan match {
-    case s: FileSourceScanExec => s.inputRDD.getNumPartitions
-    case s: InputRDDCodegen => s.inputRDD.getNumPartitions
-    case e: ShuffleExchangeLike => e.numPartitions
-    case a: AdaptiveSparkPlanExec => plannedPartitions(a.inputPlan)
-    case m: InMemoryTableScanExec => plannedPartitions(m.relation.cachedPlan)
-    case u: UnionExec => u.children.map(plannedPartitions).sum
-    case leaf if leaf.children.isEmpty => leaf.outputPartitioning.numPartitions max 1
-    case p => p.children.map(plannedPartitions).max
+  private[graft] def inputBytes(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum
+
+  /** The partitions that hold rows when a physical plan's input arrives,
+    * read off the plan without executing it:
+    *  - a parquet scan counts the splits that contain a row group's
+    *    midpoint, the rule parquet's reader assigns row groups by; footers
+    *    are read only for files the scan cuts into more than one split;
+    *  - other scans (JDBC, local, a checkpoint's RDD) count their splits;
+    *  - an exchange counts its partitions when they are fixed (an explicit
+    *    `repartition(n)`, or no adaptive coalescing), and as one when
+    *    adaptive execution may coalesce them; a broadcast counts none.
+    * Building these RDDs lists splits only: no job starts and no code is
+    * compiled, where `df.rdd` would run adaptive shuffle stages to learn
+    * the same number.
+    */
+  private[graft] def plannedPartitions(plan: SparkPlan): Int = {
+    def go(p: SparkPlan, coalescing: Boolean): Int = p match {
+      case s: FileSourceScanExec if !s.partitionFilters.exists(_.isInstanceOf[DynamicPruningExpression]) =>
+        fileSplitsWithRows(s)
+      case s: InputRDDCodegen if s.children.isEmpty => s.inputRDD.getNumPartitions
+      case _: BroadcastExchangeLike | _: BroadcastQueryStageExec => 0
+      case r: AQEShuffleReadExec => r.partitionSpecs.size
+      case s: ShuffleQueryStageExec => s.shuffle.numPartitions
+      case e: ShuffleExchangeLike =>
+        if (!coalescing || e.shuffleOrigin == REPARTITION_BY_NUM) e.numPartitions else 1
+      case a: AdaptiveSparkPlanExec =>
+        go(a.executedPlan, a.context.session.sessionState.conf.coalesceShufflePartitionsEnabled)
+      case m: InMemoryTableScanExec => go(m.relation.cachedPlan, coalescing)
+      case u: UnionExec => u.children.map(go(_, coalescing)).sum
+      case leaf if leaf.children.isEmpty => leaf.outputPartitioning.numPartitions max 1
+      case other => other.children.map(go(_, coalescing)).max
+    }
+    go(plan, coalescing = false) max 1
+  }
+
+  /** A file scan's splits that hold rows (see [[plannedPartitions]]). */
+  private def fileSplitsWithRows(scan: FileSourceScanExec): Int = {
+    val splits = scan.inputRDD.partitions.toSeq.collect { case p: FilePartition => p.files.toSeq }
+    if (!scan.relation.fileFormat.isInstanceOf[ParquetFileFormat]) splits.size
+    else {
+      val spark = scan.relation.sparkSession
+      val midpoints = splits.flatten.groupBy(_.toPath).collect {
+        case (path, pieces) if pieces.size > 1 =>
+          path -> scala.jdk.CollectionConverters.ListHasAsScala(footer(spark, path).getBlocks)
+            .asScala.map(b => b.getStartingPos + b.getCompressedSize / 2).toSeq
+      }
+      splits.count(_.exists { f =>
+        midpoints.get(f.toPath).forall(_.exists(m => m >= f.start && m < f.start + f.length))
+      })
+    }
   }
 
   /** A fixture table: [[parquet]] plus [[normalizeNtz]]. */

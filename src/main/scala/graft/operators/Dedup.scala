@@ -106,7 +106,7 @@ object MinHashLSH {
     */
   def signatures(df: DataFrame, idCol: String, textCol: String,
                  shingleN: Int, numPerm: Int): DataFrame =
-    graft.core.Readers.spreadBySize(
+    graft.core.Readers.spread(
         df.select(col(idCol).as("id"), col(textCol).as("text")), col("id"))
       .withColumn("tk", tokens(col("text")))
       .select(col("id"),

@@ -213,10 +213,15 @@ object LogReg {
     // (StagingSpec gate-7 device test + text_lr oracle rows). The gram
     // expression stays INLINE in the generator (the recorded
     // InferFiltersFromGenerate lesson — an attribute explode re-computes
-    // the gram pipeline per synthesized filter).
+    // the gram pipeline per synthesized filter). The hash on doc_id comes
+    // first whether or not the input is spread: the aggregate below groups
+    // by doc_id, so this one shuffle serves it and moves a row per document
+    // where the aggregate's own would move a row per (document, bucket), and
+    // the partial and final aggregates stay one stage (one generated class
+    // fewer: CurateSpec's warm run fits the codegen cache only so).
     val src = graft.core.Readers.spread(
       docs.select(col(idCol).as("doc_id"), label.cast("long").as("y"),
-        col(textCol).as("__t")), col("doc_id"))
+        col(textCol).as("__t")).repartition(col("doc_id")), col("doc_id"))
     src.select(col("doc_id"), col("y"), explode(grams(col("__t"))).as("bg"))
       .select(col("doc_id"), col("y"), bucketOf(col("bg"), buckets).as("bkt"))
       .groupBy(col("doc_id"), col("y"), col("bkt"))

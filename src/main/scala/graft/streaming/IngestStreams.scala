@@ -143,12 +143,8 @@ object IngestStreams {
     // the whole gap between this twin (~5 s) and contaminatedIds (~0.7 s)
     // in the round-13 decomposition (BASELINE.md, "Heavy streaming twins
     // attributed"). A stateless repartition is legal ahead of the stateful
-    // dedup; it moves each arriving doc's text once — bounded by the delta,
-    // and a no-op cost-wise when the batch
-    // already arrives as many splits (the 100 TB case).
-    docs.filter(col(textCol).isNotNull)
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism,
-        col(idCol))
+    // dedup; it moves each arriving doc's text once — bounded by the delta.
+    graft.core.Readers.spread(docs.filter(col(textCol).isNotNull), col(idCol))
       .select(col(idCol).cast("long").as("doc_id"),
         explode(shinglesFromTokens(tokens(col(textCol)), shingleN)).as("shingle"))
       .join(broadcast(evalShingles), Seq("shingle"), "left_semi")

@@ -169,7 +169,7 @@ class FingerprintSpec extends SparkSpec {
     // and caches the projection, one collects its sorted runs
     val li = Readers.fixture(spark, sfDir, "lineitem")
     val lspec = Fixtures.specs("lineitem")
-    assert(Readers.spreadBySize(li, col(lspec.pks.head)) eq li)
+    assert(Readers.spread(li, col(lspec.pks.head)) eq li)
     val (out, jobs) = jobsOf(Fingerprints.runModes(TestModes.All, li, lspec, cfg))
     assert(!out.values.exists(_ == Fingerprints.Err), out)
     assert(jobs.size <= 2, jobs)
@@ -177,7 +177,7 @@ class FingerprintSpec extends SparkSpec {
     // spread's shuffle-map job, nothing else
     val big = spark.range(0, 200000, 1, 1).select(col("id"), concat(lit("p"), col("id")).as("s"))
     val bspec = TableSpec("t", Seq("id"))
-    assert(!(Readers.spreadBySize(big, col("id")) eq big))
+    assert(!(Readers.spread(big, col("id")) eq big))
     val (bigOut, bigJobs) = jobsOf(Fingerprints.runModes(TestModes.All, big, bspec, cfg))
     assert(!bigOut.values.exists(_ == Fingerprints.Err), bigOut)
     assert(bigJobs.size <= 3, bigJobs)

@@ -700,7 +700,7 @@ class PlanSpec extends SparkSpec {
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val big = spark.range(0, 200000, 1, 1).select(col("id"), concat(lit("p"), col("id")).as("s"))
-    assert(!(Readers.spreadBySize(big, col("id")) eq big))
+    assert(!(Readers.spread(big, col("id")) eq big))
     spark.listenerManager.register(listener)
     try {
       Fingerprints.runModes(TestModes.All, big, TableSpec("t", Seq("id")), VerifyConfig())

@@ -158,14 +158,55 @@ class ScaleSpec extends SparkSpec {
     val orders = Readers.fixture(spark, sfDir, "orders")
     assert(Readers.plannedPartitions(orders.queryExecution.sparkPlan) ==
       orders.rdd.getNumPartitions)
-    // a frame with an exchange: learning its partitioning must not run the
-    // shuffle stages (df.rdd would, under adaptive execution) or any job
-    val shuffled = spark.range(0, 50000, 1, 1).repartition(3)
+    // a frame with an exchange, over the spread floor: learning its
+    // partitioning must not run the shuffle stages (df.rdd would, under
+    // adaptive execution) or any job
+    val shuffled = spark.range(0, 500000, 1, 1).repartition(3)
       .groupBy((col("id") % 7).as("g")).count()
+    assert(Readers.inputBytes(shuffled) >= Readers.SpreadFloorBytes)
     assert(shuffled.queryExecution.sparkPlan.exists(_.isInstanceOf[ShuffleExchangeLike]))
-    val (spreadDf, jobs) = jobsOf(Readers.spreadBySize(shuffled, col("g"), bytesPerTask = 1))
+    val (spreadDf, jobs) = jobsOf(Readers.spread(shuffled, col("g")))
     assert(jobs.isEmpty, jobs)
     assert(spreadDf.collect().length == 7)
+  }
+
+  test("the spread rule counts the partitions that hold rows") {
+    import org.apache.spark.sql.DataFrame
+    val n = spark.sparkContext.defaultParallelism
+    val tmp = java.nio.file.Files.createTempDirectory("graft-spread").toString
+    // hex digests barely compress: about 72 bytes a row on disk
+    def rows(k: Long) = spark.range(0, k, 1, 1).select(col("id"), sha2(col("id").cast("string"), 256).as("h"))
+    def parts(df: DataFrame) = Readers.plannedPartitions(df.queryExecution.executedPlan)
+    def scanSplits(df: DataFrame) = df.queryExecution.executedPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.inputRDD.getNumPartitions
+    }.get
+    rows(20000).coalesce(1).write.parquet(s"$tmp/one_group")
+    rows(20000).coalesce(1).write.option("parquet.block.size", 128 * 1024).parquet(s"$tmp/many_groups")
+    rows(8500).coalesce(1).write.parquet(s"$tmp/single_split")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", 256 * 1024)
+    try {
+      // one row group cut into several byte ranges: only the split holding
+      // its midpoint delivers rows, so the scan is as serial as one split
+      val one = spark.read.parquet(s"$tmp/one_group")
+      assert(scanSplits(one) >= 2 && parts(one) == 1)
+      assert(!(Readers.spread(one, col("id")) eq one))
+      // the same rows with a row group per split already arrive in parallel
+      val many = spark.read.parquet(s"$tmp/many_groups")
+      assert(parts(many) * 2 >= n, parts(many))
+      assert(Readers.spread(many, col("id")) eq many)
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    // one split of about 600 KB: over the floor, so it fans out to every core
+    val single = spark.read.parquet(s"$tmp/single_split")
+    assert(Readers.inputBytes(single) >= Readers.SpreadFloorBytes)
+    assert(scanSplits(single) == 1)
+    assert(Readers.spread(single, col("id")).rdd.getNumPartitions == n)
+    // an explicit repartition(n) is fixed and counts; the exchange adaptive
+    // execution may coalesce counts as one partition
+    val fixed = rows(200000).repartition(n)
+    assert(parts(fixed) == n && (Readers.spread(fixed, col("id")) eq fixed))
+    assert(parts(rows(200000).repartition(col("id"))) == 1)
+    val grouped = rows(200000).groupBy(col("h")).count()
+    assert(parts(grouped) == 1 && !(Readers.spread(grouped, col("h")) eq grouped))
   }
 
   test("full mode auto-degrades to the Merkle digest above fullModeRowLimit") {

@@ -98,6 +98,25 @@ class StagingSpec extends SparkSpec {
     memo.release("staging-spec-key")
   }
 
+  test("a memo rebuilds when a file under its directory is rewritten") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-staging-fresh")
+    val file = dir.resolve("t.txt")
+    Files.writeString(file, "abc")
+    // the staged frame holds one row per byte of the file
+    val memo = new graft.core.Staging[org.apache.spark.sql.DataFrame]()((s, d) =>
+      s.range(Files.size(java.nio.file.Paths.get(d, "t.txt"))).toDF("x").localCheckpoint())
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val st = memo(spark, dir.toString)
+    assert(st.count() == 3 && (memo(spark, dir.toString) eq st), "unchanged files must hit")
+    Files.writeString(file, "abcdefg")
+    val rebuilt = memo(spark, dir.toString)
+    assert(!(rebuilt eq st) && rebuilt.count() == 7, "a rewritten file must rebuild")
+    assert(spark.sparkContext.getPersistentRDDs.size == before + 1,
+      "the rebuild must release the stale value's checkpoint blocks")
+    memo.release(dir.toString)
+  }
+
   test("session-independent Staging serves temp-dir memos without a session") {
     var builds = 0
     val memo = new graft.core.Staging[String](sessionScoped = false)({ (_, k) =>
